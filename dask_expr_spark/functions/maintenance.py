@@ -13,28 +13,33 @@ hive partitions the batch touches, and `upsert_bucketed` gives
 key-only tables the same pruning by hashing the upsert keys into
 hive bucket directories (pseudo-partitions).
 
-Durability contract: every in-place rewrite in this module goes
-through `atomic_overwrite` / `_swap_partition_dirs` — the new data is
-fully written to a sibling directory BEFORE anything existing moves,
-old data is renamed aside (never deleted) until the new data is
-promoted, and `recover_table` repairs the one transient state in which
-a crash can leave the table momentarily absent.  No step relies on
-non-replicated executor state (the old localCheckpoint-then-overwrite
-pattern lost the table if an executor died mid-overwrite).
+Durability contract: a TABLE commits under one of two protocols,
+chosen per table.  The RENAME protocol (`atomic_overwrite` /
+`_swap_partition_dirs`) writes the new data fully to a sibling
+directory BEFORE anything existing moves, renames old data aside
+(never deletes it) until the new data is promoted, and
+`recover_table` repairs the one transient state in which a crash can
+leave the table momentarily absent.  The POINTER protocol
+(`upsert_partitioned(commit="pointer")`) only ever creates data files
+and commits by one atomic small-object manifest claim.  The library's
+own SIDE INDEXES — the key bloom (move guard) and the zone map
+(sources/zonemap.py) — always commit as SNAPSHOTS (`snapshot_write`:
+immutable version dir + exclusive claim), whichever protocol their
+table uses.  No step relies on non-replicated executor state (the old
+localCheckpoint-then-overwrite pattern lost the table if an executor
+died mid-overwrite).
 
 Filesystem seam (fsops.py): every filesystem touch goes through a
 TableFS — PosixFS locally, the JVM Hadoop FileSystem for hdfs://
-s3a:// gs:// abfs:// paths — and the durability protocol is chosen by
-the fs's `atomic_rename` capability.  Rename-atomic stores (POSIX,
-HDFS) use the swap above; object stores use the POINTER protocol
-(`upsert_partitioned(commit="pointer")` / `snapshot_write`): data
-files are only ever created, never renamed, and the commit point is
-one atomic small-object manifest write.  The rename protocols REFUSE
-to run on a non-atomic-rename fs rather than silently weakening.
+s3a:// gs:// abfs:// paths.  Rename-atomic stores (POSIX, HDFS) may
+use either table protocol; object stores need the pointer protocol.
+The rename protocols REFUSE to run on a non-atomic-rename fs rather
+than silently weakening.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import math
 import os
@@ -963,7 +968,7 @@ def _refresh_zonemap_if_present(spark: SparkSession, path: str,
     Cost is bounded by the change: update_zonemap footer-scans only
     files the manifest hasn't seen and drops rows for files gone."""
     from ..sources.zonemap import ZONEMAP_DIR, update_zonemap
-    if fs.isdir(os.path.join(path, ZONEMAP_DIR)):
+    if _read_manifest(os.path.join(path, ZONEMAP_DIR), fs=fs) is not None:
         update_zonemap(spark, path, fs=fs)
 
 
@@ -977,14 +982,13 @@ def _zonemap_range_cols(spark: SparkSession, path: str,
     (guide §6: partitioning and sort order on write determine how
     well readers can skip)."""
     from ..sources.zonemap import ZONEMAP_DIR, _read_manifest_df
-    zp = os.path.join(path, ZONEMAP_DIR)
-    if not fs.isdir(zp):
-        return []
     try:
-        man = _read_manifest_df(spark, zp, fs)
+        man = _read_manifest_df(spark, os.path.join(path, ZONEMAP_DIR),
+                                fs)
     except Exception:
         return []
-    return sorted(c[:-4] for c in man.columns if c.endswith("_min"))
+    return [] if man is None else \
+        sorted(c[:-4] for c in man.columns if c.endswith("_min"))
 
 
 def _merge_write_layout(spark: SparkSession, path: str, df: DataFrame,
@@ -1121,6 +1125,50 @@ def _check_partition_moves(spark: SparkSession, full_table_fn,
             "a partition-moving update; delete+insert instead")
 
 
+@contextlib.contextmanager
+def _bloom_update(spark: SparkSession, bloom_path: str | None,
+                  updates: DataFrame, keys: list[str], table_fn):
+    """Run the guarded upsert's bloom update (bloom_append_snapshot of
+    the batch's keys) on its own thread for the duration of the
+    block, which receives the barrier to call BEFORE its commit point
+    (the pointer claim, the rename swap).  The barrier joins the
+    update and re-raises its failure, so the table never commits a
+    key the bloom may lack: a crash or lost claim between bloom
+    commit and table commit leaves only harmless extra bloom keys,
+    where the reverse order could leave a committed key out of the
+    bloom — a false negative the move guard would trust.  The update
+    overlaps the slice write (guide §2.6: independent jobs back-fill
+    each other's stragglers — measured 6.0 s sequential -> 3.4 s
+    overlapped on the x10 composite) without weakening that order.
+    Leaving the block always reaps the thread; a failed block keeps
+    its own error (a completed update is extra keys by contract).
+    With no bloom the barrier is a no-op."""
+    if bloom_path is None:
+        yield lambda: None
+        return
+    from pyspark import InheritableThread
+    errs: list[BaseException] = []
+
+    def run():
+        try:
+            bloom_append_snapshot(spark, bloom_path, updates, keys,
+                                  table_fn=table_fn)
+        except BaseException as exc:  # re-raised by the barrier
+            errs.append(exc)
+
+    th = InheritableThread(target=run)
+    th.start()
+
+    def barrier() -> None:
+        th.join()
+        if errs:
+            raise errs[0]
+    try:
+        yield barrier
+    finally:
+        th.join()
+
+
 def upsert_partitioned(spark: SparkSession, path: str, updates: DataFrame,
                        keys: list[str],
                        partition_col: str | list[str],
@@ -1146,16 +1194,16 @@ def upsert_partitioned(spark: SparkSession, path: str, updates: DataFrame,
     Updates that would MOVE a row between partitions are rejected (the
     old partition isn't read, so the old row couldn't be removed) —
     mutate partition keys by delete+insert instead.  `check_moves`
-    runs that guard; with `key_bloom_path` (a bloom table built by
-    build_key_bloom and maintained here after every merge) the guard
-    probes the batch keys map-only and falls back to the column-pruned
-    full-table key scan ONLY for bloom maybe-hits, so the per-batch
-    guard cost scales with the batch, not the table.  Under
-    commit="pointer" the bloom index itself commits through the
-    snapshot CAS protocol (bloom_append_snapshot — object-store-safe,
-    auto-bootstrapped on first guarded upsert), updated BEFORE the
-    table claim so every failure mode errs on harmless extra bloom
-    keys, never a false negative.  Disable
+    runs that guard; with `key_bloom_path` (a snapshot-committed key
+    bloom, auto-bootstrapped from table ∪ batch by the first guarded
+    upsert or built by build_key_bloom) the guard probes the batch
+    keys map-only and falls back to the column-pruned full-table key
+    scan ONLY for bloom maybe-hits, so the per-batch guard cost
+    scales with the batch, not the table.  Under BOTH commit
+    protocols the merge appends the batch's keys to the bloom
+    (bloom_append_snapshot) BEFORE the table commit point — the
+    pointer claim or the rename swap — so every failure mode errs on
+    harmless extra bloom keys, never a false negative.  Disable
     check_moves only where the invariant holds by construction
     (upsert_bucketed does: its partition value is a function of the
     key).  Returns the list of partition values rewritten.
@@ -1247,38 +1295,6 @@ def upsert_partitioned(spark: SparkSession, path: str, updates: DataFrame,
                                    updates, keys,
                                    "/".join(pcols), key_bloom_path)
         merged = upsert(target, updates, keys, order_col=order_col)
-        bloom_th = None
-        before_claim = None
-        if key_bloom_path is not None:
-            # bloom BEFORE the claim: a crash (or lost claim) between
-            # here and the flip leaves only harmless extra bloom keys;
-            # the reverse order could leave a committed key out of the
-            # bloom — a false negative the guard would trust.  The
-            # update runs CONCURRENTLY with the slice append (guide
-            # §2.6: independent jobs back-fill each other's stragglers
-            # — measured 6.0 s sequential -> 3.4 s overlapped on the
-            # x10 composite) and is JOINED before the claim, so the
-            # ordering contract is exactly as strong as the
-            # sequential form: bloom committed first, every failure
-            # mode errs on extra bloom keys.
-            from pyspark import InheritableThread
-            bloom_exc: list[BaseException] = []
-
-            def _bloom_update():
-                try:
-                    bloom_append_snapshot(spark, key_bloom_path,
-                                          updates, keys,
-                                          table_fn=full_fn)
-                except BaseException as exc:  # re-raised pre-claim
-                    bloom_exc.append(exc)
-
-            bloom_th = InheritableThread(target=_bloom_update)
-            bloom_th.start()
-
-            def before_claim():
-                bloom_th.join()
-                if bloom_exc:
-                    raise bloom_exc[0]
         # the merged plan lazily re-reads the files the flip will
         # supersede — but pointer commits never delete or rename, so
         # those files stay readable until vacuum; no checkpoint needed
@@ -1291,15 +1307,11 @@ def upsert_partitioned(spark: SparkSession, path: str, updates: DataFrame,
         # value's only rows — let the flip derive the true set.
         known = None if order_col is not None else \
             (parts if multi else [(p,) for p in parts])
-        try:
+        with _bloom_update(spark, key_bloom_path, updates, keys,
+                           full_fn) as bloom_committed:
             _append_and_flip(spark, path, merged, partition_col, man,
                              fs, rebase=rebase, parts=known,
-                             before_claim=before_claim)
-        finally:
-            # a failed append must not leak the bloom thread; its
-            # completed update is harmless extra keys by contract
-            if bloom_th is not None:
-                bloom_th.join()
+                             before_claim=bloom_committed)
         _refresh_zonemap_if_present(spark, path, fs)
         return parts
     recover_table(path, fs=fs)
@@ -1314,16 +1326,16 @@ def upsert_partitioned(spark: SparkSession, path: str, updates: DataFrame,
                                key_bloom_path)
     merged = upsert(target, updates, keys, order_col=order_col)
     new_root = path.rstrip("/") + "__new"
-    fs.delete(new_root)
-    (_merge_write_layout(spark, path, merged, [partition_col], fs)
-     .write.mode("overwrite")
-     .partitionBy(partition_col).parquet(new_root))
-    dirs = [d for d in fs.listdir(new_root)
-            if d.startswith(f"{partition_col}=")]
-    _swap_partition_dirs(path, new_root, dirs, fs=fs)
-    if key_bloom_path is not None:
-        bloom_append(spark, key_bloom_path, updates, keys,
-                     table_path=path)
+    with _bloom_update(spark, key_bloom_path, updates, keys,
+                       lambda: spark.read.parquet(path)) as bloom_committed:
+        fs.delete(new_root)
+        (_merge_write_layout(spark, path, merged, [partition_col], fs)
+         .write.mode("overwrite")
+         .partitionBy(partition_col).parquet(new_root))
+        dirs = [d for d in fs.listdir(new_root)
+                if d.startswith(f"{partition_col}=")]
+        bloom_committed()
+        _swap_partition_dirs(path, new_root, dirs, fs=fs)
     _refresh_zonemap_if_present(spark, path, fs)
     return parts
 
@@ -1405,106 +1417,72 @@ def upsert_bucketed(spark: SparkSession, path: str, updates: DataFrame,
 # ---------------------------------------------------------------------------
 
 
+# Live bloom segments before bloom_append_snapshot folds them into one
+# dense version (the LSM compaction threshold).
+BLOOM_SEG_MAX = 8
+
+
+def _bloom_write_dense(kdf: DataFrame, bloom_path: str, fpp: float,
+                       expected: int | None) -> None:
+    """Commit a dense bloom index over `kdf.__k` as the bloom's next
+    snapshot version and retire every older one (stale-hash indexes,
+    earlier segments): the new version alone is the index."""
+    from .sketches import bloom_index
+    snapshot_write(bloom_index(kdf, "__k", fpp=fpp, expected=expected),
+                   bloom_path)
+    snapshot_vacuum(bloom_path, keep=1)
+
+
 def build_key_bloom(spark: SparkSession, table_path: str, keys: list[str],
                     bloom_path: str, fpp: float = 0.01,
                     expected: int | None = None) -> None:
     """Build (or rebuild) the sharded bloom index over the table's key
-    tuples at `bloom_path` — one column-pruned scan.  Pass `expected`
-    with growth headroom so incremental bloom_append merges keep the
-    design fpp as the table grows; rebuild when the key count
-    approaches `expected`."""
-    from .sketches import bloom_index
-    kdf = (spark.read.parquet(table_path)
-           .select(_key_str(keys).alias("__k")))
-    idx = bloom_index(kdf, "__k", fpp=fpp, expected=expected)
-    atomic_overwrite(bloom_path,
-                     lambda p: idx.write.mode("overwrite").parquet(p))
-
-
-def bloom_append(spark: SparkSession, bloom_path: str, delta: DataFrame,
-                 keys: list[str], table_path: str | None = None,
-                 fpp: float = 0.01) -> None:
-    """OR the delta batch's keys into the table bloom (same sharding
-    parameters, read from the existing index), keeping the guard's
-    no-false-negative contract across incremental merges.  If the
-    bloom doesn't exist yet and `table_path` is given, bootstrap it
-    from the full table instead."""
-    from .sketches import BF_HASH, bloom_index, bloom_merge
-    if not _resolve_fs(bloom_path, None).isdir(bloom_path):
-        if table_path is not None:
-            build_key_bloom(spark, table_path, keys, bloom_path, fpp=fpp)
-        return
-    idx = spark.read.parquet(bloom_path)
-    if "hash" not in idx.columns or \
-            idx.select("hash").first()["hash"] != BF_HASH:
-        # the on-disk index was built under a previous hash family
-        # (pre-stamp md5 era): OR-ing an xxhash64 delta into its
-        # bitmaps would leave present keys probing FALSE — a silent
-        # no-false-negative violation.  Rebuild under the current hash
-        # instead (table keys ∪ batch keys, so the result is correct
-        # whichever side of the merge this append runs on).
-        if table_path is None:
-            raise ValueError(
-                f"bloom index at {bloom_path} predates hash stamp "
-                f"{BF_HASH!r}; rebuild it with build_key_bloom")
-        kdf = (spark.read.parquet(table_path)
-               .select(_key_str(keys).alias("__k"))
-               .unionByName(delta.select(_key_str(keys).alias("__k"))))
-        rebuilt = bloom_index(kdf, "__k", fpp=fpp)
-        atomic_overwrite(bloom_path,
-                         lambda p: rebuilt.write.mode("overwrite")
-                         .parquet(p))
-        return
-    row = idx.select("m_bits", "k", "shards").first()
-    delta_idx = bloom_index(
-        delta.select(_key_str(keys).alias("__k")), "__k",
-        params=(int(row["m_bits"]), int(row["k"]), int(row["shards"])))
-    merged = bloom_merge(idx, delta_idx)
-    atomic_overwrite(bloom_path,
-                     lambda p: merged.write.mode("overwrite").parquet(p))
+    tuples at `bloom_path` — one column-pruned scan, committed as one
+    dense snapshot version.  Pass `expected` with growth headroom so
+    incremental bloom_append_snapshot segments keep the design fpp as
+    the table grows; rebuild when the key count approaches
+    `expected`."""
+    _bloom_write_dense(spark.read.parquet(table_path)
+                       .select(_key_str(keys).alias("__k")),
+                       bloom_path, fpp, expected)
 
 
 def read_key_bloom(spark: SparkSession, bloom_path: str):
-    """The current key-bloom index frame, whichever commit protocol
-    the bloom lives under: a SNAPSHOT table (the pointer-table flow —
-    object-store-safe, no renames) or a plain parquet dir maintained
-    by atomic_overwrite (the rename flow).  None when absent — the
-    guard then falls back to the exact full-table key scan.
+    """The current key-bloom index frame, None when `bloom_path` holds
+    no snapshot-committed index (never built, or a directory without a
+    snapshot manifest) — the guard then falls back to the exact
+    full-table key scan, and the next guarded upsert bootstraps the
+    index from table ∪ batch.
 
-    Under the snapshot protocol the live versions are an LSM-style
-    SEGMENT LIST (bloom_append_snapshot): version 0 is the bootstrap
-    index (dense bitmaps), later versions are per-batch SPARSE delta
-    segments (set-bit position arrays).  The probe needs one dense
-    bitmap row per shard, so multi-segment reads fold through
-    bloom_fold_segments — OR is idempotent and monotone, so any mix
-    of segments (including a pre-segmentation layout's two
-    overlapping full versions) folds to exactly the index of the
-    union of their key sets."""
-    if _read_manifest(bloom_path) is not None:
-        hist = snapshot_history(bloom_path)
-        if len(hist) == 1:
-            idx = snapshot_read(spark, bloom_path)
-            return idx if "hash" in idx.columns else None
-        from .sketches import bloom_fold_segments
-        dirs = [_snap_dir(bloom_path, e) for e in hist]
-        seg = spark.read.option("mergeSchema", "true").parquet(*dirs)
-        # hash-stamp gate (ADVICE r10): an index persisted under a
-        # previous hash family (pre-stamp md5 era) probes FALSE for
-        # present keys under the current hashes — refuse it and let
-        # the guard fall back to the exact full-table key scan.  The
-        # schema check is free; a mixed old/new segment list cannot
-        # arise because the append paths rebuild rather than append
-        # onto a stale index.
-        if "hash" not in seg.columns:
-            return None
-        # checkpoint the fold: every probe consumes the index twice
-        # (params row + the broadcast build), and left lazy the
-        # segment fold would re-run per consumer
-        return bloom_fold_segments(seg).localCheckpoint(eager=False)
-    if _resolve_fs(bloom_path, None).isdir(bloom_path):
-        idx = spark.read.parquet(bloom_path)
+    The live versions are an LSM-style SEGMENT LIST
+    (bloom_append_snapshot): the oldest is a dense index (bitmaps),
+    later versions are per-batch SPARSE delta segments (set-bit
+    position arrays).  The probe needs one dense bitmap row per shard,
+    so multi-segment reads fold through bloom_fold_segments — OR is
+    idempotent and monotone, so any mix of segments folds to exactly
+    the index of the union of their key sets."""
+    hist = snapshot_history(bloom_path)
+    if not hist:
+        return None
+    if len(hist) == 1:
+        idx = snapshot_read(spark, bloom_path)
         return idx if "hash" in idx.columns else None
-    return None
+    from .sketches import bloom_fold_segments
+    dirs = [_snap_dir(bloom_path, e) for e in hist]
+    seg = spark.read.option("mergeSchema", "true").parquet(*dirs)
+    # hash-stamp gate (ADVICE r10): an index persisted under a
+    # previous hash family (pre-stamp md5 era) probes FALSE for
+    # present keys under the current hashes — refuse it and let the
+    # guard fall back to the exact full-table key scan.  The schema
+    # check is free; a mixed old/new segment list cannot arise
+    # because the append path rebuilds rather than appends onto a
+    # stale index.
+    if "hash" not in seg.columns:
+        return None
+    # checkpoint the fold: every probe consumes the index twice
+    # (params row + the broadcast build), and left lazy the segment
+    # fold would re-run per consumer
+    return bloom_fold_segments(seg).localCheckpoint(eager=False)
 
 
 def bloom_append_snapshot(spark: SparkSession, bloom_path: str,
@@ -1512,75 +1490,67 @@ def bloom_append_snapshot(spark: SparkSession, bloom_path: str,
                           table_fn=None,
                           fpp: float = 0.01,
                           expected: int | None = None) -> None:
-    """Snapshot-committed twin of bloom_append for POINTER-commit
-    tables: the bloom index itself commits through the snapshot CAS
-    protocol (new immutable `_v*` dir + exclusive `_manifest.{n}.json`
-    claim — never a rename), so `upsert_partitioned(commit='pointer',
-    key_bloom_path=...)` works on object stores too.
+    """OR the batch's keys into the table's key bloom at `bloom_path`.
+    The index commits through the snapshot CAS protocol (new immutable
+    `_v*` dir + exclusive `_manifest.{n}.json` claim — never a
+    rename) under either table protocol, so guarded upserts work on
+    object stores too.
 
-    Ordering contract (the caller's): the bloom is updated BEFORE the
-    table's generation claim.  Every failure mode then errs on EXTRA
-    bloom keys — a crash between bloom write and claim, or a claim
-    lost to a concurrent writer, leaves keys in the bloom that never
-    reached the table, which only costs spurious maybe-hits (an exact
-    scan); the reverse order could leave table keys missing from the
-    bloom, and a bloom false negative silently skips the move guard.
-    First call (no snapshot yet) bootstraps the bloom from the
-    `table_fn()` frame's keys plus the batch — a thunk, so the
-    steady state never even builds the full-table frame.
+    Ordering contract (the caller's — upsert_partitioned runs this
+    through _start_bloom_update): the bloom is updated BEFORE the
+    table's commit point.  Every failure mode then errs on EXTRA
+    bloom keys — a crash between bloom write and table commit, or a
+    claim lost to a concurrent writer, leaves keys in the bloom that
+    never reached the table, which only costs spurious maybe-hits (an
+    exact scan); the reverse order could leave table keys missing
+    from the bloom, and a bloom false negative silently skips the
+    move guard.  The first call (no snapshot manifest at
+    `bloom_path`) bootstraps a dense index from the `table_fn()`
+    frame's keys plus the batch — a thunk, so the steady state never
+    even builds the full-table frame.
 
     Later calls append the batch as an LSM-STYLE SPARSE SEGMENT: only
     the batch's set-bit positions commit as the next snapshot version
-    — an O(batch·k) write, where the pre-round-10 shape re-read and
-    re-wrote the whole merged dense index every commit (O(table
-    bits): ~2.4 s per guarded upsert at 1.5M keys, and gigabytes per
-    commit at the 100 TB key counts).  Readers (read_key_bloom) fold
-    the live segments per shard; once the segment list exceeds
-    $SPARK_GRAFT_BLOOM_SEG_MAX (default 8) the segments fold into one
-    dense version and older versions retire — classic LSM
-    compaction, amortizing the O(table) rewrite over SEG_MAX batches.
-    Every step keeps the ordering contract: a crash after the segment
-    write leaves extra bloom keys (harmless maybe-hits), never a
-    missing one."""
-    from .sketches import (BF_HASH, bloom_delta_segment,
-                           bloom_fold_segments, bloom_index)
-    man = _read_manifest(bloom_path)
-    if man is None:
-        kdf = delta.select(_key_str(keys).alias("__k"))
-        if table_fn is not None:
-            kdf = table_fn().select(_key_str(keys).alias("__k")) \
-                .unionByName(kdf)
-        snapshot_write(bloom_index(kdf, "__k", fpp=fpp,
-                                   expected=expected), bloom_path)
-        snapshot_vacuum(bloom_path, keep=2)
-        return
-    cur = snapshot_read(spark, bloom_path)
-    if "hash" not in cur.columns or \
-            cur.select("hash").first()["hash"] != BF_HASH:
-        # stale hash family (pre-stamp md5 era): a sparse xxhash64
-        # segment appended onto it would mix hash spaces and the fold
-        # would probe FALSE for keys only in the old bitmaps.
-        # Re-bootstrap under the current hash instead (table ∪ batch
-        # keys) and retire the stale versions.
-        if table_fn is None:
+    — an O(batch·k) write, where a dense append re-reads and
+    re-writes the whole index every commit (O(table bits): ~2.4 s per
+    guarded upsert at 1.5M keys, and gigabytes per commit at the
+    100 TB key counts).  Readers (read_key_bloom) fold the live
+    segments per shard; once the segment list exceeds BLOOM_SEG_MAX
+    the segments fold into one dense version and older versions
+    retire — classic LSM compaction, amortizing the O(table) rewrite
+    over BLOOM_SEG_MAX batches.  Every step keeps the ordering
+    contract: a crash after the segment write leaves extra bloom keys
+    (harmless maybe-hits), never a missing one."""
+    from .sketches import BF_HASH, bloom_delta_segment, bloom_fold_segments
+    cur = (snapshot_read(spark, bloom_path)
+           if _read_manifest(bloom_path) is not None else None)
+    stale = cur is not None and (
+        "hash" not in cur.columns
+        or cur.select("hash").first()["hash"] != BF_HASH)
+    if cur is None or stale:
+        # bootstrap, or re-bootstrap a stale hash family (pre-stamp
+        # md5 era): a sparse xxhash64 segment appended onto it would
+        # mix hash spaces and the fold would probe FALSE for keys only
+        # in the old bitmaps.  Rebuild from table ∪ batch keys under
+        # the current hash; the stale versions retire.
+        if stale and table_fn is None:
             raise ValueError(
                 f"bloom index at {bloom_path} predates hash stamp "
                 f"{BF_HASH!r} and no table_fn was given to rebuild "
                 f"from; rebuild it explicitly")
-        kdf = table_fn().select(_key_str(keys).alias("__k")) \
-            .unionByName(delta.select(_key_str(keys).alias("__k")))
-        snapshot_write(bloom_index(kdf, "__k", fpp=fpp,
-                                   expected=expected), bloom_path)
-        snapshot_vacuum(bloom_path, keep=1)
+        kdf = delta.select(_key_str(keys).alias("__k"))
+        if table_fn is not None:
+            kdf = table_fn().select(_key_str(keys).alias("__k")) \
+                .unionByName(kdf)
+        _bloom_write_dense(kdf, bloom_path, fpp, expected)
         return
     row = cur.select("m_bits", "k", "shards").first()
     seg = bloom_delta_segment(
         delta.select(_key_str(keys).alias("__k")), "__k",
         params=(int(row["m_bits"]), int(row["k"]), int(row["shards"])))
     snapshot_write(seg, bloom_path)
-    seg_max = int(os.environ.get("SPARK_GRAFT_BLOOM_SEG_MAX", "8"))
     hist = snapshot_history(bloom_path)
-    if len(hist) > seg_max:
+    if len(hist) > BLOOM_SEG_MAX:
         dirs = [_snap_dir(bloom_path, e) for e in hist]
         # the compaction read resolves the live dirs BEFORE the new
         # version commits, so the fold sees a stable segment set
@@ -1847,12 +1817,9 @@ def compact_parquet(spark: SparkSession, path: str,
     # (footer-only cost, proportional to the rewrite itself)
     from ..sources.zonemap import (ZONEMAP_DIR, _read_manifest_df,
                                    build_zonemap)
-    zcols = None
-    if fs.isdir(os.path.join(path, ZONEMAP_DIR)):
-        zman = _read_manifest_df(spark, os.path.join(path, ZONEMAP_DIR),
-                                 fs)
-        zcols = sorted({c[:-4] for c in zman.columns
-                        if c.endswith("_min")})
+    zman = _read_manifest_df(spark, os.path.join(path, ZONEMAP_DIR), fs)
+    zcols = None if zman is None else \
+        sorted({c[:-4] for c in zman.columns if c.endswith("_min")})
     # sizing walk skips metadata dirs (`_zonemap`, snapshot `_v*`) and
     # underscore files — but NOT hive dirs like `__bucket=0` — so
     # manifest parquet bytes never count into compaction targets

@@ -576,7 +576,7 @@ _LN2 = math.log(2.0)
 # probed with xxhash64 positions and return FALSE for present keys —
 # a silent no-false-negative violation that lets partition movers and
 # duplicates through.  Readers (maintenance.read_key_bloom /
-# bloom_append / bloom_append_snapshot) refuse or rebuild when the
+# bloom_append_snapshot) refuse or rebuild when the
 # stamp is missing or mismatched instead of probing with the wrong
 # hash (ADVICE r10).
 BF_HASH = "xxh64"
@@ -627,8 +627,8 @@ def bloom_index(df: DataFrame, key_col: str, fpp: float = 0.01,
     no oracle reproduces bloom BITS — they pin answers, which the
     no-false-negative contract keeps hash-independent).
     `params` = (m_bits, k, shards) copied from an EXISTING index row
-    builds a merge-compatible delta index directly (maintenance.
-    bloom_append), skipping the sizing math and its count().
+    builds a merge-compatible delta index directly, skipping the
+    sizing math and its count().
     Returns columns (shard, words, m_bits, k, shards)."""
     if params is not None:
         m_shard, k, num_shards = (int(x) for x in params)

@@ -31,26 +31,8 @@ def token_count(text: Column, sep: str = " ") -> Column:
     return F.size(F.split(text, sep)).cast("long")
 
 
-def bpe_ish_token_count(text: Column) -> Column:
-    """BPE-approximate token count: words + punctuation clusters +
-    ceil(chars/4) blend — the standard cheap estimator when no real
-    tokenizer is available."""
-    words = F.size(F.split(text, r"\s+"))
-    return F.ceil(words * 1.3).cast("long")
-
-
 def char_count(text: Column) -> Column:
     return F.length(text).cast("long")
-
-
-def avg_token_len(text: Column, sep: str = " ") -> Column:
-    toks = F.split(text, sep)
-    total = F.aggregate(
-        F.transform(toks, lambda t: F.length(t).cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return total / F.size(toks)
 
 
 def stopword_ratio(text: Column, stopwords: Sequence[str], sep: str = " ") -> Column:
@@ -58,21 +40,6 @@ def stopword_ratio(text: Column, stopwords: Sequence[str], sep: str = " ") -> Co
     sw = F.array(*[F.lit(s) for s in stopwords])
     n_stop = F.size(F.filter(toks, lambda t: F.array_contains(sw, F.lower(t))))
     return n_stop.cast("double") / F.size(toks)
-
-
-def quality_score(text: Column, stopwords: Sequence[str] | None = None) -> Column:
-    """Composite [0,1] quality heuristic: length band + stopword
-    presence + alpha ratio. Deterministic, JVM-only."""
-    stopwords = stopwords or STOPWORDS["en"]
-    n_tok = token_count(text)
-    len_ok = F.when((n_tok >= 20) & (n_tok <= 10000), 1.0).otherwise(0.3)
-    sw = stopword_ratio(text, stopwords)
-    sw_ok = F.when((sw >= 0.01) & (sw <= 0.6), 1.0).otherwise(0.5)
-    alpha_ratio = (
-        F.length(F.regexp_replace(text, r"[^A-Za-z ]", ""))
-        / F.greatest(F.length(text), F.lit(1))
-    )
-    return (len_ok * 0.4 + sw_ok * 0.3 + alpha_ratio * 0.3).cast("double")
 
 
 def lang_scores(text: Column, langs: Sequence[str] = ("en", "es", "fr", "de")) -> dict[str, Column]:
@@ -138,12 +105,6 @@ def doc_fingerprint(text: Column, k: int = 3) -> Column:
     (md5 so oracles in other engines can reproduce it). Near-identical
     prefixes/suffixes don't move it — a cheap near-dup key."""
     return F.array_min(F.transform(shingles(text, k), F.md5))
-
-
-def rolling_hash_fingerprint(text: Column, k: int = 3) -> Column:
-    """xxhash64-based min-shingle fingerprint (faster than md5; engine
-    internal — not reproducible outside Spark)."""
-    return F.array_min(F.transform(shingles(text, k), lambda s: F.xxhash64(s)))
 
 
 def repetition_ratio(text: Column, k: int = 2, sep: str = " ") -> Column:

@@ -15,8 +15,8 @@ re-expressed as a Spark job instead of driver-side fsspec walks).
   FOOTERS (pyarrow, ~KB of IO per file regardless of file size) and
   emits per-file n_rows / min / max / null_count for the indexed
   columns.  The manifest persists under `<path>/_zonemap` (underscore
-  prefix: invisible to Spark's own directory scans) via the crash-safe
-  swap from functions.maintenance.
+  prefix: invisible to Spark's own directory scans) as a snapshot
+  table (functions.maintenance.snapshot_write) on every filesystem.
 - `zone_prune(spark, path, predicates)` — resolves the predicate
   conjunction against the manifest and returns the surviving file
   list.  Safety contract: a file is skipped ONLY if the manifest
@@ -140,33 +140,24 @@ def _footer_scan(spark: SparkSession, files: list[str],
 
 
 def _write_manifest(manifest: DataFrame, zp: str, fs) -> None:
-    """Persist the zone-map manifest with the protocol the filesystem
-    supports: the rename-aside swap on POSIX/HDFS, or — on object
-    stores, the regime zone maps actually target — a snapshot-style
-    versioned commit (immutable version dir + one atomic pointer
-    write), vacuumed down to the live version."""
-    from ..functions.maintenance import (atomic_overwrite,
-                                         snapshot_vacuum,
-                                         snapshot_write)
-    if fs.atomic_rename:
-        # no checkpoint needed: the manifest plan reads data-file
-        # FOOTERS, never the manifest itself, and atomic_overwrite
-        # keeps the old manifest intact until the new one is written
-        atomic_overwrite(
-            zp, lambda p: manifest.write.mode("overwrite").parquet(p),
-            fs=fs)
-    else:
-        snapshot_write(manifest, zp, fs=fs)
-        # keep one prior version so an in-flight reader of the old
-        # manifest never loses its files mid-read
-        snapshot_vacuum(zp, keep=2, fs=fs)
+    """Commit the zone-map manifest as the next snapshot version
+    (immutable version dir + exclusive claim — no rename, so one
+    protocol serves POSIX, HDFS and object stores alike), vacuumed
+    down to the live version plus one prior, so an in-flight reader
+    of the old manifest never loses its files mid-read."""
+    from ..functions.maintenance import snapshot_vacuum, snapshot_write
+    snapshot_write(manifest, zp, fs=fs)
+    snapshot_vacuum(zp, keep=2, fs=fs)
 
 
-def _read_manifest_df(spark: SparkSession, zp: str, fs) -> DataFrame:
+def _read_manifest_df(spark: SparkSession, zp: str,
+                      fs) -> DataFrame | None:
+    """The live manifest; None when `zp` holds no snapshot-committed
+    one (never built, or dropped with a whole-table rewrite)."""
     from ..functions.maintenance import _read_manifest, snapshot_read
-    if _read_manifest(zp, fs=fs) is not None:
-        return snapshot_read(spark, zp)
-    return spark.read.parquet(zp)
+    if _read_manifest(zp, fs=fs) is None:
+        return None
+    return snapshot_read(spark, zp)
 
 
 def build_zonemap(spark: SparkSession, path: str, cols: list[str],
@@ -284,10 +275,10 @@ def zone_prune(spark: SparkSession, path: str, predicates: list[tuple],
     from ..fsops import get_fs
     fs = fs or get_fs(path)
     zp = zonemap_path or os.path.join(path, ZONEMAP_DIR)
-    if not fs.isdir(zp):
+    man = _read_manifest_df(spark, zp, fs)
+    if man is None:
         current = _data_files(path, fs=fs)
         return current, len(current)
-    man = _read_manifest_df(spark, zp, fs)
     keep = F.lit(True)
     for p in predicates:
         c = p[0]
@@ -351,6 +342,9 @@ def update_zonemap(spark: SparkSession, path: str,
     fs = fs or get_fs(path)
     zp = zonemap_path or os.path.join(path, ZONEMAP_DIR)
     man = _read_manifest_df(spark, zp, fs)
+    if man is None:
+        raise ValueError(f"update_zonemap: no zone map at {zp} — "
+                         "build_zonemap first")
     cols = sorted({c[:-4] for c in man.columns if c.endswith("_min")})
     # set algebra runs as joins against the current file list (a
     # manifest at the module's 10^5-10^6-file target would blow up the
@@ -373,10 +367,7 @@ def update_zonemap(spark: SparkSession, path: str,
         merged = kept.unionByName(delta.select(*man.columns))
     else:
         merged = kept
-    # the kept side lazily reads the OLD manifest, which the swap is
-    # about to replace: realize it first (manifest-sized, tiny).
-    # (The snapshot-commit path wouldn't need this — old versions stay
-    # readable — but one tiny checkpoint keeps both protocols uniform.)
-    merged = merged.localCheckpoint(eager=True)
+    # the kept side lazily reads the current manifest version, which
+    # stays readable: the snapshot commit writes a new version dir
     _write_manifest(merged, zp, fs)
     return (len(new_files), gone)

@@ -710,10 +710,12 @@ def upsert_sink(stream: DataFrame, table_path: str, keys: list,
     `check_moves` (default True, partitioned path only) rejects CDC
     updates that change the partition column — without it the old row
     survives in the unread partition and the key silently duplicates.
-    Pass `key_bloom_path` to keep the guard map-only per batch
-    (maintenance.build_key_bloom), or check_moves=False only when the
-    pipeline is partition-stable by construction.  The bucketed path
-    needs no guard: a key's bucket is a pure function of the key.
+    Pass `key_bloom_path` to keep the guard map-only per batch (a
+    snapshot-committed key bloom under either commit protocol,
+    bootstrapped by the first guarded merge), or check_moves=False
+    only when the pipeline is partition-stable by construction.  The
+    bucketed path needs no guard: a key's bucket is a pure function
+    of the key.
 
     `zonemap_cols` keeps a file-level zone map (sources/zonemap.py)
     over the snapshot table fresh after every merge: the first batch
@@ -748,7 +750,8 @@ def upsert_sink(stream: DataFrame, table_path: str, keys: list,
     import os
     import tempfile
 
-    from ..functions.maintenance import (atomic_overwrite, is_bucketed,
+    from ..functions.maintenance import (_read_manifest,
+                                         atomic_overwrite, is_bucketed,
                                          manifest_bootstrap,
                                          read_commit,
                                          upsert, upsert_bucketed,
@@ -827,7 +830,7 @@ def upsert_sink(stream: DataFrame, table_path: str, keys: list,
             from ..sources.zonemap import (ZONEMAP_DIR, build_zonemap,
                                            update_zonemap)
             zp = os.path.join(table_path, ZONEMAP_DIR)
-            if _fs.isdir(zp):
+            if _read_manifest(zp, fs=_fs) is not None:
                 update_zonemap(spark, table_path)
             else:
                 build_zonemap(spark, table_path, list(zonemap_cols))

@@ -8,6 +8,7 @@ import pytest
 from dask_expr_spark.queries import collect_queries
 
 from .oracle import compare, duck_con
+from .test_plans import NESTED_LOOP_OK
 
 _REG = collect_queries()
 _WITH_ORACLE = sorted(name for name, (_f, sql) in _REG.items() if sql)
@@ -19,18 +20,6 @@ def con(sf_dir):
     c = duck_con(sf_dir)
     yield c
     c.close()
-
-
-# Queries where a nested-loop/cartesian shape is the DESIGN, not a
-# bug (1-row scalar broadcasts, documented exact-quadratic baselines)
-# — see the per-name rationale in tests/test_plans.py history.
-NESTED_LOOP_OK = {"q22_idle_customers", "q11_important_stock",
-                  "ann_cosine_topk_blocked", "heavy_hitter_tokens",
-                  "stream_heavy_hitters", "dedup_embedding_cosine",
-                  "monotonic_orders", "text_lm_perplexity",
-                  "text_bm25_search", "size_len_scalars",
-                  "profile_orders_stats", "kmv_intersect_slices",
-                  "cms_join_cardinality"}
 
 
 def assert_scale_safe_plan(name: str, sdf) -> None:

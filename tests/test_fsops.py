@@ -1672,6 +1672,63 @@ def test_pointer_bloom_updates_before_claim(spark, tmp_path,
     assert bool(hit["__maybe"])
 
 
+def test_rename_bloom_updates_before_swap(spark, tmp_path, monkeypatch):
+    """The rename protocol keeps the same ordering contract as the
+    pointer claim: the bloom commits BEFORE the partition swap, so a
+    failing bloom update aborts the upsert with the table unchanged —
+    every key the table holds still probes TRUE, and once the batch is
+    re-run its key's later partition move is refused.  (Bloom after
+    swap left the committed key out of the bloom and let the move
+    through as a silent duplicate.)"""
+    from pyspark.sql import functions as F
+
+    from dask_expr_spark.functions.sketches import bloom_probe
+
+    path = str(tmp_path / "t")
+    bloom = str(tmp_path / "bloom")
+    _mk(spark, path)
+    M.build_key_bloom(spark, path, ["k"], bloom)
+
+    # the bloom's storage fails at its commit step (snapshot claim or
+    # rename); every other path is untouched
+    real_excl = fsops.PosixFS.write_text_exclusive
+    real_rename = fsops.PosixFS.rename
+
+    def excl(self, p, text):
+        if p.startswith(bloom):
+            raise OSError("injected bloom commit failure")
+        return real_excl(self, p, text)
+
+    def rename(self, src, dst):
+        if src.startswith(bloom):
+            raise OSError("injected bloom commit failure")
+        return real_rename(self, src, dst)
+
+    monkeypatch.setattr(fsops.PosixFS, "write_text_exclusive", excl)
+    monkeypatch.setattr(fsops.PosixFS, "rename", rename)
+    batch = spark.createDataFrame(pd.DataFrame({
+        "k": [4000], "v": [1.0], "part": ["a"]}))
+    with pytest.raises(OSError, match="injected bloom"):
+        M.upsert_partitioned(spark, path, batch, ["k"], "part",
+                             commit="rename", key_bloom_path=bloom)
+    monkeypatch.undo()
+    held = spark.read.parquet(path).select(
+        F.col("k").cast("string").alias("__mg_key"))
+    probed = bloom_probe(held, M.read_key_bloom(spark, bloom),
+                         "__mg_key", result_col="__maybe")
+    assert probed.where(~F.col("__maybe")).count() == 0
+    # the writer re-runs its failed batch; the key is then guarded
+    M.upsert_partitioned(spark, path, batch, ["k"], "part",
+                         commit="rename", key_bloom_path=bloom)
+    mover = spark.createDataFrame(pd.DataFrame({
+        "k": [4000], "v": [2.0], "part": ["c"]}))
+    with pytest.raises(ValueError, match="partition-moving"):
+        M.upsert_partitioned(spark, path, mover, ["k"], "part",
+                             commit="rename", key_bloom_path=bloom)
+    assert [r["part"] for r in spark.read.parquet(path)
+            .where("k = 4000").collect()] == ["a"]
+
+
 def test_manifested_cdc_prunes_to_changed_dirs(spark, tmp_path):
     """The generation diff is change-bounded: only partition dirs
     whose manifest entries differ between the two generations are
@@ -1744,7 +1801,7 @@ def test_pointer_bloom_lsm_segments_and_compaction(spark, tmp_path,
     add one snapshot version each and the delta version carries
     sparse `pos` rows, no dense bitmap; (2) every key inserted across
     the segmented window still probes TRUE (no false negative crosses
-    a segment boundary); (3) crossing SPARK_GRAFT_BLOOM_SEG_MAX folds
+    a segment boundary); (3) crossing BLOOM_SEG_MAX folds
     the list into one dense version and retires the segments; (4) the
     fold equals the direct dense build bit-for-bit."""
     from pyspark.sql import functions as F
@@ -1752,7 +1809,7 @@ def test_pointer_bloom_lsm_segments_and_compaction(spark, tmp_path,
     from dask_expr_spark.functions.sketches import (
         bloom_index, bloom_probe)
 
-    monkeypatch.setenv("SPARK_GRAFT_BLOOM_SEG_MAX", "3")
+    monkeypatch.setattr(M, "BLOOM_SEG_MAX", 3)
     path = str(tmp_path / "t")
     bloom = str(tmp_path / "bloom")
     _mk(spark, path)
@@ -1804,38 +1861,41 @@ def test_pointer_bloom_lsm_segments_and_compaction(spark, tmp_path,
 
 def test_bloom_hash_stamp_gates_stale_indexes(spark, tmp_path):
     """An index persisted under a previous hash family (pre-stamp md5
-    era — its rows carry no `hash` column) must never be probed with
-    the current hashes: read_key_bloom refuses it (guard falls back to
-    the exact scan), bloom_append rebuilds the plain-dir index under
-    the current hash, and bloom_append_snapshot re-bootstraps the
-    snapshot index instead of appending a mixed-hash segment."""
+    era — its rows carry no `hash` column) or outside the snapshot
+    protocol must never be probed with the current hashes:
+    read_key_bloom refuses it (guard falls back to the exact scan), the
+    first guarded upsert re-bootstraps a manifest-less bloom directory
+    from table ∪ batch, and bloom_append_snapshot re-bootstraps a
+    stale snapshot index instead of appending a mixed-hash segment."""
     from pyspark.sql import functions as F
 
-    from dask_expr_spark.functions.sketches import BF_HASH, bloom_index
+    from dask_expr_spark.functions.sketches import (BF_HASH, bloom_index,
+                                                    bloom_probe)
 
-    # --- plain rename-protocol dir -----------------------------------
+    # --- plain directory, no snapshot manifest ------------------------
     plain = str(tmp_path / "bloom_plain")
     keys = spark.createDataFrame(pd.DataFrame({"__k": ["1", "2", "3"]}))
     bloom_index(keys, "__k").drop("hash") \
         .write.mode("overwrite").parquet(plain)        # stale format
-    assert M.read_key_bloom(spark, plain) is None      # refused
-    delta = spark.createDataFrame(pd.DataFrame({"k": [9]}))
-    with pytest.raises(ValueError, match="hash stamp"):
-        M.bloom_append(spark, plain, delta, ["k"])     # no table: refuse
+    assert M.read_key_bloom(spark, plain) is None      # never probed
     tbl = str(tmp_path / "tbl")
-    spark.createDataFrame(pd.DataFrame({"k": [1, 2, 3]})) \
-        .write.mode("overwrite").parquet(tbl)
-    M.bloom_append(spark, plain, delta, ["k"], table_path=tbl)
+    spark.createDataFrame(pd.DataFrame({"k": [1, 2, 3],
+                                        "part": ["a", "b", "a"]})) \
+        .write.mode("overwrite").partitionBy("part").parquet(tbl)
+    M.upsert_partitioned(
+        spark, tbl, spark.createDataFrame(pd.DataFrame({
+            "k": [9], "part": ["b"]})), ["k"], "part",
+        commit="rename", key_bloom_path=plain)
     idx = M.read_key_bloom(spark, plain)
-    assert idx is not None                             # rebuilt
+    assert idx is not None                             # re-bootstrapped
     assert idx.select("hash").first()["hash"] == BF_HASH
-    from dask_expr_spark.functions.sketches import bloom_probe
     probed = bloom_probe(
         spark.createDataFrame(pd.DataFrame({"k": [1, 2, 3, 9]}))
         .withColumn("__s", F.col("k").cast("string")), idx, "__s")
     assert all(r["maybe_in_index"] for r in probed.collect())
 
     # --- snapshot CAS protocol ----------------------------------------
+    delta = spark.createDataFrame(pd.DataFrame({"k": [9]}))
     snap = str(tmp_path / "bloom_snap")
     M.snapshot_write(bloom_index(keys, "__k").drop("hash"), snap)
     assert M.read_key_bloom(spark, snap) is None       # refused

@@ -205,34 +205,33 @@ def test_q21_lone_late_supplier_single_shuffle(spark, sf_dir):
 #                             ≤ ceil(1/phi)·P candidate counts
 #   stream_heavy_hitters    — same 1-row total broadcast in its offline
 #                             exact-recount stage
-_NESTED_LOOP_OK = {"q22_idle_customers", "q11_important_stock",
-                   "ann_cosine_topk_blocked", "heavy_hitter_tokens",
-                   "stream_heavy_hitters",
-                   "dedup_embedding_cosine",
-                   "monotonic_orders", "text_lm_perplexity", "text_bm25_search",
-                   "size_len_scalars",
-                   # r6: 1-row exact-median scalar attached to the
-                   # 3-row profile for the q_ok tolerance flag — the
-                   # same deliberate broadcast-scalar class as
-                   # heavy_hitter_tokens' total attach
-                   "profile_orders_stats",
-                   # r6b: 1-row exact-intersection count attached to
-                   # the 1-row KMV sketch estimate for the inter_ok
-                   # flag (the join key is the literal sketch
-                   # parameter k, which constant-folds) — same class
-                   "kmv_intersect_slices",
-                   # r6b: 1-row exact-join-count attached to the 1-row
-                   # CMS inner-product estimate for over_ok — same
-                   # deliberate scalar-attach class
-                   "cms_join_cardinality"}
+NESTED_LOOP_OK = {"q22_idle_customers", "q11_important_stock",
+                  "ann_cosine_topk_blocked", "heavy_hitter_tokens",
+                  "stream_heavy_hitters",
+                  "dedup_embedding_cosine",
+                  "monotonic_orders", "text_lm_perplexity", "text_bm25_search",
+                  "size_len_scalars",
+                  # r6: 1-row exact-median scalar attached to the
+                  # 3-row profile for the q_ok tolerance flag — the
+                  # same deliberate broadcast-scalar class as
+                  # heavy_hitter_tokens' total attach
+                  "profile_orders_stats",
+                  # r6b: 1-row exact-intersection count attached to
+                  # the 1-row KMV sketch estimate for the inter_ok
+                  # flag (the join key is the literal sketch
+                  # parameter k, which constant-folds) — same class
+                  "kmv_intersect_slices",
+                  # r6b: 1-row exact-join-count attached to the 1-row
+                  # CMS inner-product estimate for over_ok — same
+                  # deliberate scalar-attach class
+                  "cms_join_cardinality"}
 
 
 # The whole-registry cartesian/row-UDF guardrail now rides the oracle
 # sweep (tests/test_correctness.py assert_scale_safe_plan): a separate
 # registry pass re-executed every composite query's writes just to
 # read the final plan — 165 s for a check the sweep performs for free
-# on the same DataFrames.  _NESTED_LOOP_OK's rationale lives above;
-# the enforced copy is test_correctness.NESTED_LOOP_OK.
+# on the same DataFrames; it imports NESTED_LOOP_OK from here.
 
 
 def test_plan_construction_is_lazy(spark, sf_dir):
