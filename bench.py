@@ -10,19 +10,12 @@ import json
 import os
 import sys
 import time
+from collections.abc import Callable
+from typing import NamedTuple
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-# Headline set: representative of scan, join, agg, window, text, and
-# vector workloads. Each must exist in the registry.
-HEADLINE = [
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_revenue_by_nation",
-    "q6_forecast_revenue",
-    "join_broadcast_part",
-    "join_semi",
-]
+
 def _scale_probe_ordered(spark, sf_dir):
     """ungrouped ordered ops over the full lineitem order stream —
     exercises the range-bucketed two-pass machinery
@@ -148,7 +141,7 @@ def _ann_inline_probe(name):
     (VERDICT r8 item 4): every round they were the only >1.3x bench
     flags and every round the flag adjudicated as k-means training
     jitter (isolated spread 19-32 s on identical code, SCALE.md).  The
-    registry keeps them for correctness; the HEADLINE line carries the
+    registry keeps them for correctness; the printed line carries the
     persisted steady-state twins (ann_*_persisted); the inline numbers
     keep being measured here so a real regression still lands in
     BENCH_DETAIL.json — without phantom-flagging every bench_diff."""
@@ -302,42 +295,162 @@ def _ann_ivfpq_topk_persisted(spark, sf_dir):
         .select("query_id", "neighbor_id")
 
 
-STEADY_ENTRIES = {
-    "ann_pq_topk_persisted": _ann_pq_topk_persisted,
-    "ann_ivfpq_topk_persisted": _ann_ivfpq_topk_persisted,
-}
+class Entry(NamedTuple):
+    """One row of the bench plan (see ENTRIES)."""
+    fn: Callable | None = None   # None: the registry query of this name
+    corpus: str = "sf"           # "sf" | "x10" | "x100"
+    action: str = "collect"      # "collect" | "noop"
+    probe: bool = False          # BENCH_DETAIL.json only, not the line
 
-LOCAL_PROBES = {
-    "scale_probe_ordered_cumsum_shift": _scale_probe_ordered,
-    "scale_probe_ordered_ckpt": _scale_probe_ordered_ckpt,
-    "scale_probe_expanding_median": _scale_probe_expanding_holistic,
-    "scale_probe_expanding_approx": _scale_probe_expanding_approx,
-    "dedup_minhash_pipeline": _minhash_pipeline,
-    "ann_lsh_pipeline": _ann_lsh_pipeline,
-    "ann_lsh_auto_pipeline": _ann_lsh_auto_pipeline,
-    # round 5 additions (no prior comparable — bench_diff skips them)
-    "semantic_dedup_ivf": _semantic_dedup_ivf,
-    "components_star_pipeline": _connected_components_star,
-    # round 6 (no prior comparable)
-    "profile_lineitem": _profile_lineitem,
-    # round 9: inline-train ANN twins demoted from the headline line
-    # (VERDICT r8 item 4) — measured in BENCH_DETAIL only
-    "ann_pq_topk_inline": _ann_inline_probe("ann_pq_topk"),
-    "ann_pq_rerank_inline": _ann_inline_probe("ann_pq_rerank"),
-    "ann_ivfpq_topk_inline": _ann_inline_probe("ann_ivfpq_topk"),
-}
 
 # ---------------------------------------------------------------------------
-# x10 corpus for the fast entries (round 6, VERDICT r5 item 3): the
-# measured cross-boot host noise is ±50% on SUB-SECOND entries
-# (SCALE.md), which made half the headline numbers uninformative
-# round-over-round.  Entries whose r5 median ran < 2 s are therefore
-# benched on a x10 key-offset replica universe instead (every fact
-# table replicated with CONSISTENT foreign-key offsets so joins keep
-# their selectivity; dims nation/region shared), under `name + "_x10"`
-# so bench_diff never compares them against the old sub-second
-# numbers.  Multi-second entries keep the sf0.1 corpus and stay
-# comparable with BENCH_r05.
+# The bench plan: every timed entry, in run order.
+#
+# corpus: "sf" runs on $SPARK_GRAFT_SF_DIR itself (median of REPEATS).
+#   "x10"/"x100" run on a key-offset replica universe (_ensure_x10 /
+#   _ensure_x100, median of 3) and print as name + "_x10"/"_x100", so
+#   bench_diff never compares them with sf0.1 numbers.  Measured
+#   cross-boot host noise is ±50% on sub-second entries (SCALE.md), so
+#   entries whose sf0.1 median ran under 2 s ride x10, and the ones
+#   x10 still left sub-second (0.47-0.95 s) ride x100.  Kept on sf
+#   although fast: semantic_dedup_kept (its 4-cell geometry goes
+#   quadratic within cells at x10; semantic_dedup_ivf covers the
+#   family) and ann_lsh_pipeline (frozen planes, comparable with
+#   BENCH_r02; ann_lsh_auto_pipeline is the x10 LSH entry).
+# action: "collect" for small aggregates.  "noop" writes to the noop
+#   sink, which computes every column of every row and keeps none: the
+#   two entries with large results (r11: scd2_history_orders 1.79M rows
+#   at x100, cdc_between_snapshots 345k at x10) spent more time building
+#   Row objects on the driver than computing (OPTIMIZATION_r11.md).
+# probe: timed and kept in BENCH_DETAIL.json, never on the printed line.
+# ---------------------------------------------------------------------------
+_SF, _X10, _X100 = Entry(), Entry(corpus="x10"), Entry(corpus="x100")
+
+ENTRIES: dict[str, Entry] = {
+    "q1_pricing_summary": _X10,
+    "q3_shipping_priority": _X10,
+    "q5_revenue_by_nation": _X10,
+    "q6_forecast_revenue": _X100,
+    "join_broadcast_part": _X10,
+    "join_semi": _X10,
+    "window_user_sessions": _X10,
+    "asof_purchase_click": _X10,
+    "resample_hourly": _X100,
+    "dedup_exact_docs": _X100,
+    "dedup_ngram_jaccard": _SF,
+    "text_stats_by_lang": _X100,
+    "text_token_frequencies": _X100,
+    "ann_cosine_topk": _X10,
+    "text_lm_perplexity": _X10,
+    "text_bm25_search": _X10,
+    "semantic_dedup_kept": _SF,
+    "dedup_substring_spans": _SF,
+    "q2_min_cost_supplier": _X10,
+    "q11_important_stock": _X100,
+    "q20_potential_promotion": _X10,
+    "heavy_hitter_tokens": _X10,
+    "hll_rollup_users": _X10,
+    "hist_rollup_price_quantiles": _X10,
+    "sample_weighted_orders": _X100,
+    "dedup_incremental_minhash": _SF,
+    "dedup_exact_incremental": _X100,
+    "sample_n_per_group_orders": _X100,
+    "drift_price_psi": _X100,
+    "cms_custkey_counts": _X100,
+    "kmv_distinct_slices": _X100,
+    "dedup_bloom_incremental": _X100,
+    "upsert_orders_scd1": _X100,
+    "ann_mmr_rerank": _X10,
+    "cms_join_cardinality": _X100,
+    "diff_after_upsert": _X100,
+    "profile_from_rollups_orders": _X100,
+    "upsert_bucketed_roundtrip": _X10,
+    "snapshot_time_travel": _X10,
+    "scd2_history_orders": Entry(corpus="x100", action="noop"),
+    "cdc_between_snapshots": Entry(corpus="x10", action="noop"),
+    "zonemap_skipping_dates": _X10,
+    "split_temporal_events": _X100,
+    "zonemap_zorder_trailing": _X10,
+    "cdc_apply_roundtrip": _X10,
+    "upsert_pointer_roundtrip": _X10,
+    "zonemap_snapshot_version": _X10,
+    "delete_where_orders": _X10,
+    "manifest_sharded_upsert": _X10,
+    "zonemap_after_delete": _X10,
+    "multicol_pointer_upsert": _X10,
+    "disjoint_rebase_upsert": _X10,
+    "pointer_time_travel": _X10,
+    "cdc_between_generations": _X10,
+    "upsert_pointer_bloom": _X10,
+    "ann_pq_topk_persisted": Entry(_ann_pq_topk_persisted, "x10"),
+    "ann_ivfpq_topk_persisted": Entry(_ann_ivfpq_topk_persisted, "x10"),
+    "scale_probe_ordered_cumsum_shift":
+        Entry(_scale_probe_ordered, probe=True),
+    "scale_probe_ordered_ckpt": Entry(_scale_probe_ordered_ckpt, probe=True),
+    "scale_probe_expanding_median":
+        Entry(_scale_probe_expanding_holistic, "x10", probe=True),
+    "scale_probe_expanding_approx":
+        Entry(_scale_probe_expanding_approx, probe=True),
+    "dedup_minhash_pipeline": Entry(_minhash_pipeline, probe=True),
+    "ann_lsh_pipeline": Entry(_ann_lsh_pipeline, probe=True),
+    "ann_lsh_auto_pipeline": Entry(_ann_lsh_auto_pipeline, "x10", probe=True),
+    "semantic_dedup_ivf": Entry(_semantic_dedup_ivf, probe=True),
+    "components_star_pipeline":
+        Entry(_connected_components_star, probe=True),
+    "profile_lineitem": Entry(_profile_lineitem, probe=True),
+    "ann_pq_topk_inline":
+        Entry(_ann_inline_probe("ann_pq_topk"), "x10", probe=True),
+    "ann_pq_rerank_inline":
+        Entry(_ann_inline_probe("ann_pq_rerank"), "x10", probe=True),
+    "ann_ivfpq_topk_inline":
+        Entry(_ann_inline_probe("ann_ivfpq_topk"), "x10", probe=True),
+}
+
+# median of REPEATS on the sf corpus; the multi-second replica entries
+# take a median of 3 (scheduling jitter is under 10% there).  5 since
+# round 4: median-of-3 still let one slow run shift the middle on a
+# shared host (phantom 1.3-1.5x movers on sub-second queries)
+REPEATS = 5
+# a fresh JVM every RECYCLE_EVERY entries, so no entry runs in an aged
+# one (in-session JVM aging inflated later entries 1.3-3x, r5-r9)
+RECYCLE_EVERY = 10
+
+
+def resolve(name: str, registry) -> tuple[Callable, Entry]:
+    """(fn, entry) for a bench entry name without its corpus suffix.
+    A registry query outside ENTRIES resolves to the plain sf corpus
+    with a collect."""
+    e = ENTRIES.get(name, _SF)
+    if e.fn is None and name not in registry:
+        raise KeyError(f"unknown bench entry {name}")
+    return e.fn or registry[name][0], e
+
+
+def run_action(df, action: str) -> None:
+    """An entry's timed action on its built DataFrame: collect, so
+    nothing short-circuits, or the noop sink (see ENTRIES)."""
+    if action == "noop":
+        df.write.format("noop").mode("overwrite").save()
+    else:
+        df.collect()
+
+
+def plan(registry) -> list[tuple[str, Callable, Entry, int]]:
+    """(printed name, fn, entry, reps) for every entry, in run order."""
+    out = []
+    for name in ENTRIES:
+        fn, e = resolve(name, registry)
+        printed = name if e.corpus == "sf" else f"{name}_{e.corpus}"
+        out.append((printed, fn, e, REPEATS if e.corpus == "sf" else 3))
+    return out
+
+
+# ---------------------------------------------------------------------------
+# Replica universes for the x10/x100 corpora: every fact table is
+# replicated with CONSISTENT foreign-key offsets so joins keep their
+# selectivity; the dims nation/region are shared.  x100 replicates
+# everything but embeddings (the vector entries are bound by their
+# cosine workload, not the corpus scan).
 # ---------------------------------------------------------------------------
 X10_OFF = 1_000_000_000
 X10_KEYS = {
@@ -352,62 +465,6 @@ X10_KEYS = {
 }
 X10_COPY = ["nation", "region"]
 
-# r5 medians < 2 s (registry entries + probes), benched at x10.
-# Deliberately NOT moved despite being sub-2s: semantic_dedup_kept
-# (its 4-cell geometry exists for the recursive-CTE oracle and goes
-# quadratic within cells at x10 — semantic_dedup_ivf covers the
-# family) and ann_lsh_pipeline (frozen planes kept for BENCH_r02
-# comparability — the x10 LSH entry is ann_lsh_auto_pipeline below,
-# running the production auto-sized default).
-X10_ENTRIES = {
-    "q1_pricing_summary", "q3_shipping_priority", "q5_revenue_by_nation",
-    "join_broadcast_part", "join_semi",
-    "window_user_sessions", "asof_purchase_click",
-    "ann_cosine_topk", "text_lm_perplexity", "text_bm25_search",
-    "q2_min_cost_supplier",
-    "q20_potential_promotion", "heavy_hitter_tokens", "hll_rollup_users",
-    "hist_rollup_price_quantiles",
-    "scale_probe_expanding_median",
-    "ann_lsh_auto_pipeline",
-    "ann_mmr_rerank",
-    # round 7: write-heavy maintenance (3 snapshot copies / clustered
-    # rewrite per run) and the vector entries (embeddings replicate
-    # only in the x10 universe)
-    "upsert_bucketed_roundtrip", "snapshot_time_travel",
-    "cdc_between_snapshots", "zonemap_skipping_dates",
-    "ann_pq_topk_inline", "ann_pq_rerank_inline",
-    "ann_ivfpq_topk_inline",
-    "zonemap_zorder_trailing", "cdc_apply_roundtrip",
-    # round 8: steady-state ANN (same corpus as their inline twins)
-    # and the write-heavy pointer-commit / snapshot-composition entries
-    "ann_pq_topk_persisted", "ann_ivfpq_topk_persisted",
-    "upsert_pointer_roundtrip", "zonemap_snapshot_version",
-    "delete_where_orders",
-    # round 9: write-heavy commit-layer composites
-    "manifest_sharded_upsert", "zonemap_after_delete",
-    "multicol_pointer_upsert",
-    # round 10: rebase / time-travel / pointer-bloom composites (each
-    # a full table write + bootstrap + multi-generation mutation)
-    "disjoint_rebase_upsert", "pointer_time_travel",
-    "cdc_between_generations", "upsert_pointer_bloom",
-}
-
-# entries so sublinear that x10 left them sub-second (r6 measurement:
-# 0.47-0.95 s) ride a x100 replica instead — everything but the
-# embeddings table replicates (the vector entries are x10-bound by the
-# cosine workload itself, not the corpus scan)
-X100_ENTRIES = {
-    "q6_forecast_revenue", "q11_important_stock", "resample_hourly",
-    "dedup_exact_docs", "text_stats_by_lang", "text_token_frequencies",
-    "sample_weighted_orders", "drift_price_psi",
-    "dedup_exact_incremental", "sample_n_per_group_orders",
-    "cms_custkey_counts", "kmv_distinct_slices",
-    "dedup_bloom_incremental", "upsert_orders_scd1",
-    "cms_join_cardinality", "diff_after_upsert",
-    # round 7: orders-only pipelines, strongly sublinear -> x100
-    "scd2_history_orders", "profile_from_rollups_orders",
-    "split_temporal_events",
-}
 X100_TABLES = [t for t in X10_KEYS if t != "embeddings"]
 
 
@@ -478,87 +535,6 @@ def _ensure_x100(spark, sf_dir: str) -> str:
         spark, sf_dir,
         os.environ.get("SPARK_GRAFT_BENCH_X100_DIR", "/tmp/dx_bench_x100"),
         100, X100_TABLES)
-
-# Entries whose declared result is NOT a small aggregate — measured
-# r11: scd2_history_orders returns 1.79M history rows at x100,
-# cdc_between_snapshots 345k change records at x10; every other
-# benched entry returns ≤ 15k rows.  For these two, the default
-# .collect() action spends more time building pyspark Row objects on
-# the driver than the engine spends computing the query (scd2: 17.5 s
-# collect vs 4.6 s for the full computation including its global sort;
-# measurement bug — the rep loop's "results are small aggregates"
-# assumption is false here).  They are timed with the guide §1.4 noop
-# sink instead, which still computes EVERY column of EVERY row and
-# discards the result.  Disclosed in OPTIMIZATION_r11.md with
-# old-action numbers kept for comparability.
-NOOP_SINK_ENTRIES = {"scd2_history_orders", "cdc_between_snapshots"}
-
-
-# extended set appended when present in the registry
-OPTIONAL = [
-    "window_user_sessions",
-    "asof_purchase_click",
-    "resample_hourly",
-    "dedup_exact_docs",
-    "dedup_ngram_jaccard",
-    "text_stats_by_lang",
-    "text_token_frequencies",
-    "ann_cosine_topk",
-    # round 3 additions (no r02 comparable — bench_diff skips them)
-    "text_lm_perplexity",
-    "text_bm25_search",
-    # round 4 additions
-    "semantic_dedup_kept",
-    "dedup_substring_spans",
-    # round 5 additions — the last three TPC-H shapes (no prior
-    # comparable; bench_diff skips them)
-    "q2_min_cost_supplier",
-    "q11_important_stock",
-    "q20_potential_promotion",
-    # round 5 sketch/layout family (no prior comparable)
-    "heavy_hitter_tokens",
-    "hll_rollup_users",
-    "hist_rollup_price_quantiles",
-    "sample_weighted_orders",
-    "dedup_incremental_minhash",
-    # round 6 additions (no prior comparable)
-    "dedup_exact_incremental",
-    "sample_n_per_group_orders",
-    "drift_price_psi",
-    # round 6b sketch/maintenance family (no prior comparable)
-    "cms_custkey_counts",
-    "kmv_distinct_slices",
-    "dedup_bloom_incremental",
-    "upsert_orders_scd1",
-    "ann_mmr_rerank",
-    "cms_join_cardinality",
-    "diff_after_upsert",
-    # round 7 additions (no prior comparable)
-    "profile_from_rollups_orders",
-    "upsert_bucketed_roundtrip",
-    "snapshot_time_travel",
-    "scd2_history_orders",
-    "cdc_between_snapshots",
-    "zonemap_skipping_dates",
-    # ann_pq_topk / ann_pq_rerank / ann_ivfpq_topk (inline-train) moved
-    # to LOCAL_PROBES in round 9 — see _ann_inline_probe
-    "split_temporal_events",
-    "zonemap_zorder_trailing",
-    "cdc_apply_roundtrip",
-    # round 8 additions (no prior comparable)
-    "upsert_pointer_roundtrip",
-    "zonemap_snapshot_version",
-    "delete_where_orders",
-    # round 9 additions (no prior comparable)
-    "manifest_sharded_upsert",
-    "zonemap_after_delete",
-    "multicol_pointer_upsert",
-    # round 10 additions (no prior comparable)
-    "disjoint_rebase_upsert",
-    "pointer_time_travel",
-    "cdc_between_generations",
-    "upsert_pointer_bloom",
-]
 
 
 def _warm_session(spark, registry) -> None:
@@ -631,13 +607,6 @@ def _warm_session(spark, registry) -> None:
          .count())
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-
-
-def _entry_base(n: str) -> str:
-    for suf in ("_x100", "_x10"):
-        if n.endswith(suf):
-            return n[: -len(suf)]
-    return n
 
 
 def _resolved_local_dir() -> str:
@@ -744,23 +713,15 @@ def main() -> None:
 
     spark = get_spark("dask_expr_spark_bench")
     registry = collect_queries()
-    names = [n for n in HEADLINE if n in registry]
-    names += [n for n in OPTIONAL if n in registry]
+    runnables = plan(registry)
 
     # no warmup here: this first session only does UNTIMED setup work
     # (replica builds, ANN artifacts) and is recycled before entry 1 —
     # the timed cohorts each get a fresh JVM + _warm_session below
-
-    # MEDIAN of 3 (round 4, VERDICT r3 item 8): min-of-N undersells
-    # steady-state cost and single shots produced phantom ±30% movers
-    # on this shared box; the median is the stable middle ground.
-    # 5 since round 4: median-of-3 still let one slow run shift the
-    # middle on this shared box (phantom 1.3-1.5x movers on sub-second
-    # queries between same-code runs); median-of-5 costs ~60s total
-    repeats = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "5"))
     x10_dir = _ensure_x10(spark, sf_dir)
     x100_dir = _ensure_x100(spark, sf_dir)
     _ensure_ann_artifacts(spark, x10_dir)     # untimed index build
+    dirs = {"sf": sf_dir, "x10": x10_dir, "x100": x100_dir}
     # Cohort-1 symmetry (VERDICT r10 item 1): the untimed setup above
     # (replica materialization, ANN index training, warmup) ages the
     # initial JVM in exactly the way the per-cohort recycler exists to
@@ -775,32 +736,12 @@ def main() -> None:
     _warm_session(spark, registry)
     timings: dict[str, float] = {}
     detail_entries: dict[str, dict] = {}
-    runnables = [(n, registry[n][0]) for n in names]
-    runnables += list(STEADY_ENTRIES.items())
-    runnables += list(LOCAL_PROBES.items())
-    # fast entries ride the x10/x100 corpora (median-of-3: at
-    # multi-second durations scheduling jitter is <10% without extra
-    # repeats)
-    runnables = [
-        (n + "_x100", fn, x100_dir, min(repeats, 3)) if n in X100_ENTRIES
-        else (n + "_x10", fn, x10_dir, min(repeats, 3)) if n in X10_ENTRIES
-        else (n, fn, sf_dir, repeats)
-        for n, fn in runnables
-    ]
-    # recycle the JVM every N entries so no entry runs in an aged one
-    # (the r5-r9 phantom-flag class); 0 disables
-    recycle_every = int(os.environ.get("SPARK_GRAFT_BENCH_RECYCLE", "10"))
     since_recycle = 0
     cohort, pos = 1, 0
     fj_start_n, fj_cpu_prev = _foreign_java_cpu()
-    # experiment-only truncation (default off — the driver never sets
-    # it): run just the first N entries so cohort-level effects can be
-    # A/B'd without paying for the full 57-entry run each arm
-    limit = int(os.environ.get("SPARK_GRAFT_BENCH_LIMIT", "0"))
-    if limit > 0:
-        runnables = runnables[:limit]
-    for name, fn, qdir, reps in runnables:
-        if recycle_every > 0 and since_recycle >= recycle_every:
+    for name, fn, e, reps in runnables:
+        qdir = dirs[e.corpus]
+        if since_recycle >= RECYCLE_EVERY:
             spark = _recycle_session(spark)
             _warm_session(spark, registry)
             since_recycle = 0
@@ -826,20 +767,10 @@ def main() -> None:
         # entry still pays for its own I/O; it just stops paying for
         # its predecessor's.
         os.sync()
-        # collect (results are small aggregates) so nothing
-        # short-circuits; the two large-result entries take the noop
-        # sink instead (NOOP_SINK_ENTRIES above — full computation,
-        # no driver-side Row materialization artifact)
-        if _entry_base(name) in NOOP_SINK_ENTRIES:
-            def act(df):
-                df.write.format("noop").mode("overwrite").save()
-        else:
-            def act(df):
-                df.collect()
         raw = []   # execution order, kept for BENCH_DETAIL adjudication
         for _ in range(reps):
             t0 = time.perf_counter()
-            act(fn(spark, qdir))
+            run_action(fn(spark, qdir), e.action)
             raw.append(time.perf_counter() - t0)
         # adaptive top-up: entries that are genuinely fast even on the
         # x100 corpus (pruned columnar scans of 60M rows run ~0.5 s on
@@ -849,7 +780,7 @@ def main() -> None:
         if sorted(raw)[len(raw) // 2] < 2.0:
             for _ in range(max(0, 7 - reps)):
                 t0 = time.perf_counter()
-                act(fn(spark, qdir))
+                run_action(fn(spark, qdir), e.action)
                 raw.append(time.perf_counter() - t0)
         # unstable-spread top-up (round 10): host/JVM noise bursts are
         # ONE-SIDED (they only ever slow a rep down), and with 3 reps a
@@ -867,7 +798,7 @@ def main() -> None:
         if med_pre >= 2.0 and (runs[-1] - runs[0]) > 0.4 * med_pre:
             for _ in range(2):
                 t0 = time.perf_counter()
-                act(fn(spark, qdir))
+                run_action(fn(spark, qdir), e.action)
                 raw.append(time.perf_counter() - t0)
             topped = 2
         runs = sorted(raw)
@@ -882,6 +813,8 @@ def main() -> None:
             "pos_in_cohort": pos,
             "foreign_jvm_cpu_s": round(fj_cpu - fj_cpu_prev, 2),
             "foreign_jvms": fj_n,
+            "corpus": e.corpus,
+            "action": e.action,
         }
         fj_cpu_prev = fj_cpu
 
@@ -896,15 +829,10 @@ def main() -> None:
     # carries ONLY registry entries at 2-decimal precision with compact
     # separators, and the full-precision record (registry + local
     # probes + corpus dirs) goes to BENCH_DETAIL.json next to bench.py.
-    def _base(n: str) -> str:
-        for suf in ("_x100", "_x10"):
-            if n.endswith(suf):
-                return n[: -len(suf)]
-        return n
-
-    line_q = {n: round(v, 2) for n, v in timings.items()
-              if _base(n) not in LOCAL_PROBES}
-    probes = {n: v for n, v in timings.items() if _base(n) in LOCAL_PROBES}
+    probe_names = {n for n, _fn, e, _reps in runnables if e.probe}
+    queries = {n: v for n, v in timings.items() if n not in probe_names}
+    probes = {n: v for n, v in timings.items() if n in probe_names}
+    line_q = {n: round(v, 2) for n, v in queries.items()}
     detail_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json")
     with open(detail_path, "w") as fh:
@@ -913,11 +841,10 @@ def main() -> None:
                 "metric": "headline_query_wall_time_total",
                 "value": round(sum(timings.values()), 4),
                 "unit": "sec",
-                "queries": {n: v for n, v in timings.items()
-                            if _base(n) not in LOCAL_PROBES},
+                "queries": queries,
                 "probes": probes,
                 "sf": sf_val,
-                "repeats": repeats,
+                "repeats": REPEATS,
                 "x10_dir": x10_dir,
                 "x100_dir": x100_dir,
                 # which shuffle scratch this run actually used (VERDICT

@@ -40,8 +40,8 @@ DEMOTED = {
     "ann_ivfpq_topk_x10": "ann_ivfpq_topk_inline_x10",
 }
 
-# r6: sub-2s entries moved to the x10/x100 corpora (bench.py
-# X10_ENTRIES / X100_ENTRIES) so the measured ±50% sub-second host
+# r6: sub-2s entries moved to the x10/x100 corpora (the corpus column
+# of bench.py ENTRIES) so the measured ±50% sub-second host
 # noise can't swamp them; numbers across different corpora are NOT
 # comparable, so moved entries are reported, never ratioed.
 MOVED_SUFFIXES = ("_x10", "_x100")

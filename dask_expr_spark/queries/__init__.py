@@ -1,7 +1,8 @@
 """Query registry: every implemented operator from SURVEY.md §2 gets a
 named query (facade-API Spark plan) plus, where SQL-expressible, a
 DuckDB oracle SQL string. The driver runs both sides at sf0.01 and
-hash-compares (see repo-root __spark_entry__.py).
+hash-compares (see repo-root __spark_entry__.py, which also orders the
+registry for the correctness run's check window).
 
 Float outputs are rounded identically on both sides so the
 order-insensitive value-hash is stable across engines.
@@ -13,214 +14,6 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-# Queries that already have a green (or no_oracle) row in CORRECTNESS_r01.json.
-# The driver validates only the first 50 registry entries per round, so
-# already-validated queries rotate to the BACK of the registry, giving every
-# not-yet-checked query a row in the next CORRECTNESS file.  Once all queries
-# have been validated at least once, the rotation keeps cycling so regressions
-# still surface within two rounds.
-VALIDATED = frozenset({
-    # round 1 (CORRECTNESS_r01.json)
-    "q1_pricing_summary", "q3_shipping_priority", "q5_revenue_by_nation",
-    "q6_forecast_revenue", "join_broadcast_part", "join_semi", "join_anti",
-    "join_outer", "q4_priority_late", "q10_returned_revenue",
-    "q14_type_revenue_ratio", "q15_top_suppliers", "q18_large_orders",
-    "q19_or_predicates", "q7_nation_volume", "q8_market_share",
-    "q9_profit_by_nation", "q12_late_priority_counts",
-    "q13_customer_distribution", "q16_supplier_variety",
-    "q17_small_quantity_revenue", "q21_waiting_supplier", "q22_idle_customers",
-    "filter_isin_between", "case_when_buckets", "string_ops", "date_ops",
-    "value_counts_flag", "distinct_pairs", "nunique_by_group", "topk_orders",
-    "fillna_mask", "union_concat", "pivot_status", "minmax_by_group",
-    "quantiles_exact", "stats_var_std", "corr_cov", "transform_pct_of_group",
-    "expanding_running_share", "categorize_segments", "drop_dup_keep_first",
-    "combine_first_balances", "string_ops2", "date_ops2",
-    "approx_distinct_parts", "approx_quantiles_price", "sample_orders",
-    "loc_orderkey_slice", "series_map_status",
-    # round 2 (CORRECTNESS_r02.json — the 43 hash-green rows; the 7
-    # no_oracle rows stay OUT so they lead the round-3 window with
-    # their new containment / state-check oracles)
-    "melt_measures", "rollup_revenue", "cube_priority_status",
-    "except_inactive_customers", "intersect_active_parts",
-    "dummies_by_nation", "window_shift_diff", "window_cumsum_user",
-    "window_rolling_mean", "window_rank_latest", "resample_hourly",
-    "window_user_sessions", "asof_purchase_click", "window_ffill_gaps",
-    "rolling_time_window", "sliding_window_counts", "funnel_stages",
-    "weekly_retention", "json_props_stats", "text_stats_by_lang",
-    "text_quality_buckets", "text_token_frequencies",
-    "text_fingerprint_dups", "text_lang_id", "text_chunking",
-    "pipeline_clean_corpus", "dedup_exact_docs", "dedup_ngram_jaccard",
-    "ann_cosine_topk", "ann_centroids", "multimodal_decode",
-    "dedup_embedding_cosine", "stream_stateful_totals",
-    "stats_skew_kurt", "rolling_moments_daily", "pivot_table_priority",
-    "idxmax_per_priority", "daily_growth", "rolling_median_rev",
-    "rank_priority_totals", "split_train_val", "stratified_sample_docs",
-    "global_shuffle_head",
-    # round 3 (CORRECTNESS_r03.json — all 50 rows hash-green).  With these
-    # added, every registry query has at least one green driver row OR was
-    # r1/r2-green; the round-4 window therefore leads with the OLDEST
-    # validations (r1-era q3..q22, string/date ops, and the approx_* /
-    # sample_orders queries whose tolerance oracles have never had a green
-    # DRIVER row — only local sweeps).  See rotation note below.
-    "ordered_cumsum_global", "ordered_shift_global", "ordered_ffill_limit",
-    "rolling_center_user", "shift_freq_days", "cat_codes_segments",
-    "axis1_row_stats", "asof_orders_daily_noby", "text_repetition_buckets",
-    "text_pii_scan", "text_contamination_buckets",
-    "range_join_purchase_windows", "stream_near_dedup",
-    "groupby_expr_buckets", "rolling_weighted_triang",
-    "expanding_median_global", "cat_codes_explicit", "pack_sequences_2048",
-    "dedup_connected_groups", "mode_order_priority", "describe_part_size",
-    "groupby_head_orders", "get_group_building", "groupby_rolling_qty",
-    "groupby_expanding_value", "concat_axis1_customer", "query_eval_orders",
-    "ufunc_sqrt_price", "dot_qty_discount", "combine_max_balance",
-    "monotonic_orders", "csv_roundtrip_orders", "json_roundtrip_events",
-    "reduction_mean_price", "map_partitions_md5", "map_overlap_smooth",
-    "text_lm_perplexity", "text_bm25_search", "mix_sources_target",
-    "sources_literal_union", "dropna_thresh_events", "dedup_minhash_lsh",
-    "dedup_simhash", "ann_lsh_bucketed", "ann_ivf_topk", "ann_int8_topk",
-    "stream_tumbling_counts", "stream_session_counts",
-    "stream_interval_join",
-    # round 4 (CORRECTNESS_r04.json — all 50 rows hash-green: the 24 new
-    # round-4 queries + the leading 26 of the r1-era reconfirmation
-    # cohort, including the three approx/sample tolerance queries that
-    # had never had a green driver row).
-    "parquet_roundtrip_lineitem", "orc_roundtrip_supplier",
-    "sources_from_array", "sources_divisions_repartition",
-    "timeseries_stats", "repartition_invariance_orders",
-    "shuffle_on_invariance", "persist_cached_agg",
-    "enforce_divisions_orders", "records_roundtrip_nation",
-    "jdbc_roundtrip_supplier", "size_len_scalars", "toframe_price_total",
-    "bucketed_join_orders", "groupby_observed_false",
-    "period_monthly_revenue", "salted_agg_suppkey", "salted_merge_orders",
-    "dedup_resolve_corpus", "merge_recursive_regions",
-    "dedup_substring_spans", "dedup_connected_groups_star",
-    "dedup_chunk_minhash", "semantic_dedup_kept", "multimodal_audio_meta",
-    "stream_semantic_dedup",
-    # round 5 (CORRECTNESS_r05.json — all 50 rows hash-green: the 17 new
-    # round-5 queries below + the leading 33 of the r1/r2-era
-    # reconfirmation cohort, through window_shift_diff).
-    "heavy_hitter_tokens", "hist_rollup_price_quantiles",
-    "sample_weighted_orders", "dedup_incremental_minhash",
-    "sample_n_orders", "parquet_zorder_roundtrip", "hll_rollup_users",
-    "partitions_concat_invariance", "timedelta_components_events",
-    "parquet_clustered_roundtrip", "q2_min_cost_supplier",
-    "q11_important_stock", "q20_potential_promotion",
-    "ann_cosine_topk_blocked", "ann_lsh_auto_planes",
-    "stream_heavy_hitters", "stream_windowed_distinct",
-    # round 6 (CORRECTNESS_r06.json — all 50 rows hash-green: the 24 new
-    # round-6 queries below + the leading 26 of the r2-era
-    # reconfirmation cohort, through stream_stateful_totals).
-    "cms_custkey_counts", "kmv_distinct_slices", "kmv_intersect_slices",
-    "dedup_bloom_incremental", "upsert_orders_scd1",
-    "upsert_partitioned_roundtrip", "ann_mmr_rerank",
-    "cms_join_cardinality", "diff_after_upsert",
-    "compact_roundtrip_lineitem", "current_divisions_slice_concat",
-    "dedup_exact_incremental", "sample_n_per_group_orders",
-    "split_leakage_safe", "sample_weighted_per_group_orders",
-    "ann_pca_whiten", "profile_orders_stats",
-    "validate_orders_constraints", "drift_price_psi",
-    "stream_hll_rollup", "stream_hist_rollup", "stream_exact_dedup",
-    "stream_drift_psi", "stream_upsert_snapshot",
-    # round 7 (CORRECTNESS_r07.json — all 50 rows hash-green: the 18 new
-    # round-7 queries below + the leading 32 of the reconfirmation
-    # cohort, through groupby_head_orders).
-    "profile_from_rollups_orders", "upsert_bucketed_roundtrip",
-    "snapshot_time_travel", "kmv_intersect_grouped",
-    "compact_partitioned_files", "stream_upsert_bucketed",
-    "scd2_history_orders", "scd2_asof_snapshot", "cdc_between_snapshots",
-    "zonemap_skipping_dates", "ann_pq_topk", "ann_pq_rerank",
-    "stream_scd2_history", "ann_ivfpq_topk", "split_temporal_events",
-    "zonemap_zorder_trailing", "upsert_evolve_schema",
-    "cdc_apply_roundtrip",
-    # round 8 (CORRECTNESS_r08.json — all 50 rows hash-green: the 7 new
-    # round-8 queries below + the leading 43 of the reconfirmation
-    # cohort, through period_monthly_revenue).
-    "upsert_pointer_roundtrip", "multimodal_resize_stub",
-    "zonemap_snapshot_version", "compact_manifested_files",
-    "stream_upsert_pointer", "delete_where_orders", "scd2_delete_orders",
-    "get_group_building", "groupby_rolling_qty",
-    "groupby_expanding_value", "concat_axis1_customer",
-    "query_eval_orders", "ufunc_sqrt_price", "dot_qty_discount",
-    "combine_max_balance", "monotonic_orders", "csv_roundtrip_orders",
-    "json_roundtrip_events", "reduction_mean_price", "map_partitions_md5",
-    "map_overlap_smooth", "text_lm_perplexity", "text_bm25_search",
-    "mix_sources_target", "sources_literal_union", "dropna_thresh_events",
-    "dedup_minhash_lsh", "dedup_simhash", "ann_lsh_bucketed",
-    "ann_ivf_topk", "ann_int8_topk", "stream_tumbling_counts",
-    "stream_session_counts", "stream_interval_join",
-    "parquet_roundtrip_lineitem", "orc_roundtrip_supplier",
-    "sources_from_array", "sources_divisions_repartition",
-    "timeseries_stats", "repartition_invariance_orders",
-    "shuffle_on_invariance", "persist_cached_agg",
-    "enforce_divisions_orders", "records_roundtrip_nation",
-    "jdbc_roundtrip_supplier", "size_len_scalars", "toframe_price_total",
-    "bucketed_join_orders", "groupby_observed_false",
-    "period_monthly_revenue",
-    # round 9 (CORRECTNESS_r09.json — all 50 rows hash-green: the 4 new
-    # round-9 queries below + the leading 46 of the reconfirmation
-    # cohort, through drift_price_psi).
-    "manifest_sharded_upsert", "concurrent_upsert_cas",
-    "zonemap_after_delete", "multicol_pointer_upsert",
-    # round 10 (CORRECTNESS_r10.json — all 50 rows hash-green: the 4 new
-    # round-10 queries below + the leading 46 of the reconfirmation
-    # cohort, through text_bm25_search).
-    "disjoint_rebase_upsert", "pointer_time_travel",
-    "cdc_between_generations", "upsert_pointer_bloom",
-})
-
-# Queries whose driver validation is OLDEST or STALEST — these lead the
-# round-11 window so the driver reconfirms them before anything newer.
-# Head (VERDICT r10 item 3): every query whose BODY or operator path
-# was rewritten in round 10 AFTER its name rotated out of the r10
-# window (cms identity rewrite, bloom hashing/sizing, merge/bootstrap
-# write layout) — their only post-rewrite oracle evidence is the local
-# sf0.01 sweep, so the driver re-confirms them first.  Then the
-# r3-era cohort the r10 window did not reach, then the never-
-# reconfirmed r4/r5 tails, each in registry order.
-RECONFIRM_FIRST = (
-    # operator path rewritten in r11 (near-dedup signature spread +
-    # single-evaluation projection — outputs verified identical locally
-    # at sf0.001 and sf0.01, but the driver should re-confirm queries
-    # whose execution path changed in the same round)
-    "stream_near_dedup", "dedup_ngram_jaccard",
-    # rewritten in r10 after rotating out of the r10 window
-    "cms_join_cardinality", "cms_custkey_counts",
-    "dedup_bloom_incremental", "upsert_partitioned_roundtrip",
-    "upsert_orders_scd1", "multicol_pointer_upsert",
-    "manifest_sharded_upsert", "zonemap_after_delete",
-    "concurrent_upsert_cas", "diff_after_upsert",
-    # r3-era cohort queued in r10 but not reached by its window
-    "mix_sources_target", "sources_literal_union", "dropna_thresh_events",
-    "dedup_minhash_lsh", "dedup_simhash", "ann_lsh_bucketed",
-    "ann_ivf_topk", "ann_int8_topk", "stream_tumbling_counts",
-    "stream_session_counts", "stream_interval_join",
-    # r4 cohort tail (validated r4, never reconfirmed since)
-    "salted_agg_suppkey", "salted_merge_orders", "dedup_resolve_corpus",
-    "merge_recursive_regions", "dedup_substring_spans",
-    "dedup_connected_groups_star", "dedup_chunk_minhash",
-    "semantic_dedup_kept", "multimodal_audio_meta",
-    "stream_semantic_dedup",
-    # r5 cohort (validated r5, never reconfirmed since)
-    "heavy_hitter_tokens", "hist_rollup_price_quantiles",
-    "sample_weighted_orders", "dedup_incremental_minhash",
-    "sample_n_orders", "parquet_zorder_roundtrip", "hll_rollup_users",
-    "partitions_concat_invariance", "timedelta_components_events",
-    "parquet_clustered_roundtrip", "q2_min_cost_supplier",
-    "q11_important_stock", "q20_potential_promotion",
-    "ann_cosine_topk_blocked", "ann_lsh_auto_planes",
-    "stream_heavy_hitters", "stream_windowed_distinct",
-)
-
-# ROUND-12 CHECKLIST: once CORRECTNESS_r11.json lands, rotate again —
-# add its green names to VALIDATED and drop the consumed
-# RECONFIRM_FIRST prefix; check list(collect_queries())[:50] when
-# rotating — the exact tail shifts with any late additions.  Append
-# the r6-era remainder (kmv_intersect_slices … drift_price_psi,
-# registry order) when the queue runs short.  Every registry query is
-# swept locally vs DuckDB at sf0.01 each round
-# (tests/test_correctness.py), so names outside the driver window are
-# never actually stale — the rotation just keeps the audit trail fresh.
-
 
 def collect_queries() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]]:
     from . import approx, dedup, events, ops, relational, round3, round3b, round3c, round4, round5, round5b, round6, round6b, round7, round8, round9, round10, sampling_q, similarity, stats, streaming_q, text, tpch, tpch2, tpch3, tpch4, windows
@@ -231,10 +24,4 @@ def collect_queries() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame
             if name in out:
                 raise ValueError(f"duplicate query name {name}")
             out[name] = pair
-    # Rotation: never-driver-validated queries first, then the explicit
-    # oldest-validation reconfirmation cohort, then everything else
-    # (stable within each class).
-    ordered = {n: out[n] for n in out if n not in VALIDATED}
-    ordered.update({n: out[n] for n in RECONFIRM_FIRST if n in out})
-    ordered.update({n: out[n] for n in out if n in VALIDATED})
-    return ordered
+    return out

@@ -4,9 +4,8 @@ center=, shift(freq=), .cat accessor incl. explicit categories,
 axis=1 reductions, ungrouped merge_asof, groupby by-expression,
 win_type weighted rolling, bucketed expanding median).
 
-Wired into collect_queries() since round 3; the batch leads the
-driver's 50-query validation window (queries/__init__.py VALIDATED
-rotation). Also kept green by tests/test_round3_queries.py.
+Wired into collect_queries() since round 3; tests/test_correctness.py
+checks every query here against its DuckDB oracle.
 """
 
 from __future__ import annotations

@@ -719,8 +719,9 @@ def upsert_sink(stream: DataFrame, table_path: str, keys: list,
 
     `zonemap_cols` keeps a file-level zone map (sources/zonemap.py)
     over the snapshot table fresh after every merge: the first batch
-    builds it, later batches run update_zonemap — footer-scanning only
-    the files the merge rewrote, so manifest maintenance costs the
+    builds it, later batches run update_zonemap once (partitioned and
+    bucketed merges run it inside upsert_partitioned) — footer-scanning
+    only the files the merge rewrote, so manifest maintenance costs the
     CHANGE like the merge itself, and selective readers prune with
     read_skipping while the stream runs (a crash between merge and
     manifest update just leaves unknown files, which the pruner always
@@ -772,6 +773,10 @@ def upsert_sink(stream: DataFrame, table_path: str, keys: list,
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
+        # the partitioned and bucketed merges refresh an existing zone
+        # map themselves (upsert_partitioned); only the full rewrite
+        # below leaves it to this sink
+        full_rewrite = False
         if not _fs.isdir(table_path):
             out = batch_df
             if order_col is not None:
@@ -801,8 +806,7 @@ def upsert_sink(stream: DataFrame, table_path: str, keys: list,
                             bloom_append_snapshot
                         bloom_append_snapshot(spark, key_bloom_path,
                                               out, list(keys))
-            return
-        if partition_col:
+        elif partition_col:
             upsert_partitioned(spark, table_path, batch_df, keys,
                                partition_col, order_col=order_col,
                                check_moves=check_moves,
@@ -826,14 +830,15 @@ def upsert_sink(stream: DataFrame, table_path: str, keys: list,
             atomic_overwrite(
                 table_path,
                 lambda p: merged.write.mode("overwrite").parquet(p))
+            full_rewrite = True
         if zonemap_cols:
             from ..sources.zonemap import (ZONEMAP_DIR, build_zonemap,
                                            update_zonemap)
             zp = os.path.join(table_path, ZONEMAP_DIR)
-            if _read_manifest(zp, fs=_fs) is not None:
-                update_zonemap(spark, table_path)
-            else:
+            if _read_manifest(zp, fs=_fs) is None:
                 build_zonemap(spark, table_path, list(zonemap_cols))
+            elif full_rewrite:
+                update_zonemap(spark, table_path)
 
     ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="upsert_sink_ckpt_")
     return (stream.writeStream.foreachBatch(_apply)

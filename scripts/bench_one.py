@@ -3,9 +3,9 @@ median-of-N, optional .explain("formatted") dump.
 
 Usage: python scripts/bench_one.py [--reps N] [--explain OUTDIR] name [name...]
 
-Mirrors bench.py's corpus resolution (x10/x100 replica universes) so the
-numbers are comparable with BENCH_r{N}; entries are timed exactly like
-bench.py times them (build + .collect()).
+Resolves each name through bench.py's ENTRIES table (corpus and timed
+action), so the numbers are comparable with BENCH_r{N}; any other
+registry query runs on the sf corpus with a collect.
 """
 
 from __future__ import annotations
@@ -19,24 +19,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench as B  # noqa: E402
-
-
-def resolve(name: str):
-    """-> (fn, corpus_kind) for a bare entry name."""
-    from dask_expr_spark.queries import collect_queries
-
-    registry = collect_queries()
-    if name in registry:
-        fn = registry[name][0]
-    elif name in B.STEADY_ENTRIES:
-        fn = B.STEADY_ENTRIES[name]
-    elif name in B.LOCAL_PROBES:
-        fn = B.LOCAL_PROBES[name]
-    else:
-        raise SystemExit(f"unknown entry {name}")
-    kind = ("x100" if name in B.X100_ENTRIES
-            else "x10" if name in B.X10_ENTRIES else "base")
-    return fn, kind
 
 
 def main() -> None:
@@ -54,28 +36,22 @@ def main() -> None:
     spark = get_spark("bench_one")
     registry = collect_queries()
     B._warm_session(spark, registry)
-    dirs = {"base": sf_dir,
+    dirs = {"sf": sf_dir,
             "x10": B._ensure_x10(spark, sf_dir),
             "x100": B._ensure_x100(spark, sf_dir)}
     B._ensure_ann_artifacts(spark, dirs["x10"])
 
     out = {}
     for name in args.names:
-        fn, kind = resolve(name)
-        qdir = dirs[kind]
+        fn, e = B.resolve(name, registry)
+        qdir = dirs[e.corpus]
         spark.catalog.clearCache()
         spark.sparkContext._jvm.System.gc()
         spark.sparkContext.setJobDescription(name)
         runs = []
         for _ in range(args.reps):
             t0 = time.perf_counter()
-            df = fn(spark, qdir)
-            # mirror bench.py's timed action (large-result entries take
-            # the guide §1.4 noop sink there)
-            if name in B.NOOP_SINK_ENTRIES:
-                df.write.format("noop").mode("overwrite").save()
-            else:
-                df.collect()
+            B.run_action(fn(spark, qdir), e.action)
             runs.append(round(time.perf_counter() - t0, 3))
         if args.explain:
             os.makedirs(args.explain, exist_ok=True)
@@ -86,7 +62,7 @@ def main() -> None:
                     spark._jvm.org.apache.spark.sql.execution.ExplainMode
                     .fromString("formatted")))
         runs.sort()
-        suffix = {"x10": "_x10", "x100": "_x100", "base": ""}[kind]
+        suffix = "" if e.corpus == "sf" else f"_{e.corpus}"
         out[name + suffix] = {"median": runs[len(runs) // 2], "runs": runs}
         print(json.dumps({name + suffix: out[name + suffix]}), flush=True)
     print("RESULT " + json.dumps(out))

@@ -56,18 +56,19 @@ def main() -> None:
     outdir = sys.argv[1]
     names = sys.argv[2:] or LAZY
     os.makedirs(outdir, exist_ok=True)
+    from dask_expr_spark.queries import collect_queries
     from dask_expr_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("capture_plans")
-    dirs = {"base": sf_dir,
+    registry = collect_queries()
+    dirs = {"sf": sf_dir,
             "x10": B._ensure_x10(spark, sf_dir),
             "x100": B._ensure_x100(spark, sf_dir)}
     B._ensure_ann_artifacts(spark, dirs["x10"])
     for name in names:
-        fn, kind = __import__("bench_one", fromlist=["resolve"]).resolve(name) \
-            if False else resolve(name)
-        qdir = dirs[kind]
+        fn, e = B.resolve(name, registry)
+        qdir = dirs[e.corpus]
         try:
             df = fn(spark, qdir)
             plan = df._jdf.queryExecution().explainString(
@@ -79,12 +80,6 @@ def main() -> None:
         with open(os.path.join(outdir, f"{name}.txt"), "w") as fh:
             fh.write(plan)
         print(f"{name}: {flags(plan)}")
-
-
-def resolve(name: str):
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    from bench_one import resolve as r
-    return r(name)
 
 
 if __name__ == "__main__":

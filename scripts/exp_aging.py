@@ -1,9 +1,10 @@
 """Reproduce (and A/B candidate fixes for) in-session JVM aging.
 
 Runs ONE bench entry N times inside a single session, mimicking
-bench.py's inter-entry hygiene (clearCache + System.gc()), and prints
-the per-rep wall times.  If per-rep time grows with rep index on
-identical code+data, the inflation is session state, not the query.
+bench.py's inter-entry hygiene (clearCache + System.gc()) and timing
+the entry's own action from bench.ENTRIES, and prints the per-rep wall
+times.  If per-rep time grows with rep index on identical code+data,
+the inflation is session state, not the query.
 
 Usage:
     python scripts/exp_aging.py [--reps N] [--conf k=v ...] name
@@ -56,26 +57,20 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     registry = collect_queries()
     B._warm_session(spark, registry)
-    dirs = {"base": sf_dir,
+    dirs = {"sf": sf_dir,
             "x10": B._ensure_x10(spark, sf_dir),
             "x100": B._ensure_x100(spark, sf_dir)}
+    B._ensure_ann_artifacts(spark, dirs["x10"])
 
     for name in args.names:
-        if name in registry:
-            fn = registry[name][0]
-        elif name in B.LOCAL_PROBES:
-            fn = B.LOCAL_PROBES[name]
-        else:
-            raise SystemExit(f"unknown entry {name}")
-        kind = ("x100" if name in B.X100_ENTRIES
-                else "x10" if name in B.X10_ENTRIES else "base")
-        qdir = dirs[kind]
+        fn, e = B.resolve(name, registry)
+        qdir = dirs[e.corpus]
         times = []
         for i in range(args.reps):
             spark.catalog.clearCache()
             spark.sparkContext._jvm.System.gc()
             t0 = time.perf_counter()
-            fn(spark, qdir).collect()
+            B.run_action(fn(spark, qdir), e.action)
             dt = time.perf_counter() - t0
             times.append(dt)
             rt = spark.sparkContext._jvm.java.lang.Runtime.getRuntime()

@@ -232,15 +232,15 @@ def main() -> None:
 
     probes = {
         "dedup_ngram_jaccard": registry["dedup_ngram_jaccard"][0],
-        "dedup_minhash_pipeline": bench.LOCAL_PROBES["dedup_minhash_pipeline"],
-        "ann_lsh_pipeline": bench.LOCAL_PROBES["ann_lsh_pipeline"],
+        "dedup_minhash_pipeline": bench.ENTRIES["dedup_minhash_pipeline"].fn,
+        "ann_lsh_pipeline": bench.ENTRIES["ann_lsh_pipeline"].fn,
         "ann_lsh_sized_planes": _lsh_ann_sized,
         "scale_probe_ordered_cumsum_shift":
-            bench.LOCAL_PROBES["scale_probe_ordered_cumsum_shift"],
+            bench.ENTRIES["scale_probe_ordered_cumsum_shift"].fn,
         "scale_probe_expanding_median":
-            bench.LOCAL_PROBES["scale_probe_expanding_median"],
+            bench.ENTRIES["scale_probe_expanding_median"].fn,
         "scale_probe_expanding_approx":
-            bench.LOCAL_PROBES["scale_probe_expanding_approx"],
+            bench.ENTRIES["scale_probe_expanding_approx"].fn,
         "semantic_dedup_sized_cells": _semantic_dedup,
         "dedup_substring_spans": _substring_spans,
         # query-family coverage beyond the nonlinear-risk set

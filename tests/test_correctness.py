@@ -51,22 +51,6 @@ def test_oracle_match(name, spark, sf_dir, con):
     assert not errors, "\n".join(errors)
 
 
-def test_registry_rotation():
-    """The driver validates only the first 50 registry entries per round;
-    rotation must keep already-validated queries out of that window while
-    unvalidated ones remain (see queries/__init__.py VALIDATED)."""
-    from dask_expr_spark.queries import VALIDATED
-
-    names = list(_REG)
-    unvalidated = [n for n in names if n not in VALIDATED]
-    window = names[:50]
-    if len(unvalidated) >= 50:
-        assert not (set(window) & VALIDATED), sorted(set(window) & VALIDATED)
-    else:
-        # all unvalidated queries must sit inside the check window
-        assert set(unvalidated) <= set(window)
-
-
 @pytest.mark.parametrize("name", _NO_ORACLE)
 def test_rows_only(name, spark, sf_dir):
     fn, _ = _REG[name]

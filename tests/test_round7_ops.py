@@ -1048,18 +1048,31 @@ def test_zonemap_bucketed_table_and_partition_col_guard(spark,
         Z.build_zonemap(spark, path, ["__bucket"])
 
 
-def test_upsert_sink_zonemap_maintenance(spark, tmp_path):
+def test_upsert_sink_zonemap_maintenance(spark, tmp_path, monkeypatch):
     """the streaming CDC sink keeps the zone map fresh: first batch
-    builds it, later batches update it delta-only, and a pruned read
-    over the live snapshot matches the plain filter after every
-    epoch."""
+    builds it, later batches update it delta-only (once per batch: no
+    refresh finds nothing to do), and a pruned read over the live
+    snapshot matches the plain filter after every epoch."""
     src = str(tmp_path / "src")
     table = str(tmp_path / "tbl")
     ckpt = str(tmp_path / "ckpt")
     from dask_expr_spark.sources import zonemap as Z
     from dask_expr_spark.streaming import ops as S
 
-    for i in range(3):
+    calls = []
+    build, update = Z.build_zonemap, Z.update_zonemap
+
+    def counted(fn, kind):
+        def run(*a, **kw):
+            out = fn(*a, **kw)
+            calls.append((kind, out if kind == "update" else None))
+            return out
+        return run
+
+    monkeypatch.setattr(Z, "build_zonemap", counted(build, "build"))
+    monkeypatch.setattr(Z, "update_zonemap", counted(update, "update"))
+
+    def add_version(i):
         pdf = pd.DataFrame({
             "k": list(range(i * 100, i * 100 + 100)),
             "v": [float(i * 100 + j) for j in range(100)],
@@ -1067,6 +1080,8 @@ def test_upsert_sink_zonemap_maintenance(spark, tmp_path):
         })
         (spark.createDataFrame(pdf).coalesce(1)
          .write.mode("append").parquet(src))
+
+    add_version(0)
     schema = spark.read.parquet(src).schema
     stream = (spark.readStream.schema(schema)
               .option("maxFilesPerTrigger", 1).parquet(src))
@@ -1075,10 +1090,18 @@ def test_upsert_sink_zonemap_maintenance(spark, tmp_path):
                       checkpoint_dir=ckpt)
     try:
         q.processAllAvailable()
+        # the bootstrap epoch already built the zone map
+        assert M._read_manifest(os.path.join(table, Z.ZONEMAP_DIR)) \
+            is not None, calls
+        add_version(1)
+        add_version(2)
+        q.processAllAvailable()
     finally:
         q.stop()
+    assert [k for k, _ in calls] == ["build", "update", "update"], calls
+    assert ("update", (0, 0)) not in calls, calls
     # manifest is current: update is a no-op
-    assert Z.update_zonemap(spark, table) == (0, 0)
+    assert update(spark, table) == (0, 0)
     preds = [("v", ">=", 250.0)]
     surv, total = Z.zone_prune(spark, table, preds)
     assert 0 < len(surv) < total
