@@ -52,6 +52,10 @@ CHANGED_THIS_ROUND = (
     # run through upsert_sink, whose zone-map refresh changed
     "stream_upsert_snapshot", "stream_upsert_bucketed",
     "stream_upsert_pointer",
+    # reach the pointer flip (delete_where) or the snapshot reads,
+    # which now read a version's files by list
+    "delete_where_orders", "snapshot_time_travel",
+    "cdc_between_snapshots", "stream_scd2_history",
 )
 
 _REGISTRY = None

@@ -232,6 +232,27 @@ def _swap_partition_dirs(path: str, new_root: str,
     fs.delete(new_root)
 
 
+def _swap_in_slice(spark: SparkSession, path: str, df: DataFrame,
+                   partition_col: str, fs, before_swap=None) -> list[str]:
+    """The rename protocol's one write path (upsert_partitioned,
+    overwrite_partitions, delete_where's rewrite): `df` writes to
+    `<path>__new` while the table is intact, its `col=` dirs are
+    listed, `before_swap` runs (the caller's pre-commit barrier), the
+    dirs swap in via rename-aside (_swap_partition_dirs) and the zone
+    map refreshes.  Returns the dir names swapped in."""
+    new_root = path.rstrip("/") + "__new"
+    fs.delete(new_root)
+    (_merge_write_layout(spark, path, df, [partition_col], fs)
+     .write.mode("overwrite")
+     .partitionBy(partition_col).parquet(new_root))
+    dirs = _list_part_dirs(fs, new_root, [partition_col])
+    if before_swap is not None:
+        before_swap()
+    _swap_partition_dirs(path, new_root, dirs, fs=fs)
+    _refresh_zonemap_if_present(spark, path, fs)
+    return dirs
+
+
 # ---------------------------------------------------------------------------
 # Pointer-commit protocol: the object-store-safe alternative to the
 # rename swap for PARTITIONED tables.  On s3a/gs/abfs a directory
@@ -255,6 +276,12 @@ def _swap_partition_dirs(path: str, new_root: str,
 #      ConcurrentCommitError; its appended data files and manifest
 #      shards are unreferenced orphans that vacuum_manifested clears.
 #      (Delta's _delta_log/N.json, in miniature.)
+#
+# Every mutation (upsert_partitioned, overwrite_partitions,
+# delete_where, compact_manifested) runs steps 1-3 through ONE flip,
+# _append_and_flip; it and manifest_bootstrap are the only callers of
+# the claim (_write_commit) — as Delta commits WRITE, DELETE and
+# OPTIMIZE alike through one log append.
 #
 # `_commit.json` (no generation) survives as a best-effort POINTER
 # CACHE, refreshed after each successful claim; readers resolve the
@@ -413,17 +440,13 @@ def read_commit(path: str, fs=None) -> dict | None:
     cache plus one existence miss."""
     fs = _resolve_fs(path, fs)
     cp = _commit_file(path)
-    man = None
     if fs.exists(cp):
         man = json.loads(fs.read_text(cp))
     else:
-        if not fs.isdir(path):
-            return None
-        gens = [int(m.group(1)) for m in
-                (_CLAIM_RE.match(e) for e in fs.listdir(path)) if m]
+        gens = manifest_generations(path, fs=fs)
         if not gens:
             return None
-        man = json.loads(fs.read_text(_claim_file(path, max(gens))))
+        man = json.loads(fs.read_text(_claim_file(path, gens[-1])))
     g = int(man["generation"])
     while fs.exists(_claim_file(path, g + 1)):
         g += 1
@@ -550,7 +573,7 @@ _UNREAD = object()
 
 
 def _resolve_commit(path: str, fs, commit: str, op: str,
-                    man=_UNREAD) -> str:
+                    man=_UNREAD, partition_col=None) -> str:
     """Pick the durability protocol for a partitioned-table mutation.
     "auto" = pointer when the table already carries a `_commit.json`
     OR the filesystem lacks atomic rename; rename otherwise.  An
@@ -558,28 +581,59 @@ def _resolve_commit(path: str, fs, commit: str, op: str,
     (the rename protocol would read the raw directory — superseded
     generations plus uncommitted orphans — silently duplicating rows
     and stranding the manifest) AND on a non-atomic-rename filesystem
-    (the module contract: refuse rather than silently weaken).
+    (the module contract: refuse rather than silently weaken).  With
+    `partition_col` given, a multi-column spec is refused under the
+    rename protocol (its per-partition crash recovery is
+    single-level), and so is a spec other than the one a
+    pointer-commit table is committed on.
     Callers that already read the manifest pass it as `man` to skip
     the second read (one GET per mutation on object stores)."""
     if man is _UNREAD:
         man = read_commit(path, fs=fs)
     manifested = man is not None
     if commit == "auto":
-        return ("pointer" if manifested or not fs.atomic_rename
-                else "rename")
-    if commit == "rename" and manifested:
+        commit = ("pointer" if manifested or not fs.atomic_rename
+                  else "rename")
+    elif commit == "rename" and manifested:
         raise ValueError(
             f"{op}: table at {path} is pointer-committed "
             "(_commit.json present) — the rename protocol would read "
             "superseded and orphaned files; use commit='pointer' (or "
             "vacuum_manifested + remove _commit.json to convert)")
-    if commit == "rename" and not fs.atomic_rename:
+    elif commit == "rename" and not fs.atomic_rename:
         raise ValueError(
             f"{op}: commit='rename' on {fs.scheme}:// — rename is "
             "not atomic there; use commit='pointer'")
-    if commit not in ("rename", "pointer"):
+    elif commit not in ("rename", "pointer"):
         raise ValueError(f"{op}: unknown commit mode {commit!r}")
+    if (partition_col is not None and commit != "pointer"
+            and len(_norm_pcols(partition_col)) > 1):
+        raise ValueError(
+            f"{op}: multi-column partition specs are pointer-protocol "
+            "only (the rename swap's per-partition recovery is "
+            "single-level); use commit='pointer'")
+    if (partition_col is not None and manifested
+            and _man_pcols(man) != _norm_pcols(partition_col)):
+        raise ValueError(
+            f"{op}: table at {path} is committed on "
+            f"{man['partition_col']}, not {partition_col}")
     return commit
+
+
+def _partition_values(df: DataFrame, pcols: list[str]) -> list:
+    """`df`'s distinct partition values — one driver collect, bounded
+    by the partition count: scalars for a single column, tuples for a
+    multi-level spec."""
+    rows = df.select(*pcols).distinct().collect()
+    return [tuple(r) if len(pcols) > 1 else r[0] for r in rows]
+
+
+def _value_dirs(pcols: list[str], values) -> list[str]:
+    """Relative dir paths of partition values (scalars for a single
+    column, tuples for several), rendered the way Spark names them."""
+    return [_hive_part_path(pcols,
+                            v if isinstance(v, (tuple, list)) else (v,))
+            for v in values]
 
 
 def _part_files(fs, path: str, dirname: str) -> list[str]:
@@ -636,6 +690,28 @@ def manifest_generations(path: str, fs=None) -> list[int]:
                   (_CLAIM_RE.match(e) for e in fs.listdir(path)) if m)
 
 
+def _manifest_at(path: str, fs, generation: int | None,
+                 op: str) -> dict:
+    """The manifest of `generation` (None = the head): the head
+    itself, or its surviving claim file.  Raises on a table without a
+    manifest and on a vacuumed or never-committed generation."""
+    man = read_commit(path, fs=fs)
+    if man is None:
+        raise ValueError(
+            f"{op}: no {_COMMIT} at {path} — not a pointer-commit "
+            "table (manifest_bootstrap or "
+            "upsert_partitioned(commit='pointer') first)")
+    if generation is None or int(generation) == int(man["generation"]):
+        return man
+    cf = _claim_file(path, int(generation))
+    if not fs.exists(cf):
+        raise ValueError(
+            f"{op}: generation {int(generation)} not available at "
+            f"{path} (vacuumed or never committed; live generations: "
+            f"{manifest_generations(path, fs=fs)})")
+    return json.loads(fs.read_text(cf))
+
+
 def read_manifested(spark: SparkSession, path: str, fs=None,
                     partition_values: list | None = None,
                     generation: int | None = None) -> DataFrame:
@@ -661,28 +737,10 @@ def read_manifested(spark: SparkSession, path: str, fs=None,
     exactly as it committed.  Raises on a vacuumed or never-committed
     generation, naming the live ones."""
     fs = _resolve_fs(path, fs)
-    man = read_commit(path, fs=fs)
-    if man is None:
-        raise ValueError(
-            f"read_manifested: no {_COMMIT} at {path} — not a "
-            "pointer-commit table (manifest_bootstrap or "
-            "upsert_partitioned(commit='pointer') first)")
-    if generation is not None and \
-            int(generation) != int(man["generation"]):
-        cf = _claim_file(path, int(generation))
-        if not fs.exists(cf):
-            raise ValueError(
-                f"read_manifested: generation {int(generation)} not "
-                f"available at {path} (vacuumed or never committed; "
-                f"live generations: {manifest_generations(path, fs=fs)})")
-        man = json.loads(fs.read_text(cf))
+    man = _manifest_at(path, fs, generation, "read_manifested")
     dirs = None
     if partition_values is not None:
-        pcols = _man_pcols(man)
-        dirs = [_hive_part_path(pcols,
-                                v if isinstance(v, (tuple, list))
-                                else (v,))
-                for v in partition_values]
+        dirs = _value_dirs(_man_pcols(man), partition_values)
     files = manifest_files(man, path, fs=fs, dirs=dirs)
     if not files:
         # a legitimately EMPTY table (e.g. delete_where removed every
@@ -699,24 +757,21 @@ def read_manifested(spark: SparkSession, path: str, fs=None,
 
 
 def _append_and_flip(spark: SparkSession, path: str, df: DataFrame,
-                     partition_col: str, man: dict, fs,
+                     partition_col: str | list[str], man: dict, fs,
+                     dirs: list[str], emptied: list[str] = (),
                      rebase: bool = True,
-                     parts: list[tuple] | None = None,
                      before_claim=None) -> list[str]:
-    """The pointer protocol's write half: append `df`'s partitions as
-    new files, then claim the next generation pointing at them.  New
-    files are identified by a pre/post listing diff per touched
-    directory, so orphans from a previously crashed append are never
-    adopted.  A lost claim rebases onto the new head when the
-    intervening commits touched only disjoint dirs (see
-    _write_commit); otherwise — or with rebase=False — it raises
-    ConcurrentCommitError (this append's files become orphans).
-
-    `parts` — `df`'s distinct partition-value tuples when the caller
-    already knows them: the default derivation here is a full extra
-    computation of `df` (for a merge, that is a second pass over the
-    touched slice — guide §2.4), so callers that can prove the set
-    pass it in.
+    """The flip — the pointer protocol's ONE write path, shared by
+    every pointer-table mutation.  The already laid-out `df` APPENDS
+    into the dirs `dirs`; each dir's fresh files, found by a pre/post
+    listing diff (so orphans of an earlier crashed append are never
+    adopted), become its committed list, and every dir in `emptied`
+    commits as an empty list.  Then `before_claim` runs, the next
+    generation is claimed and the zone map refreshes.  A lost claim
+    rebases onto the new head when the intervening commits touched
+    only disjoint dirs (see _write_commit); otherwise — or with
+    rebase=False — it raises ConcurrentCommitError (this append's
+    files become orphans).
 
     `before_claim` — optional barrier invoked after the append but
     BEFORE the generation claim; if it raises, the claim is never
@@ -724,32 +779,29 @@ def _append_and_flip(spark: SparkSession, path: str, df: DataFrame,
     caller's pre-claim ordering hook — e.g. joining a concurrent
     bloom-index update that must commit first)."""
     pcols = _norm_pcols(partition_col)
-    if parts is None:
-        parts = [tuple(r)
-                 for r in df.select(*pcols).distinct().collect()]
-    if not parts:
-        return []
-    dirs = [_hive_part_path(pcols, v) for v in parts]
-    pre = {d: set(_part_files(fs, path, d)) for d in dirs}
-    (_merge_write_layout(spark, path, df, pcols, fs)
-     .write.mode("append").partitionBy(*pcols).parquet(path))
-    for d in dirs:
-        post = _part_files(fs, path, d)
-        fresh = sorted(set(post) - pre[d])
-        if not fresh:
-            # the dir-name rendering diverged from Spark's — fail
-            # BEFORE the flip: the old manifest stays live, the
-            # appended files are vacuumable orphans, nothing corrupts
-            raise RuntimeError(
-                f"pointer commit: no new files appeared under "
-                f"{d!r} after append — hive dir-name mismatch; "
-                "manifest NOT flipped (table unchanged)")
-        _set_dir_files(man, path, d, fresh, fs)
+    if dirs:
+        pre = {d: set(_part_files(fs, path, d)) for d in dirs}
+        df.write.mode("append").partitionBy(*pcols).parquet(path)
+        for d in dirs:
+            fresh = sorted(set(_part_files(fs, path, d)) - pre[d])
+            if not fresh:
+                # the dir-name rendering diverged from Spark's — fail
+                # BEFORE the flip: the old manifest stays live, the
+                # appended files are vacuumable orphans
+                raise RuntimeError(
+                    f"pointer commit: no new files appeared under "
+                    f"{d!r} after append — hive dir-name mismatch; "
+                    "manifest NOT flipped (table unchanged)")
+            _set_dir_files(man, path, d, fresh, fs)
+    for d in emptied:
+        man["partitions"][d] = []
     if before_claim is not None:
         before_claim()
     man["generation"] = int(man["generation"]) + 1
     # the CAS commit point (rebases across disjoint-dir winners)
-    _write_commit(path, man, fs, touched=dirs, rebase=rebase)
+    _write_commit(path, man, fs, touched=[*dirs, *emptied],
+                  rebase=rebase)
+    _refresh_zonemap_if_present(spark, path, fs)
     return dirs
 
 
@@ -881,10 +933,11 @@ def compact_manifested(spark: SparkSession, path: str,
     a data file: partition dirs whose committed files exceed their
     ceil(bytes/target) count are re-read FROM THE MANIFEST, rewritten
     as fresh coalesced files (append — old files untouched), and ONE
-    manifest flip commits every compacted dir at once.  Crash at any
-    point leaves the previous generation live; the superseded and
-    orphaned files clear in vacuum_manifested.  Returns (files_before,
-    files_after) counted over committed files."""
+    flip (_append_and_flip) commits every compacted dir at once.  The
+    salted per-dir layout is compact_parquet's (_salted_dir_layout).
+    Crash at any point leaves the previous generation live; the
+    superseded and orphaned files clear in vacuum_manifested.  Returns
+    (files_before, files_after) counted over committed files."""
     fs = _resolve_fs(path, fs)
     man = read_commit(path, fs=fs)
     if man is None:
@@ -908,21 +961,32 @@ def compact_manifested(spark: SparkSession, path: str,
     files = [os.path.join(path, d, f)
              for d in plan for f in dir_files[d]]
     df = spark.read.option("basePath", path).parquet(*files)
-    # per-dir file targets via in-value salting (same discipline as
-    # compact_parquet: a wide table can't fan out to n x n_dirs
-    # files).  The lookup keys a '\x1f'-joined rendering per level
-    # with the hive null sentinel, matching the row-side rendering
-    # below; rendering ambiguities (a real
-    # '__HIVE_DEFAULT_PARTITION__' string, scientific-notation
-    # doubles, values containing the separator) worst-case a wrong
-    # file-count target for that dir, never wrong data.
+    _append_and_flip(spark, path, _salted_dir_layout(df, pcols, plan),
+                     pcols, man, fs, sorted(plan), rebase=rebase)
+    files_after = files_before + sum(
+        len(_dir_files(man, path, d, fs)) - len(dir_files[d])
+        for d in plan)
+    return (files_before, files_after)
+
+
+def _salted_dir_layout(df: DataFrame, pcols: list[str],
+                       targets: dict[str, int]) -> DataFrame:
+    """Compaction layout: repartition so each partition dir `d` in
+    `targets` lands as `targets[d]` files (dirs not listed get one),
+    by salting inside the partition value — a wide table never fans
+    out to n x n_dirs files.  The lookup keys a '\x1f'-joined
+    rendering per level with the hive null sentinel, matching the
+    row-side rendering; rendering ambiguities (a real
+    '__HIVE_DEFAULT_PARTITION__' string, scientific-notation doubles,
+    values containing the separator) worst-case a wrong file-count
+    target for that dir, never wrong data."""
     def _dir_key(d: str) -> str:
         return "\x1f".join(
             urllib.parse.unquote(seg.split("=", 1)[1])
             for seg in d.split("/"))
 
-    targets = {_dir_key(d): n for d, n in plan.items()}
-    pairs = [x for v, n in sorted(targets.items())
+    pairs = [x for v, n in sorted((_dir_key(d), n)
+                                  for d, n in targets.items())
              for x in (F.lit(v), F.lit(n))]
     row_key = F.concat_ws("\x1f", *[
         F.coalesce(F.col(c).cast("string"),
@@ -930,27 +994,11 @@ def compact_manifested(spark: SparkSession, path: str,
         for c in pcols])
     lookup = (F.element_at(F.create_map(*pairs), row_key)
               if pairs else F.lit(None).cast("int"))
-    n_for_row = F.coalesce(lookup, F.lit(1))
-    salt = F.floor(F.rand(42) * n_for_row).cast("int")
-    out = (df.withColumn("__salt", salt)
-           .repartition(sum(plan.values()),
-                        *[F.col(c) for c in pcols], F.col("__salt"))
-           .drop("__salt"))
-    pre = {d: set(_part_files(fs, path, d)) for d in plan}
-    out.write.mode("append").partitionBy(*pcols).parquet(path)
-    files_after = files_before
-    for d in plan:
-        fresh = sorted(set(_part_files(fs, path, d)) - pre[d])
-        if not fresh:
-            raise RuntimeError(
-                f"compact_manifested: no new files under {d!r} after "
-                "append; manifest NOT flipped (table unchanged)")
-        files_after += len(fresh) - len(dir_files[d])
-        _set_dir_files(man, path, d, fresh, fs)
-    man["generation"] = int(man["generation"]) + 1
-    _write_commit(path, man, fs, touched=sorted(plan), rebase=rebase)
-    _refresh_zonemap_if_present(spark, path, fs)
-    return (files_before, files_after)
+    salt = F.floor(F.rand(42) * F.coalesce(lookup, F.lit(1))).cast("int")
+    return (df.withColumn("__salt", salt)
+            .repartition(sum(targets.values()),
+                         *[F.col(c) for c in pcols], F.col("__salt"))
+            .drop("__salt"))
 
 
 # ---------------------------------------------------------------------------
@@ -1231,20 +1279,9 @@ def upsert_partitioned(spark: SparkSession, path: str, updates: DataFrame,
     fs = _resolve_fs(path, fs)
     man = read_commit(path, fs=fs)
     commit = _resolve_commit(path, fs, commit, "upsert_partitioned",
-                             man=man)
+                             man=man, partition_col=partition_col)
     pcols = _norm_pcols(partition_col)
-    multi = len(pcols) > 1
-    if multi and commit != "pointer":
-        raise ValueError(
-            "upsert_partitioned: multi-column partition specs are "
-            "pointer-protocol only (the rename swap's per-partition "
-            "recovery is single-level); use commit='pointer'")
-    if multi:
-        parts = [tuple(r) for r in
-                 updates.select(*pcols).distinct().collect()]
-    else:
-        parts = [r[0] for r in
-                 updates.select(partition_col).distinct().collect()]
+    parts = _partition_values(updates, pcols)
     if not parts:
         return []
     if commit == "pointer":
@@ -1265,15 +1302,7 @@ def upsert_partitioned(spark: SparkSession, path: str, updates: DataFrame,
                                           out, keys)
                 # parts from the DEDUPED frame: order_col resolution
                 # can eliminate a value's only rows
-                if multi:
-                    return [tuple(r) for r in out.select(*pcols)
-                            .distinct().collect()]
-                return [r[0] for r in out.select(partition_col)
-                        .distinct().collect()]
-        if _man_pcols(man) != pcols:
-            raise ValueError(
-                f"upsert_partitioned: table at {path} is committed on "
-                f"{man['partition_col']}, not {partition_col}")
+                return _partition_values(out, pcols)
         if _table_has_files(man, path, fs):
             # the target reads ONLY the touched partitions' committed
             # files (manifest pruning): the driver-side file list is
@@ -1290,53 +1319,39 @@ def upsert_partitioned(spark: SparkSession, path: str, updates: DataFrame,
             target = updates.where(F.lit(False))
             def full_fn():
                 return target
-        if check_moves and keys and not all(c in keys for c in pcols):
-            _check_partition_moves(spark, full_fn, target,
-                                   updates, keys,
-                                   "/".join(pcols), key_bloom_path)
-        merged = upsert(target, updates, keys, order_col=order_col)
-        # the merged plan lazily re-reads the files the flip will
-        # supersede — but pointer commits never delete or rename, so
-        # those files stay readable until vacuum; no checkpoint needed
-        #
-        # without order_col the merge drops no update row, so the
-        # merged frame's partition set is exactly `parts` — pass it
-        # down and the flip skips its own distinct().collect(), a
-        # full second computation of the merge (guide §2.4).  With
-        # order_col, cross-partition duplicate keys can eliminate a
-        # value's only rows — let the flip derive the true set.
-        known = None if order_col is not None else \
-            (parts if multi else [(p,) for p in parts])
-        with _bloom_update(spark, key_bloom_path, updates, keys,
-                           full_fn) as bloom_committed:
-            _append_and_flip(spark, path, merged, partition_col, man,
-                             fs, rebase=rebase, parts=known,
-                             before_claim=bloom_committed)
-        _refresh_zonemap_if_present(spark, path, fs)
-        return parts
-    recover_table(path, fs=fs)
-    target = spark.read.parquet(path).where(
-        F.col(partition_col).isin(parts))
-    if check_moves and keys and partition_col not in keys:
-        # thunk: the guard only builds (and file-lists) the full-table
-        # frame when the bloom prefilter reports maybe-hits
-        _check_partition_moves(spark,
-                               lambda: spark.read.parquet(path),
-                               target, updates, keys, partition_col,
-                               key_bloom_path)
+    else:
+        recover_table(path, fs=fs)
+        target = spark.read.parquet(path).where(
+            F.col(partition_col).isin(parts))
+        def full_fn():
+            return spark.read.parquet(path)
+    if check_moves and keys and not all(c in keys for c in pcols):
+        # full_fn is a thunk: the guard only builds (and file-lists)
+        # the full-table frame when the bloom prefilter reports
+        # maybe-hits
+        _check_partition_moves(spark, full_fn, target, updates, keys,
+                               "/".join(pcols), key_bloom_path)
     merged = upsert(target, updates, keys, order_col=order_col)
-    new_root = path.rstrip("/") + "__new"
+    # the merged plan lazily re-reads the files the commit supersedes:
+    # the rename protocol writes the slice aside before any swap, and
+    # pointer commits never delete or rename, so those files stay
+    # readable until vacuum — no checkpoint needed
     with _bloom_update(spark, key_bloom_path, updates, keys,
-                       lambda: spark.read.parquet(path)) as bloom_committed:
-        fs.delete(new_root)
-        (_merge_write_layout(spark, path, merged, [partition_col], fs)
-         .write.mode("overwrite")
-         .partitionBy(partition_col).parquet(new_root))
-        dirs = [d for d in fs.listdir(new_root)
-                if d.startswith(f"{partition_col}=")]
-        bloom_committed()
-        _swap_partition_dirs(path, new_root, dirs, fs=fs)
-    _refresh_zonemap_if_present(spark, path, fs)
+                       full_fn) as bloom_committed:
+        if commit == "rename":
+            _swap_in_slice(spark, path, merged, partition_col, fs,
+                           before_swap=bloom_committed)
+            return parts
+        # without order_col the merge drops no update row, so the
+        # merged frame's partition set is exactly `parts` — no second
+        # computation of the merge (guide §2.4).  With order_col,
+        # cross-partition duplicate keys can eliminate a value's only
+        # rows — derive the true set.
+        dirs = _value_dirs(pcols, parts if order_col is None else
+                           _partition_values(merged, pcols))
+        out = _merge_write_layout(spark, path, merged, pcols, fs)
+        _append_and_flip(spark, path, out, partition_col, man, fs, dirs,
+                         rebase=rebase, before_claim=bloom_committed)
     return parts
 
 
@@ -1464,12 +1479,7 @@ def read_key_bloom(spark: SparkSession, bloom_path: str):
     hist = snapshot_history(bloom_path)
     if not hist:
         return None
-    if len(hist) == 1:
-        idx = snapshot_read(spark, bloom_path)
-        return idx if "hash" in idx.columns else None
-    from .sketches import bloom_fold_segments
-    dirs = [_snap_dir(bloom_path, e) for e in hist]
-    seg = spark.read.option("mergeSchema", "true").parquet(*dirs)
+    seg = _read_versions(spark, bloom_path, hist)
     # hash-stamp gate (ADVICE r10): an index persisted under a
     # previous hash family (pre-stamp md5 era) probes FALSE for
     # present keys under the current hashes — refuse it and let the
@@ -1479,6 +1489,9 @@ def read_key_bloom(spark: SparkSession, bloom_path: str):
     # stale index.
     if "hash" not in seg.columns:
         return None
+    if len(hist) == 1:
+        return seg
+    from .sketches import bloom_fold_segments
     # checkpoint the fold: every probe consumes the index twice
     # (params row + the broadcast build), and left lazy the segment
     # fold would re-run per consumer
@@ -1551,12 +1564,10 @@ def bloom_append_snapshot(spark: SparkSession, bloom_path: str,
     snapshot_write(seg, bloom_path)
     hist = snapshot_history(bloom_path)
     if len(hist) > BLOOM_SEG_MAX:
-        dirs = [_snap_dir(bloom_path, e) for e in hist]
-        # the compaction read resolves the live dirs BEFORE the new
+        # the compaction read resolves the live files BEFORE the new
         # version commits, so the fold sees a stable segment set
         snapshot_write(bloom_fold_segments(
-            spark.read.option("mergeSchema", "true").parquet(*dirs)),
-            bloom_path)
+            _read_versions(spark, bloom_path, hist)), bloom_path)
         snapshot_vacuum(bloom_path, keep=1)
 
 
@@ -1691,7 +1702,24 @@ def snapshot_read(spark: SparkSession, path: str,
     """Read the current (or a time-travel `version`) snapshot.  Raises
     on a vacuumed or never-committed version — an orphan directory
     from a crashed write is NOT readable, by design."""
-    return spark.read.parquet(snapshot_version_dir(path, version))
+    return _read_versions(spark, path, [_snap_entry(path, version)])
+
+
+def _read_versions(spark: SparkSession, path: str,
+                   entries: list[dict]) -> DataFrame:
+    """Read committed snapshot versions by FILE LIST (listed through
+    fsops): Spark logs `WARN DataSource: All paths were ignored` for a
+    read of an underscore-prefixed `_v…` dir itself.  Several versions
+    (the key bloom's dense and sparse segments) merge schemas."""
+    fs = _resolve_fs(path, None)
+    files = [os.path.join(d, f)
+             for d in (_snap_dir(path, e) for e in entries)
+             for f in fs.listdir(d)
+             if f.endswith(".parquet") and not f.startswith((".", "_"))]
+    reader = spark.read
+    if len(entries) > 1:
+        reader = reader.option("mergeSchema", "true")
+    return reader.parquet(*files)
 
 
 def snapshot_history(path: str) -> list[dict]:
@@ -1826,13 +1854,15 @@ def compact_parquet(spark: SparkSession, path: str,
     def _meta_dir(d: str) -> bool:
         return "=" not in d and d.startswith(("_", "."))
 
+    def _data_files() -> list[tuple[str, int]]:
+        return [(fp, sz)
+                for fp, sz in fs.walk_files(path, skip_dir=_meta_dir)
+                if fp.endswith(".parquet")
+                and not os.path.basename(fp).startswith(("_", "."))]
+
     sizes: dict[str, int] = {}
-    files_before = 0
-    for fp, sz in fs.walk_files(path, skip_dir=_meta_dir):
-        if not fp.endswith(".parquet") or \
-                os.path.basename(fp).startswith(("_", ".")):
-            continue
-        files_before += 1
+    before = _data_files()
+    for fp, sz in before:
         token = ""
         if partition_col is not None:
             rel = os.path.relpath(fp, path)
@@ -1848,28 +1878,11 @@ def compact_parquet(spark: SparkSession, path: str,
         out = df.repartition(n_target)
         writer = (lambda p: out.write.mode("overwrite").parquet(p))
     else:
-        # per-directory file targets: partition value (string-rendered,
-        # matching the hive dir token) → ceil(dir_bytes / chunk)
-        targets = {
-            urllib.parse.unquote(tok.split("=", 1)[1]):
-                max(1, math.ceil(b / chunk))
-            for tok, b in sizes.items() if tok}
-        n_total = sum(targets.values())
-        # the null partition can't key a map lookup: route explicitly
-        null_n = targets.pop("__HIVE_DEFAULT_PARTITION__", 1)
-        pairs = [x for v, n in sorted(targets.items())
-                 for x in (F.lit(v), F.lit(n))]
-        lookup = (F.element_at(F.create_map(*pairs),
-                               F.col(partition_col).cast("string"))
-                  if pairs else F.lit(None).cast("int"))
-        n_for_row = (F.when(F.col(partition_col).isNull(),
-                            F.lit(null_n))
-                     .otherwise(F.coalesce(lookup, F.lit(1))))
-        salt = F.floor(F.rand(42) * n_for_row).cast("int")
-        out = (df.withColumn("__salt", salt)
-               .repartition(n_total, F.col(partition_col),
-                            F.col("__salt"))
-               .drop("__salt"))
+        # per-directory file targets: ceil(dir_bytes / chunk)
+        out = _salted_dir_layout(
+            df, [partition_col],
+            {tok: max(1, math.ceil(b / chunk))
+             for tok, b in sizes.items() if tok})
         writer = (lambda p: out.write.mode("overwrite")
                   .partitionBy(partition_col).parquet(p))
     atomic_overwrite(path, writer, fs=fs)
@@ -1877,10 +1890,7 @@ def compact_parquet(spark: SparkSession, path: str,
         fs.write_text_atomic(spec_path, spec)
     if zcols:
         build_zonemap(spark, path, zcols, fs=fs)
-    after = sum(1 for fp, _sz in fs.walk_files(path, skip_dir=_meta_dir)
-                if fp.endswith(".parquet")
-                and not os.path.basename(fp).startswith(("_", ".")))
-    return (files_before, after)
+    return (len(before), len(_data_files()))
 
 
 # ---------------------------------------------------------------------------
@@ -2139,19 +2149,8 @@ def manifested_cdc(spark: SparkSession, path: str, from_gen: int,
     partition, not the table.  The join inside each changed partition
     remains a full outer join of that partition's two states."""
     fs = _resolve_fs(path, fs)
-
-    def _man_at(gen):
-        head = read_commit(path, fs=fs)
-        if head is not None and int(head["generation"]) == int(gen):
-            return head
-        cf = _claim_file(path, int(gen))
-        if not fs.exists(cf):
-            raise ValueError(
-                f"manifested_cdc: generation {int(gen)} not available "
-                f"at {path} (live: {manifest_generations(path, fs=fs)})")
-        return json.loads(fs.read_text(cf))
-
-    man_a, man_b = _man_at(from_gen), _man_at(to_gen)
+    man_a, man_b = (_manifest_at(path, fs, g, "manifested_cdc")
+                    for g in (from_gen, to_gen))
     pa, pb = man_a["partitions"], man_b["partitions"]
     changed = sorted(d for d in set(pa) | set(pb)
                      if pa.get(d) != pb.get(d))
@@ -2198,44 +2197,28 @@ def overwrite_partitions(spark: SparkSession, path: str, df: DataFrame,
     fs = _resolve_fs(path, fs)
     man = read_commit(path, fs=fs)
     commit = _resolve_commit(path, fs, commit, "overwrite_partitions",
-                             man=man)
+                             man=man, partition_col=partition_col)
     pcols = _norm_pcols(partition_col)
-    if len(pcols) > 1 and commit != "pointer":
-        raise ValueError(
-            "overwrite_partitions: multi-column partition specs are "
-            "pointer-protocol only; use commit='pointer'")
-    if commit == "pointer":
-        if man is None:
-            if fs.isdir(path):
-                man = manifest_bootstrap(path, partition_col, fs=fs)
-            else:
-                (df.hint("rebalance", *pcols)  # guide §6
-                 .write.mode("overwrite").partitionBy(*pcols)
-                 .parquet(path))
-                return sorted(
-                    manifest_bootstrap(path, partition_col,
-                                       fs=fs)["partitions"])
-        dirs = _append_and_flip(spark, path, df, partition_col, man, fs,
-                                rebase=rebase)
-        _refresh_zonemap_if_present(spark, path, fs)
-        return dirs
-    recover_table(path, fs=fs)
-    new_root = path.rstrip("/") + "__new"
-    fs.delete(new_root)
+    if commit == "rename":
+        recover_table(path, fs=fs)
     if not fs.isdir(path):
-        (df.hint("rebalance", partition_col)  # guide §6
-         .write.mode("overwrite").partitionBy(partition_col)
-         .parquet(path))
-        return [d for d in fs.listdir(path)
-                if d.startswith(f"{partition_col}=")]
-    (_merge_write_layout(spark, path, df, [partition_col], fs)
-     .write.mode("overwrite").partitionBy(partition_col)
-     .parquet(new_root))
-    dirs = [d for d in fs.listdir(new_root)
-            if d.startswith(f"{partition_col}=")]
-    _swap_partition_dirs(path, new_root, dirs, fs=fs)
-    _refresh_zonemap_if_present(spark, path, fs)
-    return dirs
+        # bootstrap: the slice becomes the whole table
+        (df.hint("rebalance", *pcols)  # guide §6
+         .write.mode("overwrite").partitionBy(*pcols).parquet(path))
+        if commit == "rename":
+            return _list_part_dirs(fs, path, pcols)
+        return sorted(
+            manifest_bootstrap(path, partition_col, fs=fs)["partitions"])
+    if commit == "rename":
+        return _swap_in_slice(spark, path, df, partition_col, fs)
+    if man is None:
+        man = manifest_bootstrap(path, partition_col, fs=fs)
+    dirs = _value_dirs(pcols, _partition_values(df, pcols))
+    if not dirs:
+        return []
+    return _append_and_flip(spark, path,
+                            _merge_write_layout(spark, path, df, pcols, fs),
+                            partition_col, man, fs, dirs, rebase=rebase)
 
 
 def delete_where(spark: SparkSession, path: str, predicate: Column,
@@ -2254,12 +2237,12 @@ def delete_where(spark: SparkSession, path: str, predicate: Column,
     deleted EMPTY are removed whole (no zero-row rewrite): rename
     protocol moves the dir into `<path>__drop` (trash recover_table
     clears — the rename out is the commit), pointer protocol commits
-    an empty file list in the SAME manifest flip as the rewrites (a
-    reader never sees a partial delete; superseded files clear in
-    vacuum_manifested).  Rename-protocol crash semantics are
-    per-partition, like the swaps: a crash mid-way leaves each hit
-    partition either fully old or fully deleted — re-run to finish
-    (the predicate is idempotent).
+    an empty file list in the SAME flip as the rewrites — the one
+    pointer write path, _append_and_flip (a reader never sees a
+    partial delete; superseded files clear in vacuum_manifested).
+    Rename-protocol crash semantics are per-partition, like the swaps:
+    a crash mid-way leaves each hit partition either fully old or
+    fully deleted — re-run to finish (the predicate is idempotent).
 
     If the table keeps a zone map (`_zonemap` dir), the manifest
     refreshes inline after the delete (change-bounded footer scan), so
@@ -2273,20 +2256,11 @@ def delete_where(spark: SparkSession, path: str, predicate: Column,
     fs = _resolve_fs(path, fs)
     man = read_commit(path, fs=fs)
     commit = _resolve_commit(path, fs, commit, "delete_where",
-                             man=man)
+                             man=man, partition_col=partition_col)
     pcols = _norm_pcols(partition_col)
-    multi = len(pcols) > 1
-    if multi and commit != "pointer":
-        raise ValueError(
-            "delete_where: multi-column partition specs are "
-            "pointer-protocol only; use commit='pointer'")
     if commit == "pointer" and man is None:
         man = manifest_bootstrap(path, partition_col, fs=fs)
     if commit == "pointer":
-        if _man_pcols(man) != pcols:
-            raise ValueError(
-                f"delete_where: table at {path} is committed on "
-                f"{man['partition_col']}, not {partition_col}")
         full = read_manifested(spark, path, fs=fs)
     else:
         recover_table(path, fs=fs)
@@ -2296,13 +2270,11 @@ def delete_where(spark: SparkSession, path: str, predicate: Column,
     # a coalesce() wrapper would block pushdown on the one pass that
     # reads the whole table); only the NEGATION needs the null guard,
     # because ~pred must KEEP null-predicate rows
-    if multi:
+    parts = _partition_values(full.where(predicate), pcols)
+    if not parts:
+        return ([], 0)
+    if len(pcols) > 1:
         import functools
-        parts = [tuple(r) for r in
-                 full.where(predicate).select(*pcols)
-                 .distinct().collect()]
-        if not parts:
-            return ([], 0)
         hit = functools.reduce(
             Column.__or__,
             [functools.reduce(
@@ -2312,11 +2284,6 @@ def delete_where(spark: SparkSession, path: str, predicate: Column,
              for vals in parts])
         sliced = full.where(hit)
     else:
-        parts = [r[0] for r in
-                 full.where(predicate).select(partition_col)
-                 .distinct().collect()]
-        if not parts:
-            return ([], 0)
         sliced = full.where(F.col(partition_col).isin(parts))
     kept = sliced.where(~F.coalesce(predicate, F.lit(False)))
     # partitions that empty out entirely are dropped whole, not
@@ -2352,32 +2319,14 @@ def delete_where(spark: SparkSession, path: str, predicate: Column,
     if commit == "pointer":
         # ONE manifest flip commits rewrites AND whole-partition
         # drops together — no reader ever sees a partial delete
-        if nonempty_dirs:
-            pre = {d: set(_part_files(fs, path, d))
-                   for d in nonempty_dirs}
-            (_merge_write_layout(spark, path, kept, pcols, fs)
-             .write.mode("append").partitionBy(*pcols)
-             .parquet(path))
-            for d in nonempty_dirs:
-                fresh = sorted(set(_part_files(fs, path, d)) - pre[d])
-                if not fresh:
-                    raise RuntimeError(
-                        f"delete_where: no new files under {d!r} "
-                        "after append; manifest NOT flipped "
-                        "(table unchanged)")
-                _set_dir_files(man, path, d, fresh, fs)
-        for d in empty_dirs:
-            man["partitions"][d] = []
-        man["generation"] = int(man["generation"]) + 1
-        _write_commit(path, man, fs,
-                      touched=sorted(set(nonempty_dirs) | set(empty_dirs)),
-                      rebase=rebase)
-        _refresh_zonemap_if_present(spark, path, fs)
+        _append_and_flip(spark, path,
+                         _merge_write_layout(spark, path, kept, pcols, fs)
+                         if nonempty_dirs else kept,
+                         pcols, man, fs, nonempty_dirs, emptied=empty_dirs,
+                         rebase=rebase)
         return (parts, n_del)
     if nonempty_dirs:
-        written = overwrite_partitions(spark, path, kept,
-                                       partition_col, fs=fs,
-                                       commit="rename")
+        written = _swap_in_slice(spark, path, kept, partition_col, fs)
         if set(written) != set(nonempty_dirs):
             # partition-value type inference drifted from the on-disk
             # dir rendering (e.g. zero-padded string codes re-read as

@@ -622,10 +622,11 @@ def bloom_index(df: DataFrame, key_col: str, fpp: float = 0.01,
 
     NO FALSE NEGATIVES ever (a present key always probes true), which
     is what makes the dedup prefilter answer-preserving.  Mergeable:
-    bloom_merge ORs same-parameter indexes — the incremental-ingest
-    append path.  Hashes are xxhash64-derived (deterministic in-engine;
-    no oracle reproduces bloom BITS — they pin answers, which the
-    no-false-negative contract keeps hash-independent).
+    bloom_fold_segments ORs same-parameter indexes — the
+    incremental-ingest append path.  Hashes are xxhash64-derived
+    (deterministic in-engine; no oracle reproduces bloom BITS — they
+    pin answers, which the no-false-negative contract keeps
+    hash-independent).
     `params` = (m_bits, k, shards) copied from an EXISTING index row
     builds a merge-compatible delta index directly, skipping the
     sizing math and its count().
@@ -637,8 +638,8 @@ def bloom_index(df: DataFrame, key_col: str, fpp: float = 0.01,
             n = max(int(expected), 1)
         else:
             # auto-sizing floor: a bloom sized to exactly today's key
-            # count saturates after a few incremental bloom_merge
-            # appends (a streaming sink's first micro-batch would size
+            # count saturates after a few incremental appends
+            # (a streaming sink's first micro-batch would size
             # the index for that batch alone).  64Ki keys ≈ 78 KB —
             # free headroom for small sets; large sets dwarf the floor
             # and stay sized as counted.  Explicit `expected` is the
@@ -777,23 +778,6 @@ def bloom_fold_segments(segments: DataFrame) -> DataFrame:
         _fold,
         schema="shard long, words array<long>, m_bits int, k int, "
                "shards int, hash string")
-
-
-def bloom_merge(index_a: DataFrame, index_b: DataFrame) -> DataFrame:
-    """OR two same-parameter DENSE Bloom indexes shard-wise (the
-    incremental append: index the novel keys alone, merge into the
-    big index).  Stays a pure-JVM zip_with fold; mixed dense/sparse
-    segment lists go through bloom_fold_segments instead."""
-    u = index_a.unionByName(index_b)
-    return (u.groupBy("shard", "m_bits", "k", "shards", "hash")
-            .agg(F.aggregate(
-                F.collect_list("words"),
-                F.array_repeat(F.lit(0).cast("long"),
-                               (F.col("m_bits") / 32).cast("int")),
-                lambda acc, w: F.zip_with(acc, w,
-                                          lambda x, y: x.bitwiseOR(y)))
-                .alias("words"))
-            .select("shard", "words", "m_bits", "k", "shards", "hash"))
 
 
 def bloom_probe(df: DataFrame, index: DataFrame, key_col: str,

@@ -475,7 +475,7 @@ ROWS: list[tuple[str, list[dict]]] = [
                 "OR-mergeable, map-only probe) + answer-preserving "
                 "prefilter for exact incremental dedup",
              loc="dask_expr_spark/functions/sketches.py (bloom_index, "
-                 "bloom_probe, bloom_merge) + functions/dedup.py "
+                 "bloom_probe, bloom_fold_segments) + functions/dedup.py "
                  "(exact_dedup_against_bloom)",
              q=["dedup_bloom_incremental"],
              t="randomized no-false-negative + merge==union-build + "

@@ -184,71 +184,139 @@ def test_pointer_commit_zero_renames_on_fake_object_store(spark,
     assert table_moves == []            # os-level: none bypassed
 
 
+# Crash cases: every pointer mutation the flip serves, each on its
+# own bootstrapped table.  The delete rewrites part=a and empties
+# part=c; the compaction table holds 3 files per dir.  The value is
+# the number of dirs the mutation appends into (its pre-list calls).
+_CRASH_OPS = {"upsert": 2, "delete": 1, "compact": 3}
+
+
+def _mk_crash_table(spark, path, op):
+    if op == "compact":
+        pdf = pd.DataFrame({
+            "k": range(30),
+            "v": [float(i) for i in range(30)],
+            "part": [("a", "b", "c")[i % 3] for i in range(30)]})
+        for i in range(3):
+            (spark.createDataFrame(pdf.iloc[10 * i:10 * (i + 1)])
+             .coalesce(1).write.mode("append")
+             .partitionBy("part").parquet(path))
+    else:
+        _mk(spark, path)
+    M.manifest_bootstrap(path, "part")
+
+
+def _crash_op(spark, path, op):
+    from pyspark.sql import functions as F
+
+    if op == "upsert":
+        batch = spark.createDataFrame(pd.DataFrame(
+            {"k": [6, 7], "v": [1.5, 2.5], "part": ["a", "b"]}))
+        return M.upsert_partitioned(spark, path, batch, ["k"], "part",
+                                    commit="pointer")
+    if op == "delete":
+        pred = (F.col("part") == "c") | \
+            ((F.col("part") == "a") & (F.col("k") < 6))
+        return M.delete_where(spark, path, pred, "part",
+                              commit="pointer")
+    return M.compact_manifested(spark, path)
+
+
+def _disk_is_manifest(path):
+    """Every parquet file on disk is a committed file (no orphan)."""
+    fs = fsops.PosixFS()
+    on_disk = {os.path.join(path, d, f)
+               for d in M._list_part_dirs(fs, path, ["part"])
+               for f in M._part_files(fs, path, d)}
+    return on_disk == set(M.manifest_files(M.read_commit(path), path))
+
+
 def test_pointer_crash_before_flip_old_generation_live(spark,
                                                        tmp_path,
                                                        monkeypatch):
-    """Kill after the append but before the manifest flip: readers
-    still see the previous generation; the retry succeeds; vacuum
-    clears the orphaned files of the crashed attempt."""
-    path = str(tmp_path / "t")
-    _mk(spark, path)
-    M.manifest_bootstrap(path, "part")
-    before = _rows(M.read_manifested(spark, path))
-
+    """Kill after the append but before the manifest flip, for an
+    upsert, a delete_where and a compaction: readers still see the
+    previous generation and vacuum clears the orphaned files of the
+    crashed attempt.  The upsert's retry succeeds without adopting
+    the orphans."""
     def boom(path_, man_, fs_, **kw):
         raise RuntimeError("injected crash before flip")
 
-    monkeypatch.setattr(M, "_write_commit", boom)
-    batch = spark.createDataFrame(pd.DataFrame(
-        {"k": [2], "v": [77.0], "part": ["c"]}))
-    with pytest.raises(RuntimeError):
-        M.upsert_partitioned(spark, path, batch, ["k"], "part",
-                             commit="pointer")
-    monkeypatch.undo()
-    # old generation fully readable, crash invisible
-    assert _rows(M.read_manifested(spark, path)) == before
-    # retry lands; the orphans of the crashed attempt are not adopted
-    M.upsert_partitioned(spark, path, batch, ["k"], "part",
-                         commit="pointer")
-    after = _rows(M.read_manifested(spark, path))
-    assert (2, 77.0, "c") in after
-    assert len(after) == len(before)
-    # vacuum drops superseded + orphaned files; table unchanged
-    removed = M.vacuum_manifested(path)
-    assert removed > 0
-    assert _rows(M.read_manifested(spark, path)) == after
+    for op in _CRASH_OPS:
+        path = str(tmp_path / op)
+        _mk_crash_table(spark, path, op)
+        gen = M.read_commit(path)["generation"]
+        before = _rows(M.read_manifested(spark, path))
+        monkeypatch.setattr(M, "_write_commit", boom)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            _crash_op(spark, path, op)
+        monkeypatch.undo()
+        # old generation fully readable, crash invisible
+        assert M.read_commit(path)["generation"] == gen, op
+        assert _rows(M.read_manifested(spark, path)) == before, op
+        after = before
+        if op == "upsert":
+            # retry lands; the orphans of the crashed attempt are not
+            # adopted
+            _crash_op(spark, path, op)
+            after = _rows(M.read_manifested(spark, path))
+            assert (6, 1.5, "a") in after and (7, 2.5, "b") in after
+            assert len(after) == len(before)
+        # vacuum drops superseded + orphaned files; table unchanged
+        assert M.vacuum_manifested(path) > 0, op
+        assert _rows(M.read_manifested(spark, path)) == after, op
+        assert _disk_is_manifest(path), op
 
 
 def test_pointer_crash_mid_append_is_invisible(spark, tmp_path,
                                                monkeypatch):
-    """Kill during the append itself (no new files listed yet for some
-    dirs): manifest untouched, table readable, vacuum clears debris."""
-    path = str(tmp_path / "t")
-    _mk(spark, path)
-    M.manifest_bootstrap(path, "part")
-    before = _rows(M.read_manifested(spark, path))
-    gen = M.read_commit(path)["generation"]
-
+    """Kill during the commit itself, on the first post-append
+    listing, for an upsert, a delete_where and a compaction: manifest
+    untouched, table readable, vacuum clears the debris."""
     real = M._part_files
-    calls = []
+    for op, n_pre in _CRASH_OPS.items():
+        path = str(tmp_path / op)
+        _mk_crash_table(spark, path, op)
+        before = _rows(M.read_manifested(spark, path))
+        gen = M.read_commit(path)["generation"]
+        calls = []
 
-    def crash_on_postlist(fs, p, d):
-        # first len(dirs) calls are the pre-listing; crash on the
-        # first POST-append listing
-        calls.append(d)
-        if len(calls) > 2:      # 2 dirs pre-list, then crash on the
-            raise RuntimeError("injected crash mid-commit")  # post-list
-        return real(fs, p, d)
+        def crash_on_postlist(fs, p, d, n_pre=n_pre, calls=calls):
+            # the first n_pre calls are the pre-listing of the dirs
+            # the append writes into; crash on the first post-list
+            calls.append(d)
+            if len(calls) > n_pre:
+                raise RuntimeError("injected crash mid-commit")
+            return real(fs, p, d)
 
-    batch = spark.createDataFrame(pd.DataFrame(
-        {"k": [6, 7], "v": [1.5, 2.5], "part": ["a", "b"]}))
-    monkeypatch.setattr(M, "_part_files", crash_on_postlist)
-    with pytest.raises(RuntimeError):
-        M.upsert_partitioned(spark, path, batch, ["k"], "part",
-                             commit="pointer")
-    monkeypatch.undo()
-    assert M.read_commit(path)["generation"] == gen
-    assert _rows(M.read_manifested(spark, path)) == before
+        monkeypatch.setattr(M, "_part_files", crash_on_postlist)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            _crash_op(spark, path, op)
+        monkeypatch.undo()
+        assert len(calls) == n_pre + 1, op
+        assert M.read_commit(path)["generation"] == gen, op
+        assert _rows(M.read_manifested(spark, path)) == before, op
+        assert M.vacuum_manifested(path) > 0, op
+        assert _rows(M.read_manifested(spark, path)) == before, op
+        assert _disk_is_manifest(path), op
+
+
+def test_write_commit_called_only_by_bootstrap_and_flip():
+    """Every pointer-table mutation commits through _append_and_flip:
+    the generation claim (_write_commit) has exactly two call sites,
+    manifest_bootstrap's generation 0 and the flip.  A parse of the
+    module source, no Spark."""
+    import ast
+
+    tree = ast.parse(open(M.__file__).read())
+    callers = []
+    for fn in tree.body:
+        for node in ast.walk(fn):
+            if (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Name)
+                    and node.func.id == "_write_commit"):
+                callers.append(getattr(fn, "name", None))
+    assert sorted(callers) == ["_append_and_flip", "manifest_bootstrap"]
 
 
 def test_rename_protocol_refuses_non_atomic_fs(spark, tmp_path):
@@ -754,7 +822,7 @@ def test_concurrent_commit_interleaved_loser_raises(spark, tmp_path):
     fs = fsops.PosixFS()
     with pytest.raises(M.ConcurrentCommitError, match="generation 1"):
         M._append_and_flip(spark, path, batch_b, "part", man_b, fs,
-                           rebase=False)
+                           ["part=b"], rebase=False)
 
     got = _rows(M.read_manifested(spark, path))
     assert (0, 111.0, "a") in got             # A's row committed
@@ -1313,7 +1381,8 @@ def test_disjoint_rebase_both_land(spark, tmp_path):
 
     batch_b = spark.createDataFrame(pd.DataFrame(
         {"k": [1], "v": [222.0], "part": ["b"]}))
-    M._append_and_flip(spark, path, batch_b, "part", man_b, fs)
+    M._append_and_flip(spark, path, batch_b, "part", man_b, fs,
+                           ["part=b"])
 
     man = M.read_commit(path)
     assert man["generation"] == 2             # rebased, not recomputed
@@ -1354,7 +1423,8 @@ def test_rebase_chain_two_intervening_winners(spark, tmp_path):
                              commit="pointer")
     batch_b = spark.createDataFrame(pd.DataFrame(
         {"k": [1], "v": [222.0], "part": ["b"]}))
-    M._append_and_flip(spark, path, batch_b, "part", man_b, fs)
+    M._append_and_flip(spark, path, batch_b, "part", man_b, fs,
+                           ["part=b"])
 
     assert M.read_commit(path)["generation"] == 3
     got = _rows(M.read_manifested(spark, path))
@@ -1378,7 +1448,8 @@ def test_rebase_refuses_winner_without_touched(spark, tmp_path):
     batch_b = spark.createDataFrame(pd.DataFrame(
         {"k": [1], "v": [222.0], "part": ["b"]}))
     with pytest.raises(M.ConcurrentCommitError, match="generation 1"):
-        M._append_and_flip(spark, path, batch_b, "part", man_b, fs)
+        M._append_and_flip(spark, path, batch_b, "part", man_b, fs,
+                           ["part=b"])
 
 
 def test_rebase_delete_where_vs_upsert_disjoint(spark, tmp_path,
@@ -1439,7 +1510,8 @@ def test_rebase_contention_cap(spark, tmp_path, monkeypatch):
     batch_b = spark.createDataFrame(pd.DataFrame(
         {"k": [1], "v": [222.0], "part": ["b"]}))
     with pytest.raises(M.ConcurrentCommitError, match="contention"):
-        M._append_and_flip(spark, path, batch_b, "part", man_b, fs)
+        M._append_and_flip(spark, path, batch_b, "part", man_b, fs,
+                           ["part=b"])
 
 
 # ------------------- round 10: generation time travel + claim retention

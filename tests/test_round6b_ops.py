@@ -17,7 +17,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dask_expr_spark.functions.sketches import (
-    bloom_index, bloom_merge, bloom_probe, cms_estimate, cms_merge,
+    bloom_fold_segments, bloom_index, bloom_probe, cms_estimate, cms_merge,
     cms_rollup, kmv_estimate, kmv_intersect, kmv_merge, kmv_rollup)
 
 
@@ -181,11 +181,11 @@ def test_bloom_merge_equals_union_build(spark):
     n_union = 2000
     ia = bloom_index(a, "k", fpp=0.01, expected=n_union)
     ib = bloom_index(b, "k", fpp=0.01, expected=n_union)
-    merged = bloom_merge(ia, ib)
+    merged = bloom_fold_segments(ia.unionByName(ib))
     direct = bloom_index(a.unionByName(b), "k", fpp=0.01,
                          expected=n_union)
-    # md5 positions are deterministic, so OR-merge must produce the
-    # EXACT bitmap of the one-shot union build
+    # hash positions are deterministic, so folding the two indexes
+    # must produce the EXACT bitmap of the one-shot union build
     ma = {r["shard"]: list(r["words"]) for r in merged.collect()}
     md = {r["shard"]: list(r["words"]) for r in direct.collect()}
     assert ma == md
