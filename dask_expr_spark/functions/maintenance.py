@@ -237,9 +237,10 @@ def _swap_in_slice(spark: SparkSession, path: str, df: DataFrame,
     """The rename protocol's one write path (upsert_partitioned,
     overwrite_partitions, delete_where's rewrite): `df` writes to
     `<path>__new` while the table is intact, its `col=` dirs are
-    listed, `before_swap` runs (the caller's pre-commit barrier), the
-    dirs swap in via rename-aside (_swap_partition_dirs) and the zone
-    map refreshes.  Returns the dir names swapped in."""
+    listed, `before_swap` runs (the caller's pre-commit barrier) and
+    the dirs swap in via rename-aside (_swap_partition_dirs).  The
+    caller refreshes the zone map after its last filesystem change.
+    Returns the dir names swapped in."""
     new_root = path.rstrip("/") + "__new"
     fs.delete(new_root)
     (_merge_write_layout(spark, path, df, [partition_col], fs)
@@ -249,7 +250,6 @@ def _swap_in_slice(spark: SparkSession, path: str, df: DataFrame,
     if before_swap is not None:
         before_swap()
     _swap_partition_dirs(path, new_root, dirs, fs=fs)
-    _refresh_zonemap_if_present(spark, path, fs)
     return dirs
 
 
@@ -1341,6 +1341,7 @@ def upsert_partitioned(spark: SparkSession, path: str, updates: DataFrame,
         if commit == "rename":
             _swap_in_slice(spark, path, merged, partition_col, fs,
                            before_swap=bloom_committed)
+            _refresh_zonemap_if_present(spark, path, fs)
             return parts
         # without order_col the merge drops no update row, so the
         # merged frame's partition set is exactly `parts` — no second
@@ -2210,7 +2211,9 @@ def overwrite_partitions(spark: SparkSession, path: str, df: DataFrame,
         return sorted(
             manifest_bootstrap(path, partition_col, fs=fs)["partitions"])
     if commit == "rename":
-        return _swap_in_slice(spark, path, df, partition_col, fs)
+        dirs = _swap_in_slice(spark, path, df, partition_col, fs)
+        _refresh_zonemap_if_present(spark, path, fs)
+        return dirs
     if man is None:
         man = manifest_bootstrap(path, partition_col, fs=fs)
     dirs = _value_dirs(pcols, _partition_values(df, pcols))

@@ -4,24 +4,40 @@ DuckDB oracle SQL string. The driver runs both sides at sf0.01 and
 hash-compares (see repo-root __spark_entry__.py, which also orders the
 registry for the correctness run's check window).
 
+Every query registers with ``@query(name, sql)`` from ``_util``; a
+name registers once.  One module per family:
+
+- ``tpch``, ``tpch2``-``tpch4``: TPC-H style joins and aggregations;
+- ``relational``: reshape, grouping sets and set operations;
+- ``ops``: row ops, reductions, groupby and partitioning invariance;
+- ``windows``: ordered and window ops (shift, cumsum, rolling,
+  expanding, ffill, as-of joins);
+- ``events``: event analytics (funnels, retention, interval joins);
+- ``io``: writer/reader round-trips and literal/generated sources;
+- ``text``, ``dedup``, ``similarity``: text processing, exact and near
+  dedup, ANN and multimodal;
+- ``approx``, ``sampling_q``, ``stats``: sketches, sampling and splits,
+  profiling/validation/drift;
+- ``streaming_q``: streaming sources and sinks;
+- ``tables``: the commit layer (upsert, delete, compaction, snapshots,
+  zone maps, SCD-2, CDC, pointer commits).
+
 Float outputs are rounded identically on both sides so the
 order-insensitive value-hash is stable across engines.
 """
 
 from __future__ import annotations
 
+import importlib
+import pkgutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ._util import REGISTRY
+
 
 def collect_queries() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]]:
-    from . import approx, dedup, events, ops, relational, round3, round3b, round3c, round4, round5, round5b, round6, round6b, round7, round8, round9, round10, sampling_q, similarity, stats, streaming_q, text, tpch, tpch2, tpch3, tpch4, windows
-
-    out: dict = {}
-    for mod in (round10, round9, round8, round7, round6b, round6, round5b, round5, tpch4, round4, round3, round3b, round3c, tpch, tpch2, tpch3, ops, approx, relational, windows, events, text, dedup, similarity, streaming_q, stats, sampling_q):
-        for name, pair in mod.QUERIES.items():
-            if name in out:
-                raise ValueError(f"duplicate query name {name}")
-            out[name] = pair
-    return out
+    for mod in pkgutil.iter_modules(__path__):
+        importlib.import_module(f"{__name__}.{mod.name}")
+    return dict(REGISTRY)

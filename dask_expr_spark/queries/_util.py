@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import SparkSession
 
@@ -10,6 +11,21 @@ from pyspark.sql import functions as F
 
 from ..collection import DataFrame
 from ..sources.io import read_parquet
+
+# name -> (query fn, DuckDB oracle SQL or None), filled by @query
+REGISTRY: dict[str, tuple[Callable, str | None]] = {}
+
+
+def query(name: str, sql: str | None):
+    """Register the decorated ``fn(spark, sf_dir)`` as query `name`
+    with `sql` as its DuckDB oracle (None where the operator is not
+    SQL-expressible).  A name registers once."""
+    def deco(fn):
+        if name in REGISTRY:
+            raise ValueError(f"duplicate query name {name}")
+        REGISTRY[name] = (fn, sql)
+        return fn
+    return deco
 
 
 def tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

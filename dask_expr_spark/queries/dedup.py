@@ -1,5 +1,7 @@
 """Deduplication queries over the documents table
-(functions/dedup.py is the implementation; north-star ops).
+(functions/dedup.py is the implementation; north-star ops),
+incl. duplicate-group resolution and incremental dedup against
+persistent MinHash, hash and Bloom indexes.
 
 dedup_exact / ngram_jaccard are hash-checked against DuckDB.
 MinHash-LSH and SimHash use Spark-specific xxhash64 so they get the
@@ -12,20 +14,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..functions import dedup as DD
-from ._util import tbl
-
-
-def dedup_exact_docs(spark, sf_dir):
-    """exact dedup via md5 hash-groupBy (functions/dedup.py
-    exact_dup_groups) — summary stats."""
-    docs = tbl(spark, sf_dir, "documents")
-    groups = DD.exact_dup_groups(docs.to_spark(), "text", "doc_id")
-    return groups.agg(
-        F.count(F.lit(1)).alias("n_distinct_texts"),
-        F.sum("n_docs").alias("n_docs"),
-        F.sum(F.when(F.col("n_docs") > 1, 1).otherwise(0)).cast("long").alias("n_dup_groups"),
-        F.max("n_docs").alias("max_group"),
-    )
+from ._util import query, tbl
 
 
 DEDUP_EXACT_SQL = """
@@ -41,17 +30,18 @@ FROM g
 """
 
 
-def dedup_ngram_jaccard(spark, sf_dir):
-    """exact n-gram (3-shingle) Jaccard similarity join, J >= 0.8
-    (functions/dedup.py ngram_jaccard_pairs). Finds the planted
-    near-duplicates in the documents table."""
+@query("dedup_exact_docs", DEDUP_EXACT_SQL)
+def dedup_exact_docs(spark, sf_dir):
+    """exact dedup via md5 hash-groupBy (functions/dedup.py
+    exact_dup_groups) — summary stats."""
     docs = tbl(spark, sf_dir, "documents")
-    pairs = DD.ngram_jaccard_pairs(
-        docs.to_spark(), "doc_id", "text", k=3, threshold=0.8, max_shingle_freq=None
+    groups = DD.exact_dup_groups(docs.to_spark(), "text", "doc_id")
+    return groups.agg(
+        F.count(F.lit(1)).alias("n_distinct_texts"),
+        F.sum("n_docs").alias("n_docs"),
+        F.sum(F.when(F.col("n_docs") > 1, 1).otherwise(0)).cast("long").alias("n_dup_groups"),
+        F.max("n_docs").alias("max_group"),
     )
-    return pairs.select(
-        "id_a", "id_b", F.round(F.col("jaccard"), 6).alias("jaccard")
-    ).orderBy("id_a", "id_b")
 
 
 DEDUP_JACCARD_SQL = """
@@ -77,29 +67,18 @@ ORDER BY id_a, id_b
 """
 
 
-def dedup_minhash_lsh(spark, sf_dir):
-    """MinHash(32 perms) + LSH(8 bands × 4 rows) near-dup pipeline
-    (functions/dedup.py minhash_dedup_pairs), hash-checked via a
-    CONTAINMENT oracle: the output is the exact-Jaccard J ≥ 0.9 pairs
-    that the LSH candidate set covers. The hash functions are fixed,
-    so coverage is deterministic — any LSH recall miss drops a row and
-    the driver's hash flags it. Exact jaccard values come from the
-    (SQL-expressible) exact join, so DuckDB reproduces the full
-    result; at (8 bands × 4 rows) a J ≥ 0.9 pair collides with
-    probability 1−(1−0.9⁴)⁸ ≈ 0.9998 per pair, and coverage is
-    verified complete on this corpus."""
-    docs = tbl(spark, sf_dir, "documents").to_spark()
-    cand = DD.minhash_dedup_pairs(
-        docs, "doc_id", "text", k=3, num_perm=32, bands=8, threshold=0.7
-    ).select("id_a", "id_b")
-    exact = DD.ngram_jaccard_pairs(
-        docs, "doc_id", "text", k=3, threshold=0.9, max_shingle_freq=None
+@query("dedup_ngram_jaccard", DEDUP_JACCARD_SQL)
+def dedup_ngram_jaccard(spark, sf_dir):
+    """exact n-gram (3-shingle) Jaccard similarity join, J >= 0.8
+    (functions/dedup.py ngram_jaccard_pairs). Finds the planted
+    near-duplicates in the documents table."""
+    docs = tbl(spark, sf_dir, "documents")
+    pairs = DD.ngram_jaccard_pairs(
+        docs.to_spark(), "doc_id", "text", k=3, threshold=0.8, max_shingle_freq=None
     )
-    return (
-        exact.join(cand, ["id_a", "id_b"], "left_semi")
-        .select("id_a", "id_b", F.round(F.col("jaccard"), 6).alias("jaccard"))
-        .orderBy("id_a", "id_b")
-    )
+    return pairs.select(
+        "id_a", "id_b", F.round(F.col("jaccard"), 6).alias("jaccard")
+    ).orderBy("id_a", "id_b")
 
 
 DEDUP_MINHASH_SQL = """
@@ -125,21 +104,28 @@ ORDER BY id_a, id_b
 """
 
 
-def dedup_simhash(spark, sf_dir):
-    """SimHash near-dup candidates — shared 15-bit chunk + Hamming ≤ 12
-    over a 60-bit signature (functions/dedup.py simhash_bucket_pairs).
-    Run with the md5-derived token hash (md5_token_hash) so DuckDB can
-    reproduce the ENTIRE pipeline — signature, chunk buckets, Hamming —
-    and the driver hash-checks it end-to-end; production keeps the
-    cheaper xxhash64 default (recall-tested in tests/test_dedup.py)."""
+@query("dedup_minhash_lsh", DEDUP_MINHASH_SQL)
+def dedup_minhash_lsh(spark, sf_dir):
+    """MinHash(32 perms) + LSH(8 bands × 4 rows) near-dup pipeline
+    (functions/dedup.py minhash_dedup_pairs), hash-checked via a
+    CONTAINMENT oracle: the output is the exact-Jaccard J ≥ 0.9 pairs
+    that the LSH candidate set covers. The hash functions are fixed,
+    so coverage is deterministic — any LSH recall miss drops a row and
+    the driver's hash flags it. Exact jaccard values come from the
+    (SQL-expressible) exact join, so DuckDB reproduces the full
+    result; at (8 bands × 4 rows) a J ≥ 0.9 pair collides with
+    probability 1−(1−0.9⁴)⁸ ≈ 0.9998 per pair, and coverage is
+    verified complete on this corpus."""
     docs = tbl(spark, sf_dir, "documents").to_spark()
-    pairs = DD.simhash_bucket_pairs(
-        docs, "doc_id", "text", chunk_bits=15, num_bits=60,
-        token_hash=DD.md5_token_hash,
+    cand = DD.minhash_dedup_pairs(
+        docs, "doc_id", "text", k=3, num_perm=32, bands=8, threshold=0.7
+    ).select("id_a", "id_b")
+    exact = DD.ngram_jaccard_pairs(
+        docs, "doc_id", "text", k=3, threshold=0.9, max_shingle_freq=None
     )
     return (
-        pairs.filter(F.col("hamming") <= 12)
-        .select("id_a", "id_b", F.col("hamming").cast("long").alias("hamming"))
+        exact.join(cand, ["id_a", "id_b"], "left_semi")
+        .select("id_a", "id_b", F.round(F.col("jaccard"), 6).alias("jaccard"))
         .orderBy("id_a", "id_b")
     )
 
@@ -178,26 +164,24 @@ ORDER BY id_a, id_b
 """
 
 
-QUERIES = {
-    "dedup_exact_docs": (dedup_exact_docs, DEDUP_EXACT_SQL),
-    "dedup_ngram_jaccard": (dedup_ngram_jaccard, DEDUP_JACCARD_SQL),
-    "dedup_minhash_lsh": (dedup_minhash_lsh, DEDUP_MINHASH_SQL),
-    "dedup_simhash": (dedup_simhash, DEDUP_SIMHASH_SQL),
-}
-
-
-def dedup_substring_spans(spark, sf_dir):
-    """exact substring-duplication scan (functions/dedup.py
-    duplicated_spans; Lee et al. 2021 ExactSubstr): 12-token windows
-    shared by >= 2 docs, overlapping windows merged per doc into spans.
-    Output: per-doc duplicated-token totals for the docs hit, bucketed
-    summary stable under hashing."""
+@query("dedup_simhash", DEDUP_SIMHASH_SQL)
+def dedup_simhash(spark, sf_dir):
+    """SimHash near-dup candidates — shared 15-bit chunk + Hamming ≤ 12
+    over a 60-bit signature (functions/dedup.py simhash_bucket_pairs).
+    Run with the md5-derived token hash (md5_token_hash) so DuckDB can
+    reproduce the ENTIRE pipeline — signature, chunk buckets, Hamming —
+    and the driver hash-checks it end-to-end; production keeps the
+    cheaper xxhash64 default (recall-tested in tests/test_dedup.py)."""
     docs = tbl(spark, sf_dir, "documents").to_spark()
-    spans = DD.duplicated_spans(docs, "doc_id", "text", k=12)
-    return (spans.filter(F.col("dup_tokens") > 0)
-            .select(F.col("id").alias("doc_id"), "total_tokens",
-                    "dup_tokens", "n_spans")
-            .orderBy("doc_id"))
+    pairs = DD.simhash_bucket_pairs(
+        docs, "doc_id", "text", chunk_bits=15, num_bits=60,
+        token_hash=DD.md5_token_hash,
+    )
+    return (
+        pairs.filter(F.col("hamming") <= 12)
+        .select("id_a", "id_b", F.col("hamming").cast("long").alias("hamming"))
+        .orderBy("id_a", "id_b")
+    )
 
 
 SUBSTRING_SPANS_SQL = """
@@ -239,9 +223,76 @@ FROM per_doc p JOIN documents doc ON doc.doc_id = p.doc_id
 ORDER BY p.doc_id
 """
 
-QUERIES["dedup_substring_spans"] = (dedup_substring_spans, SUBSTRING_SPANS_SQL)
+
+@query("dedup_substring_spans", SUBSTRING_SPANS_SQL)
+def dedup_substring_spans(spark, sf_dir):
+    """exact substring-duplication scan (functions/dedup.py
+    duplicated_spans; Lee et al. 2021 ExactSubstr): 12-token windows
+    shared by >= 2 docs, overlapping windows merged per doc into spans.
+    Output: per-doc duplicated-token totals for the docs hit, bucketed
+    summary stable under hashing."""
+    docs = tbl(spark, sf_dir, "documents").to_spark()
+    spans = DD.duplicated_spans(docs, "doc_id", "text", k=12)
+    return (spans.filter(F.col("dup_tokens") > 0)
+            .select(F.col("id").alias("doc_id"), "total_tokens",
+                    "dup_tokens", "n_spans")
+            .orderBy("doc_id"))
 
 
+# -- duplicate-pair → duplicate-group resolution ------------------------
+COMPONENTS_SQL = """
+WITH RECURSIVE ds AS (
+  SELECT DISTINCT doc_id AS id, unnest(
+    CASE WHEN len(string_split(text,' ')) >= 3
+         THEN list_transform(generate_series(1, len(string_split(text,' ')) - 2),
+                             i -> array_to_string(string_split(text,' ')[i:i+2], ' '))
+         ELSE [] END) AS sh
+  FROM documents
+),
+sz AS (SELECT id, count(*) AS n FROM ds GROUP BY id),
+inter AS (
+  SELECT a.id AS id_a, b.id AS id_b, count(*) AS i
+  FROM ds a JOIN ds b ON a.sh = b.sh AND a.id < b.id
+  GROUP BY 1, 2
+),
+pairs AS (
+  SELECT id_a, id_b FROM inter JOIN sz x ON x.id = id_a JOIN sz y ON y.id = id_b
+  WHERE i * 1.0 / (x.n + y.n - i) >= 0.9
+),
+sym AS (SELECT id_a AS a, id_b AS b FROM pairs
+        UNION SELECT id_b, id_a FROM pairs),
+reach AS (
+  SELECT a AS node, b AS r FROM sym
+  UNION
+  SELECT re.node, s.b FROM reach re JOIN sym s ON s.a = re.r
+)
+SELECT node AS doc_id, least(node, min(r)) AS group_root
+FROM reach GROUP BY node ORDER BY doc_id
+"""
+
+
+@query("dedup_connected_groups", COMPONENTS_SQL)
+def dedup_connected_groups(spark, sf_dir):
+    """pairs → groups: exact-Jaccard duplicate pairs resolved into
+    connected components (functions/dedup.py connected_components,
+    min-label propagation) — each doc labeled with the smallest id in
+    its duplicate cluster; the oracle recomputes the transitive
+    closure with a recursive CTE."""
+    from ..functions import dedup as DD
+
+    docs = tbl(spark, sf_dir, "documents").to_spark()
+    pairs = DD.ngram_jaccard_pairs(
+        docs, "doc_id", "text", k=3, threshold=0.9, max_shingle_freq=None
+    )
+    comp = DD.connected_components(pairs.select("id_a", "id_b"))
+    return (
+        comp.select(F.col("id").alias("doc_id"),
+                    F.col("comp").alias("group_root"))
+        .orderBy("doc_id")
+    )
+
+
+@query("dedup_connected_groups_star", COMPONENTS_SQL)
 def dedup_connected_groups_star(spark, sf_dir):
     """same pairs->groups resolution as dedup_connected_groups but via
     the large-star/small-star algorithm (functions/dedup.py
@@ -258,12 +309,6 @@ def dedup_connected_groups_star(spark, sf_dir):
                     F.col("comp").alias("group_root"))
         .orderBy("doc_id")
     )
-
-
-from .round3 import COMPONENTS_SQL as _COMPONENTS_SQL  # noqa: E402
-
-QUERIES["dedup_connected_groups_star"] = (
-    dedup_connected_groups_star, _COMPONENTS_SQL)
 
 
 CHUNK_MINHASH_SQL = """
@@ -311,6 +356,7 @@ GROUP BY 1, 2 ORDER BY doc_a, doc_b
 """
 
 
+@query("dedup_chunk_minhash", CHUNK_MINHASH_SQL)
 def dedup_chunk_minhash(spark, sf_dir):
     """PARAGRAPH/CHUNK-level near-dedup (C4/RefinedWeb-style): docs are
     chunked (chunk_text 32 tokens, overlap 8), each chunk gets a
@@ -382,4 +428,204 @@ def dedup_chunk_minhash(spark, sf_dir):
     )
 
 
-QUERIES["dedup_chunk_minhash"] = (dedup_chunk_minhash, CHUNK_MINHASH_SQL)
+# -- end-to-end near-dedup RESOLUTION: pairs → groups → canonical corpus
+#    (keep the min doc_id per duplicate group, drop the rest) ----------
+DEDUP_RESOLVE_SQL = """
+WITH RECURSIVE pairs AS (
+  SELECT a.doc_id AS id_a, b.doc_id AS id_b
+  FROM documents a JOIN documents b
+    ON md5(lower(trim(a.text))) = md5(lower(trim(b.text)))
+   AND a.doc_id < b.doc_id
+),
+edges AS (
+  SELECT id_a AS s, id_b AS d FROM pairs
+  UNION SELECT id_b, id_a FROM pairs
+),
+reach(s, d) AS (
+  SELECT s, d FROM edges
+  UNION SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s
+),
+comp AS (
+  SELECT s AS id, least(s, min(d)) AS root FROM reach GROUP BY s
+),
+dropped AS (SELECT id FROM comp WHERE id <> root)
+SELECT count(*) AS kept,
+       (SELECT count(*) FROM dropped) AS removed
+FROM documents WHERE doc_id NOT IN (SELECT id FROM dropped)
+"""
+
+
+@query("dedup_resolve_corpus", DEDUP_RESOLVE_SQL)
+def dedup_resolve_corpus(spark, sf_dir):
+    """full dedup pipeline: exact-hash pairs → connected components →
+    anti-join non-canonical docs out of the corpus (the resolution
+    step a training pipeline runs after candidate generation)."""
+    from ..functions.dedup import connected_components
+    docs = tbl(spark, sf_dir, "documents").to_spark()
+    key = F.md5(F.lower(F.trim(F.col("text"))))
+    a = docs.select(F.col("doc_id").alias("id_a"), key.alias("__k"))
+    b = docs.select(F.col("doc_id").alias("id_b"), key.alias("__k"))
+    pairs = (a.join(b, "__k").where(F.col("id_a") < F.col("id_b"))
+             .select("id_a", "id_b"))
+    comp = connected_components(pairs)
+    dropped = (comp.filter(F.col("id") != F.col("comp"))
+               .select("id").withColumn("__d", F.lit(1)))
+    flagged = docs.join(dropped, docs["doc_id"] == dropped["id"], "left")
+    d = F.coalesce(F.col("__d"), F.lit(0))
+    return flagged.agg(
+        (F.count(F.lit(1)) - F.sum(d)).alias("kept"),
+        F.sum(d).alias("removed"))
+
+
+DEDUP_INCREMENTAL_SQL = """
+WITH ds AS (
+  SELECT DISTINCT doc_id AS id, unnest(
+    CASE WHEN len(string_split(text,' ')) >= 3
+         THEN list_transform(generate_series(1, len(string_split(text,' ')) - 2),
+                             i -> array_to_string(string_split(text,' ')[i:i+2], ' '))
+         ELSE [] END) AS sh
+  FROM documents
+),
+sz AS (SELECT id, count(*) AS n FROM ds GROUP BY id),
+inter AS (
+  SELECT a.id AS id_a, b.id AS id_b, count(*) AS i
+  FROM ds a JOIN ds b ON a.sh = b.sh AND a.id < b.id
+  GROUP BY 1, 2
+),
+pairs AS (
+  SELECT id_a, id_b, round(i * 1.0 / (x.n + y.n - i), 6) AS jaccard
+  FROM inter JOIN sz x ON x.id = id_a JOIN sz y ON y.id = id_b
+  WHERE i * 1.0 / (x.n + y.n - i) >= 0.9
+)
+SELECT CASE WHEN id_a % 10 = 0 THEN id_a ELSE id_b END AS id_new,
+       CASE WHEN id_a % 10 = 0 THEN id_b ELSE id_a END AS id_index,
+       jaccard
+FROM pairs
+WHERE (id_a % 10 = 0) <> (id_b % 10 = 0)
+ORDER BY id_new, id_index
+"""
+
+
+@query("dedup_incremental_minhash", DEDUP_INCREMENTAL_SQL)
+def dedup_incremental_minhash(spark, sf_dir):
+    """Incremental dedup (functions/dedup.py minhash_index /
+    minhash_dedup_against): the corpus is split deterministically into
+    an indexed 90% (doc_id % 10 != 0) and a 'new batch' 10%; the batch
+    is deduped against the index ONLY — no self-join over the combined
+    corpus, old text never re-read.  Containment oracle (the
+    dedup_minhash_lsh pattern): output = exact cross-corpus J ≥ 0.9
+    pairs covered by the incremental candidates; any recall miss drops
+    a row and flips the driver hash."""
+    from ..functions import dedup as DD
+
+    docs = tbl(spark, sf_dir, "documents").to_spark()
+    old = docs.where(F.col("doc_id") % 10 != 0)
+    new = docs.where(F.col("doc_id") % 10 == 0)
+    idx_bands, idx_sigs = DD.minhash_index(old, "doc_id", "text",
+                                           k=3, num_perm=32, bands=8)
+    cand = DD.minhash_dedup_against(
+        new, idx_bands, idx_sigs, "doc_id", "text",
+        k=3, num_perm=32, bands=8, threshold=0.7
+    ).select(F.col("id_new"), F.col("id_index"))
+    exact = DD.ngram_jaccard_pairs(
+        docs, "doc_id", "text", k=3, threshold=0.9, max_shingle_freq=None)
+    # exact pairs restricted to (new x old), oriented as (new, old)
+    cross = exact.where(
+        ((F.col("id_a") % 10 == 0) & (F.col("id_b") % 10 != 0))
+        | ((F.col("id_b") % 10 == 0) & (F.col("id_a") % 10 != 0)))
+    oriented = cross.select(
+        F.when(F.col("id_a") % 10 == 0, F.col("id_a"))
+        .otherwise(F.col("id_b")).alias("id_new"),
+        F.when(F.col("id_a") % 10 == 0, F.col("id_b"))
+        .otherwise(F.col("id_a")).alias("id_index"),
+        F.round(F.col("jaccard"), 6).alias("jaccard"))
+    return (oriented.join(cand, ["id_new", "id_index"], "left_semi")
+            .orderBy("id_new", "id_index"))
+
+
+# -- exact INCREMENTAL dedup vs a persistent hash index (functions/
+#    dedup.py exact_hash_index / exact_dedup_against) — the exact
+#    companion to dedup_incremental_minhash; output is hash-exact ----
+EXACT_INCR_SQL = """
+WITH idx AS (
+  SELECT md5(text) AS text_hash, min(doc_id) AS keep_id
+  FROM documents WHERE doc_id % 10 <> 0 GROUP BY 1
+),
+batch AS (
+  SELECT doc_id AS id, md5(text) AS text_hash
+  FROM documents WHERE doc_id % 10 = 0
+),
+first AS (SELECT text_hash, min(id) AS bk FROM batch GROUP BY text_hash)
+SELECT b.id, b.text_hash,
+       COALESCE(i.keep_id,
+                CASE WHEN b.id <> f.bk THEN f.bk END) AS dup_of
+FROM batch b
+JOIN first f ON b.text_hash = f.text_hash
+LEFT JOIN idx i ON b.text_hash = i.text_hash
+ORDER BY b.id
+"""
+
+
+@query("dedup_exact_incremental", EXACT_INCR_SQL)
+def dedup_exact_incremental(spark, sf_dir):
+    """index 90% of the corpus once (exact_hash_index), dedupe the
+    'new batch' 10% against it (exact_dedup_against) — dup_of points
+    at the index representative, the batch's own first occurrence for
+    intra-batch dups, NULL for novel text.  The whole answer is
+    hash-exact (md5 is identical across engines)."""
+    from ..functions import dedup as DD
+
+    docs = tbl(spark, sf_dir, "documents").to_spark()
+    index = DD.exact_hash_index(
+        docs.where(F.col("doc_id") % 10 != 0), "doc_id", "text")
+    batch = docs.where(F.col("doc_id") % 10 == 0)
+    return (DD.exact_dedup_against(batch, index, "doc_id", "text")
+            .orderBy("id"))
+
+
+# -- Bloom-prefiltered exact incremental dedup (sketches.bloom_index +
+#    dedup.exact_dedup_against_bloom): the oracle is the SAME answer as
+#    the unfiltered path — Bloom filters have no false negatives, so
+#    the prefilter is answer-preserving; any false-negative bug flips
+#    a dup_of to NULL and the hash catches it --------------------------
+BLOOM_INCR_SQL = """
+WITH idx AS (
+  SELECT md5(text) AS text_hash, min(doc_id) AS keep_id
+  FROM documents WHERE doc_id % 10 <> 0 GROUP BY 1
+),
+batch AS (
+  SELECT doc_id AS id, md5(text) AS text_hash
+  FROM documents WHERE doc_id % 10 = 0
+),
+first AS (SELECT text_hash, min(id) AS bk FROM batch GROUP BY text_hash)
+SELECT b.id, b.text_hash,
+       COALESCE(i.keep_id,
+                CASE WHEN b.id <> f.bk THEN f.bk END) AS dup_of
+FROM batch b
+JOIN first f ON b.text_hash = f.text_hash
+LEFT JOIN idx i ON b.text_hash = i.text_hash
+ORDER BY b.id
+"""
+
+
+@query("dedup_bloom_incremental", BLOOM_INCR_SQL)
+def dedup_bloom_incremental(spark, sf_dir):
+    from ..functions import dedup as DD
+    from ..functions.sketches import bloom_index
+
+    docs = tbl(spark, sf_dir, "documents").to_spark()
+    # materialize the index: in the incremental pattern it IS a stored
+    # table (exact_hash_index docstring) — as a lazy plan it would be
+    # re-derived by the bloom sizing count, the bitmap build, AND the
+    # join (measured 3x at the x1000 probe: 185 s -> 83 s).
+    # localCheckpoint rather than persist(): persist registers the
+    # subtree in the session cache manager, which silently substitutes
+    # InMemoryRelation into OTHER queries' identical subtrees
+    index = DD.exact_hash_index(
+        docs.where(F.col("doc_id") % 10 != 0), "doc_id", "text") \
+        .localCheckpoint(eager=False)
+    bloom = bloom_index(index, "text_hash", fpp=0.01)
+    return (DD.exact_dedup_against_bloom(
+        docs.where(F.col("doc_id") % 10 == 0), index, bloom,
+        "doc_id", "text")
+        .orderBy("id"))

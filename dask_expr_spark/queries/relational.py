@@ -6,9 +6,23 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ._util import dec_sum, dec_sum_sql, tbl
+from ._util import dec_sum, dec_sum_sql, query, tbl
 
 
+MELT_SQL = f"""
+WITH long AS (
+  SELECT l_returnflag, 'l_quantity' AS measure, l_quantity AS val FROM lineitem
+  UNION ALL
+  SELECT l_returnflag, 'l_discount', l_discount FROM lineitem
+  UNION ALL
+  SELECT l_returnflag, 'l_tax', l_tax FROM lineitem
+)
+SELECT l_returnflag, measure, count(val) AS n, {dec_sum_sql('val', 2)} AS total
+FROM long GROUP BY 1, 2 ORDER BY 1, 2
+"""
+
+
+@query("melt_measures", MELT_SQL)
 def melt_measures(spark, sf_dir):
     """unpivot lineitem measures → long form → agg per (flag, variable)
     (reference: melt, _collection.py:4047)."""
@@ -27,19 +41,16 @@ def melt_measures(spark, sf_dir):
     )
 
 
-MELT_SQL = f"""
-WITH long AS (
-  SELECT l_returnflag, 'l_quantity' AS measure, l_quantity AS val FROM lineitem
-  UNION ALL
-  SELECT l_returnflag, 'l_discount', l_discount FROM lineitem
-  UNION ALL
-  SELECT l_returnflag, 'l_tax', l_tax FROM lineitem
-)
-SELECT l_returnflag, measure, count(val) AS n, {dec_sum_sql('val', 2)} AS total
-FROM long GROUP BY 1, 2 ORDER BY 1, 2
+ROLLUP_SQL = f"""
+SELECT year(o_orderdate) AS y, o_orderstatus,
+       count(o_orderkey) AS n, {dec_sum_sql('o_totalprice', 2)} AS total
+FROM orders
+GROUP BY ROLLUP (year(o_orderdate), o_orderstatus)
+ORDER BY y, o_orderstatus
 """
 
 
+@query("rollup_revenue", ROLLUP_SQL)
 def rollup_revenue(spark, sf_dir):
     """ROLLUP grouping sets: (year, status) → (year) → () totals."""
     orders = tbl(spark, sf_dir, "orders")
@@ -52,15 +63,15 @@ def rollup_revenue(spark, sf_dir):
     return res.to_spark()
 
 
-ROLLUP_SQL = f"""
-SELECT year(o_orderdate) AS y, o_orderstatus,
-       count(o_orderkey) AS n, {dec_sum_sql('o_totalprice', 2)} AS total
+CUBE_SQL = """
+SELECT o_orderpriority, o_orderstatus, count(o_orderkey) AS n
 FROM orders
-GROUP BY ROLLUP (year(o_orderdate), o_orderstatus)
-ORDER BY y, o_orderstatus
+GROUP BY CUBE (o_orderpriority, o_orderstatus)
+ORDER BY o_orderpriority, o_orderstatus
 """
 
 
+@query("cube_priority_status", CUBE_SQL)
 def cube_priority_status(spark, sf_dir):
     """CUBE grouping sets over two dims."""
     orders = tbl(spark, sf_dir, "orders")
@@ -70,28 +81,6 @@ def cube_priority_status(spark, sf_dir):
         .sort_values(["o_orderpriority", "o_orderstatus"])
     )
     return res.to_spark()
-
-
-CUBE_SQL = """
-SELECT o_orderpriority, o_orderstatus, count(o_orderkey) AS n
-FROM orders
-GROUP BY CUBE (o_orderpriority, o_orderstatus)
-ORDER BY o_orderpriority, o_orderstatus
-"""
-
-
-def except_inactive_customers(spark, sf_dir):
-    """EXCEPT ALL: all custkeys minus those appearing in orders."""
-    cust = tbl(spark, sf_dir, "customer")
-    orders = tbl(spark, sf_dir, "orders")
-    inactive = cust[["c_custkey"]].except_all(
-        orders[["o_custkey"]].rename({"o_custkey": "c_custkey"})
-    )
-    return inactive.agg(
-        n_inactive=("c_custkey", "count"),
-        min_key=("c_custkey", "min"),
-        max_key=("c_custkey", "max"),
-    ).to_spark()
 
 
 EXCEPT_SQL = """
@@ -106,15 +95,18 @@ FROM inactive
 """
 
 
-def intersect_active_parts(spark, sf_dir):
-    """INTERSECT (distinct): part keys present in both lineitem and part."""
-    li = tbl(spark, sf_dir, "lineitem")
-    part = tbl(spark, sf_dir, "part")
-    both = li[["l_partkey"]].intersect(
-        part[["p_partkey"]].rename({"p_partkey": "l_partkey"})
+@query("except_inactive_customers", EXCEPT_SQL)
+def except_inactive_customers(spark, sf_dir):
+    """EXCEPT ALL: all custkeys minus those appearing in orders."""
+    cust = tbl(spark, sf_dir, "customer")
+    orders = tbl(spark, sf_dir, "orders")
+    inactive = cust[["c_custkey"]].except_all(
+        orders[["o_custkey"]].rename({"o_custkey": "c_custkey"})
     )
-    return both.agg(
-        n=("l_partkey", "count"), lo=("l_partkey", "min"), hi=("l_partkey", "max")
+    return inactive.agg(
+        n_inactive=("c_custkey", "count"),
+        min_key=("c_custkey", "min"),
+        max_key=("c_custkey", "max"),
     ).to_spark()
 
 
@@ -129,18 +121,17 @@ FROM both_keys
 """
 
 
-def dummies_by_nation(spark, sf_dir):
-    """one-hot encode mktsegment → per-nation segment counts
-    (reference: get_dummies, _dummies.py:10)."""
-    cust = tbl(spark, sf_dir, "customer")
-    segs = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
-    dum = cust.get_dummies("c_mktsegment", segs, prefix="seg")
-    return (
-        dum.groupby("c_nationkey")
-        .agg(**{f"seg_{s}": (f"seg_{s}", lambda c: F.sum(c).cast("long")) for s in segs})
-        .sort_values("c_nationkey")
-        .to_spark()
+@query("intersect_active_parts", INTERSECT_SQL)
+def intersect_active_parts(spark, sf_dir):
+    """INTERSECT (distinct): part keys present in both lineitem and part."""
+    li = tbl(spark, sf_dir, "lineitem")
+    part = tbl(spark, sf_dir, "part")
+    both = li[["l_partkey"]].intersect(
+        part[["p_partkey"]].rename({"p_partkey": "l_partkey"})
     )
+    return both.agg(
+        n=("l_partkey", "count"), lo=("l_partkey", "min"), hi=("l_partkey", "max")
+    ).to_spark()
 
 
 DUMMIES_SQL = """
@@ -154,11 +145,16 @@ FROM customer GROUP BY c_nationkey ORDER BY c_nationkey
 """
 
 
-QUERIES = {
-    "melt_measures": (melt_measures, MELT_SQL),
-    "rollup_revenue": (rollup_revenue, ROLLUP_SQL),
-    "cube_priority_status": (cube_priority_status, CUBE_SQL),
-    "except_inactive_customers": (except_inactive_customers, EXCEPT_SQL),
-    "intersect_active_parts": (intersect_active_parts, INTERSECT_SQL),
-    "dummies_by_nation": (dummies_by_nation, DUMMIES_SQL),
-}
+@query("dummies_by_nation", DUMMIES_SQL)
+def dummies_by_nation(spark, sf_dir):
+    """one-hot encode mktsegment → per-nation segment counts
+    (reference: get_dummies, _dummies.py:10)."""
+    cust = tbl(spark, sf_dir, "customer")
+    segs = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
+    dum = cust.get_dummies("c_mktsegment", segs, prefix="seg")
+    return (
+        dum.groupby("c_nationkey")
+        .agg(**{f"seg_{s}": (f"seg_{s}", lambda c: F.sum(c).cast("long")) for s in segs})
+        .sort_values("c_nationkey")
+        .to_spark()
+    )

@@ -1,6 +1,6 @@
 """Streaming queries surfaced through the driver contract.
 
-All three stage the events table as a file-source stream, drain it
+Most stage the events table as a file-source stream, drain it
 through Structured Streaming, and surface the FINAL state — which
 equals a batch aggregation over the same files, so each one is
 value-checkable against a plain SQL oracle (the
@@ -21,6 +21,8 @@ import shutil
 import tempfile
 
 from pyspark.sql import functions as F
+
+from ._util import cent_sum, cent_sum_sql, query, tbl
 
 
 def _stage_time_ordered(spark, sf_dir, prefix: str, n_files: int = 4) -> str:
@@ -60,6 +62,14 @@ def _stage_time_ordered(spark, sf_dir, prefix: str, n_files: int = 4) -> str:
     return src
 
 
+STREAM_TUMBLING_SQL = """
+SELECT date_trunc('hour', ts) AS ws, event_type,
+       CAST(count(*) AS BIGINT) AS n, round(sum(value), 2) AS total
+FROM events GROUP BY 1, 2 ORDER BY ws, event_type
+"""
+
+
+@query("stream_tumbling_counts", STREAM_TUMBLING_SQL)
 def stream_tumbling_counts(spark, sf_dir):
     """watermarked tumbling-window counts (streaming/ops.py
     tumbling_counts) drained in update mode over a time-ordered file
@@ -76,38 +86,6 @@ def stream_tumbling_counts(spark, sf_dir):
         out = spark.sql(
             f"SELECT ws, event_type, max(n) AS n, round(max(total), 2) AS total "
             f"FROM {name} GROUP BY ws, event_type ORDER BY ws, event_type"
-        )
-        out = spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        q.stop()
-    return out
-
-
-STREAM_TUMBLING_SQL = """
-SELECT date_trunc('hour', ts) AS ws, event_type,
-       CAST(count(*) AS BIGINT) AS n, round(sum(value), 2) AS total
-FROM events GROUP BY 1, 2 ORDER BY ws, event_type
-"""
-
-
-def stream_session_counts(spark, sf_dir):
-    """session-window streaming aggregation (F.session_window + state
-    store): sessions close after 30 min of user inactivity. Complete
-    mode keeps all state, so the final emitted sessions equal the
-    batch gaps-and-islands sessionization — hash-checked against that
-    SQL oracle."""
-    from ..streaming import ops as S
-
-    src = _stage_time_ordered(spark, sf_dir, "stream_sq_")
-    stream = S.read_event_stream(spark, src, max_files_per_trigger=1)
-    name = "stream_session_counts_out"
-    # session windows merge as events arrive → update mode is unsupported;
-    # complete mode emits the final merged sessions
-    q = S.run_to_memory(S.session_windows(stream), name, output_mode="complete")
-    try:
-        out = spark.sql(
-            f"SELECT user_id, count(*) AS n_sessions, max(n_events) AS max_events "
-            f"FROM {name} GROUP BY user_id ORDER BY user_id"
         )
         out = spark.createDataFrame(out.collect(), out.schema)
     finally:
@@ -142,12 +120,40 @@ FROM per_session GROUP BY user_id ORDER BY user_id
 """
 
 
-QUERIES = {
-    "stream_tumbling_counts": (stream_tumbling_counts, STREAM_TUMBLING_SQL),
-    "stream_session_counts": (stream_session_counts, STREAM_SESSION_SQL),
-}
+@query("stream_session_counts", STREAM_SESSION_SQL)
+def stream_session_counts(spark, sf_dir):
+    """session-window streaming aggregation (F.session_window + state
+    store): sessions close after 30 min of user inactivity. Complete
+    mode keeps all state, so the final emitted sessions equal the
+    batch gaps-and-islands sessionization — hash-checked against that
+    SQL oracle."""
+    from ..streaming import ops as S
+
+    src = _stage_time_ordered(spark, sf_dir, "stream_sq_")
+    stream = S.read_event_stream(spark, src, max_files_per_trigger=1)
+    name = "stream_session_counts_out"
+    # session windows merge as events arrive → update mode is unsupported;
+    # complete mode emits the final merged sessions
+    q = S.run_to_memory(S.session_windows(stream), name, output_mode="complete")
+    try:
+        out = spark.sql(
+            f"SELECT user_id, count(*) AS n_sessions, max(n_events) AS max_events "
+            f"FROM {name} GROUP BY user_id ORDER BY user_id"
+        )
+        out = spark.createDataFrame(out.collect(), out.schema)
+    finally:
+        q.stop()
+    return out
 
 
+STREAM_STATEFUL_SQL = """
+SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
+       round(sum(value), 2) AS total_value
+FROM events GROUP BY user_id ORDER BY user_id
+"""
+
+
+@query("stream_stateful_totals", STREAM_STATEFUL_SQL)
 def stream_stateful_totals(spark, sf_dir):
     """custom stateful operator (applyInPandasWithState running
     per-user totals) drained through micro-batches. The FINAL state
@@ -182,15 +188,17 @@ def stream_stateful_totals(spark, sf_dir):
     return out
 
 
-STREAM_STATEFUL_SQL = """
-SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
-       round(sum(value), 2) AS total_value
-FROM events GROUP BY user_id ORDER BY user_id
+STREAM_INTERVAL_SQL = """
+SELECT c.user_id, c.ts AS c_ts, p.ts AS p_ts, p.value AS p_value
+FROM events p JOIN events c
+  ON c.user_id = p.user_id AND c.event_type = 'click'
+ AND p.event_type = 'purchase'
+ AND c.ts <= p.ts AND c.ts >= p.ts - INTERVAL 1 HOUR
+ORDER BY c.user_id, c_ts, p_ts
 """
 
-QUERIES["stream_stateful_totals"] = (stream_stateful_totals, STREAM_STATEFUL_SQL)
 
-
+@query("stream_interval_join", STREAM_INTERVAL_SQL)
 def stream_interval_join(spark, sf_dir):
     """stream-stream interval join (streaming/ops.py
     stream_stream_purchase_after_click): purchases matched to a click
@@ -230,18 +238,25 @@ def stream_interval_join(spark, sf_dir):
     return out
 
 
-STREAM_INTERVAL_SQL = """
-SELECT c.user_id, c.ts AS c_ts, p.ts AS p_ts, p.value AS p_value
-FROM events p JOIN events c
-  ON c.user_id = p.user_id AND c.event_type = 'click'
- AND p.event_type = 'purchase'
- AND c.ts <= p.ts AND c.ts >= p.ts - INTERVAL 1 HOUR
-ORDER BY c.user_id, c_ts, p_ts
+def _stream_sem_sql() -> str:
+    from .similarity import _lsh_cell_sql
+
+    return f"""
+WITH cells AS (
+  SELECT vec_id, CAST({_lsh_cell_sql(64, 4, 7)} AS BIGINT) AS cell
+  FROM embeddings
+),
+g AS (
+  SELECT vec_id, cell, min(vec_id) OVER (PARTITION BY cell) AS first
+  FROM cells
+)
+SELECT vec_id, first AS matched_vec, cell FROM g
+WHERE vec_id != first
+ORDER BY vec_id, cell
 """
 
-QUERIES["stream_interval_join"] = (stream_interval_join, STREAM_INTERVAL_SQL)
 
-
+@query("stream_semantic_dedup", _stream_sem_sql())
 def stream_semantic_dedup(spark, sf_dir):
     """streaming semantic-dedup candidates (streaming/ops.py
     semantic_dedup_candidates_stream): deterministic hyperplane-cell
@@ -285,27 +300,17 @@ def stream_semantic_dedup(spark, sf_dir):
         shutil.rmtree(src, ignore_errors=True)
 
 
-def _stream_sem_sql() -> str:
-    from .similarity import _lsh_cell_sql
-
-    return f"""
-WITH cells AS (
-  SELECT vec_id, CAST({_lsh_cell_sql(64, 4, 7)} AS BIGINT) AS cell
-  FROM embeddings
-),
-g AS (
-  SELECT vec_id, cell, min(vec_id) OVER (PARTITION BY cell) AS first
-  FROM cells
-)
-SELECT vec_id, first AS matched_vec, cell FROM g
-WHERE vec_id != first
-ORDER BY vec_id, cell
+STREAM_HH_SQL = """
+SELECT user_id, count(*) AS freq
+FROM events
+WHERE user_id IS NOT NULL
+GROUP BY user_id
+HAVING count(*) > 0.008 * (SELECT count(*) FROM events WHERE user_id IS NOT NULL)
+ORDER BY user_id
 """
 
 
-QUERIES["stream_semantic_dedup"] = (stream_semantic_dedup, _stream_sem_sql())
-
-
+@query("stream_heavy_hitters", STREAM_HH_SQL)
 def stream_heavy_hitters(spark, sf_dir):
     """streaming Misra-Gries heavy-hitter sketch (streaming/ops.py
     heavy_hitter_candidates_stream — state bounded at m counters per
@@ -359,18 +364,15 @@ def stream_heavy_hitters(spark, sf_dir):
             .select("user_id", "freq").orderBy("user_id"))
 
 
-STREAM_HH_SQL = """
-SELECT user_id, count(*) AS freq
-FROM events
-WHERE user_id IS NOT NULL
-GROUP BY user_id
-HAVING count(*) > 0.008 * (SELECT count(*) FROM events WHERE user_id IS NOT NULL)
-ORDER BY user_id
+STREAM_WD_SQL = """
+SELECT date_trunc('hour', ts) AS ws, event_type,
+       CAST(count(DISTINCT user_id) AS BIGINT) AS exact_users,
+       TRUE AS n_ok, TRUE AS distinct_ok
+FROM events GROUP BY 1, 2 ORDER BY ws, event_type
 """
 
-QUERIES["stream_heavy_hitters"] = (stream_heavy_hitters, STREAM_HH_SQL)
 
-
+@query("stream_windowed_distinct", STREAM_WD_SQL)
 def stream_windowed_distinct(spark, sf_dir):
     """streaming windowed approx-distinct (streaming/ops.py
     windowed_distinct_users — HLL++ state, bounded per window) drained
@@ -414,16 +416,15 @@ def stream_windowed_distinct(spark, sf_dir):
             .orderBy("ws", "event_type"))
 
 
-STREAM_WD_SQL = """
-SELECT date_trunc('hour', ts) AS ws, event_type,
+STREAM_HLL_SQL = """
+SELECT event_type,
        CAST(count(DISTINCT user_id) AS BIGINT) AS exact_users,
-       TRUE AS n_ok, TRUE AS distinct_ok
-FROM events GROUP BY 1, 2 ORDER BY ws, event_type
+       TRUE AS est_ok, TRUE AS compact_ok
+FROM events GROUP BY event_type ORDER BY event_type
 """
 
-QUERIES["stream_windowed_distinct"] = (stream_windowed_distinct, STREAM_WD_SQL)
 
-
+@query("stream_hll_rollup", STREAM_HLL_SQL)
 def stream_hll_rollup(spark, sf_dir):
     """streaming → persistent mergeable sketch table (streaming/ops.py
     hll_rollup_sink + compact_hll_rollup): each micro-batch is
@@ -475,16 +476,16 @@ def stream_hll_rollup(spark, sf_dir):
             .orderBy("event_type"))
 
 
-STREAM_HLL_SQL = """
+STREAM_HIST_SQL = """
 SELECT event_type,
-       CAST(count(DISTINCT user_id) AS BIGINT) AS exact_users,
+       round(quantile_cont(least(greatest(value, 0.0), 1000.0), 0.5), 2)
+         AS exact_p50,
        TRUE AS est_ok, TRUE AS compact_ok
 FROM events GROUP BY event_type ORDER BY event_type
 """
 
-QUERIES["stream_hll_rollup"] = (stream_hll_rollup, STREAM_HLL_SQL)
 
-
+@query("stream_hist_rollup", STREAM_HIST_SQL)
 def stream_hist_rollup(spark, sf_dir):
     """streaming → persistent mergeable HISTOGRAM rollup
     (streaming/ops.py hist_rollup_sink + compact_hist_rollup): each
@@ -539,17 +540,18 @@ def stream_hist_rollup(spark, sf_dir):
             .orderBy("event_type"))
 
 
-STREAM_HIST_SQL = """
-SELECT event_type,
-       round(quantile_cont(least(greatest(value, 0.0), 1000.0), 0.5), 2)
-         AS exact_p50,
-       TRUE AS est_ok, TRUE AS compact_ok
-FROM events GROUP BY event_type ORDER BY event_type
+STREAM_XD_SQL = """
+WITH kept AS (
+  SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)
+)
+SELECT d.source, CAST(count(*) AS BIGINT) AS n_kept,
+       CAST(sum(d.doc_id) AS BIGINT) AS id_sum
+FROM documents d JOIN kept k ON d.doc_id = k.doc_id
+GROUP BY d.source ORDER BY d.source
 """
 
-QUERIES["stream_hist_rollup"] = (stream_hist_rollup, STREAM_HIST_SQL)
 
-
+@query("stream_exact_dedup", STREAM_XD_SQL)
 def stream_exact_dedup(spark, sf_dir):
     """streaming ingest dedup (streaming/ops.py exact_dedup_sink):
     documents staged as ascending-doc_id files replay as micro-batches;
@@ -607,19 +609,37 @@ def stream_exact_dedup(spark, sf_dir):
     return out
 
 
-STREAM_XD_SQL = """
-WITH kept AS (
-  SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)
+STREAM_PSI_SQL = """
+WITH p AS (
+  SELECT event_type,
+         CASE WHEN ts < TIMESTAMP '2024-01-16' THEN 'a' ELSE 'b' END AS side,
+         least(63, greatest(0,
+           CAST(floor(value / (500.0 / 64)) AS INT))) AS bin
+  FROM events WHERE value IS NOT NULL
+),
+c AS (
+  SELECT event_type, bin,
+         count(*) FILTER (WHERE side = 'a') AS ca,
+         count(*) FILTER (WHERE side = 'b') AS cb
+  FROM p GROUP BY 1, 2
+),
+t AS (
+  SELECT event_type,
+         sum(ca) OVER (PARTITION BY event_type) AS na,
+         sum(cb) OVER (PARTITION BY event_type) AS nb,
+         ca, cb
+  FROM c
 )
-SELECT d.source, CAST(count(*) AS BIGINT) AS n_kept,
-       CAST(sum(d.doc_id) AS BIGINT) AS id_sum
-FROM documents d JOIN kept k ON d.doc_id = k.doc_id
-GROUP BY d.source ORDER BY d.source
+SELECT event_type,
+       round(sum((greatest(ca / na, 1e-6) - greatest(cb / nb, 1e-6))
+                 * ln(greatest(ca / na, 1e-6) / greatest(cb / nb, 1e-6))),
+             6) AS psi,
+       CAST(min(na) AS BIGINT) AS n_a, CAST(min(nb) AS BIGINT) AS n_b
+FROM t GROUP BY event_type ORDER BY event_type
 """
 
-QUERIES["stream_exact_dedup"] = (stream_exact_dedup, STREAM_XD_SQL)
 
-
+@query("stream_drift_psi", STREAM_PSI_SQL)
 def stream_drift_psi(spark, sf_dir):
     """streaming drift MONITOR: the end-to-end composition of
     hist_rollup_sink + psi_drift — a reference histogram rollup is
@@ -668,38 +688,22 @@ def stream_drift_psi(spark, sf_dir):
     return out
 
 
-STREAM_PSI_SQL = """
-WITH p AS (
-  SELECT event_type,
-         CASE WHEN ts < TIMESTAMP '2024-01-16' THEN 'a' ELSE 'b' END AS side,
-         least(63, greatest(0,
-           CAST(floor(value / (500.0 / 64)) AS INT))) AS bin
-  FROM events WHERE value IS NOT NULL
-),
-c AS (
-  SELECT event_type, bin,
-         count(*) FILTER (WHERE side = 'a') AS ca,
-         count(*) FILTER (WHERE side = 'b') AS cb
-  FROM p GROUP BY 1, 2
-),
-t AS (
-  SELECT event_type,
-         sum(ca) OVER (PARTITION BY event_type) AS na,
-         sum(cb) OVER (PARTITION BY event_type) AS nb,
-         ca, cb
-  FROM c
+STREAM_UPSERT_SQL = """
+WITH fin AS (
+  SELECT o_orderkey, o_orderstatus,
+         CASE WHEN o_orderkey % 10 = 0 THEN o_totalprice + 300.0
+              ELSE o_totalprice END AS price
+  FROM orders
 )
-SELECT event_type,
-       round(sum((greatest(ca / na, 1e-6) - greatest(cb / nb, 1e-6))
-                 * ln(greatest(ca / na, 1e-6) / greatest(cb / nb, 1e-6))),
-             6) AS psi,
-       CAST(min(na) AS BIGINT) AS n_a, CAST(min(nb) AS BIGINT) AS n_b
-FROM t GROUP BY event_type ORDER BY event_type
+SELECT o_orderstatus, CAST(count(*) AS BIGINT) AS n,
+       CAST(sum(CAST(round(price * 100) AS BIGINT)) AS DOUBLE) / 100.0
+         AS total,
+       CAST(3 AS INT) AS last_v
+FROM fin GROUP BY o_orderstatus ORDER BY o_orderstatus
 """
 
-QUERIES["stream_drift_psi"] = (stream_drift_psi, STREAM_PSI_SQL)
 
-
+@query("stream_upsert_snapshot", STREAM_UPSERT_SQL)
 def stream_upsert_snapshot(spark, sf_dir):
     """streaming CDC-apply (streaming/ops.py upsert_sink): orders
     arrive as 4 time-ordered files — each carries its quarter of novel
@@ -763,7 +767,87 @@ def stream_upsert_snapshot(spark, sf_dir):
     return out
 
 
-STREAM_UPSERT_SQL = """
+STREAM_NEAR_DEDUP_SQL = """
+WITH ds AS (
+  SELECT DISTINCT doc_id AS id, unnest(
+    CASE WHEN len(string_split(text,' ')) >= 3
+         THEN list_transform(generate_series(1, len(string_split(text,' ')) - 2),
+                             i -> array_to_string(string_split(text,' ')[i:i+2], ' '))
+         ELSE [] END) AS sh
+  FROM documents
+),
+base AS (
+  SELECT id, ('0x' || substr(md5(sh), 1, 15))::BIGINT AS h FROM ds
+),
+perms AS (SELECT unnest(generate_series(0, 31)) AS i),
+sig AS (
+  SELECT id, i,
+         min(('0x' || substr(md5(CAST(i AS VARCHAR) || ':' || CAST(h AS VARCHAR)),
+                             1, 15))::BIGINT) AS m
+  FROM base CROSS JOIN perms GROUP BY id, i
+),
+bandkeys AS (
+  SELECT id, i // 4 AS band,
+         ('0x' || substr(md5(string_agg(CAST(m AS VARCHAR), ':' ORDER BY i)),
+                         1, 15))::BIGINT AS bkey
+  FROM sig GROUP BY id, i // 4
+),
+grp AS (
+  SELECT band, bkey, id,
+         min(id) OVER (PARTITION BY band, bkey) AS first
+  FROM bandkeys
+)
+SELECT id AS doc_id, first AS matched_doc, CAST(band AS INT) AS band
+FROM grp WHERE id != first
+ORDER BY doc_id, matched_doc, band
+"""
+
+
+@query("stream_near_dedup", STREAM_NEAR_DEDUP_SQL)
+def stream_near_dedup(spark, sf_dir):
+    """streaming MinHash-LSH near-dup candidates
+    (streaming/ops.py near_dedup_candidates_stream): pure-expression
+    signatures + per-(band,bucket) state, candidates flagged online.
+    Run with the portable md5 hash family, whose signature/band/bucket
+    pipeline DuckDB reproduces bit-for-bit — with a single source
+    batch the state handler's min-first rule makes each candidate
+    (doc, bucket-min, band), so the FULL streaming output hash-matches
+    the oracle. xxhash64 stays the production default (batch parity
+    asserted in tests/test_streaming.py)."""
+    import os
+    import tempfile
+
+    from ..sources.io import read_parquet
+    from ..streaming import ops as S
+
+    src = tempfile.mkdtemp(prefix="stream_nd_")
+    docs = read_parquet(spark, os.path.join(sf_dir, "documents.parquet"))
+    docs.to_spark().select("doc_id", "text") \
+        .where(F.size(F.split(F.col("text"), " ")) >= 3).coalesce(1) \
+        .write.mode("overwrite").parquet(src)
+    stream = spark.readStream.schema("doc_id long, text string").parquet(src)
+    name = "stream_near_dedup_out"
+    q_ = S.run_to_memory(
+        S.near_dedup_candidates_stream(stream, portable_hash=True), name,
+        output_mode="append",
+    )
+    try:
+        out = spark.sql(
+            f"SELECT doc_id, matched_doc, band FROM {name} "
+            "ORDER BY doc_id, matched_doc, band"
+        )
+        out = spark.createDataFrame(out.collect(), out.schema)
+    finally:
+        q_.stop()
+    return out
+
+
+# -- bucketed streaming CDC-apply (streaming/ops.py upsert_sink with
+#    n_buckets): the stream_upsert_snapshot scenario on a table with
+#    NO natural partition column — each micro-batch prunes to the md5
+#    bucket directories its keys hash into instead of rewriting the
+#    snapshot; final state hash-exact from first principles ----------
+STREAM_UPSERT_BKT_SQL = """
 WITH fin AS (
   SELECT o_orderkey, o_orderstatus,
          CASE WHEN o_orderkey % 10 = 0 THEN o_totalprice + 300.0
@@ -773,9 +857,244 @@ WITH fin AS (
 SELECT o_orderstatus, CAST(count(*) AS BIGINT) AS n,
        CAST(sum(CAST(round(price * 100) AS BIGINT)) AS DOUBLE) / 100.0
          AS total,
-       CAST(3 AS INT) AS last_v
+       CAST(3 AS INT) AS last_v, TRUE AS layout_ok
 FROM fin GROUP BY o_orderstatus ORDER BY o_orderstatus
 """
 
-QUERIES["stream_upsert_snapshot"] = (stream_upsert_snapshot,
-                                     STREAM_UPSERT_SQL)
+
+@query("stream_upsert_bucketed", STREAM_UPSERT_BKT_SQL)
+def stream_upsert_bucketed(spark, sf_dir):
+    import time
+
+    from ..functions.maintenance import is_bucketed, read_bucketed
+    from ..streaming import ops as S
+
+    src = tempfile.mkdtemp(prefix="stream_ubkt_src_")
+    tbl_dir = tempfile.mkdtemp(prefix="stream_ubkt_tbl_")
+    table_path = os.path.join(tbl_dir, "t")
+    ckpt = tempfile.mkdtemp(prefix="stream_ubkt_ckpt_")
+    try:
+        o = tbl(spark, sf_dir, "orders").to_spark()
+        stamped: set = set()
+        base_t = time.time() - 60
+        for i in range(4):
+            inserts = o.where((F.col("o_orderkey") % 4 == i)
+                              & (F.col("o_orderkey") % 10 != 0))
+            recrawl = (o.where(F.col("o_orderkey") % 10 == 0)
+                       .withColumn("o_totalprice",
+                                   F.col("o_totalprice") + 100.0 * i))
+            (inserts.unionByName(recrawl)
+             .withColumn("__v", F.lit(i))
+             .coalesce(1).write.mode("append").parquet(src))
+            for f in os.listdir(src):
+                if f.endswith(".parquet") and f not in stamped:
+                    t = base_t + i * 10
+                    os.utime(os.path.join(src, f), (t, t))
+                    stamped.add(f)
+        schema = spark.read.parquet(src).schema
+        stream = (spark.readStream.schema(schema)
+                  .option("maxFilesPerTrigger", 1).parquet(src))
+        q_ = S.upsert_sink(stream, table_path, ["o_orderkey"],
+                           n_buckets=16, order_col="__v",
+                           checkpoint_dir=ckpt)
+        try:
+            q_.processAllAvailable()
+        finally:
+            q_.stop()
+        layout_ok = is_bucketed(table_path) and all(
+            d.startswith(("__bucket=", "_", "."))
+            for d in os.listdir(table_path))
+        snap = read_bucketed(spark, table_path)
+        out = (snap.groupBy("o_orderstatus")
+               .agg(F.count(F.lit(1)).alias("n"),
+                    cent_sum(F.col("o_totalprice")).alias("total"),
+                    F.max(F.when(F.col("o_orderkey") % 10 == 0,
+                                 F.col("__v"))).alias("last_v"))
+               .withColumn("layout_ok", F.lit(bool(layout_ok)))
+               .orderBy("o_orderstatus"))
+        return spark.createDataFrame(out.collect(), out.schema)
+    finally:
+        shutil.rmtree(src, ignore_errors=True)
+        shutil.rmtree(ckpt, ignore_errors=True)
+        shutil.rmtree(tbl_dir, ignore_errors=True)
+
+
+# -- streaming SCD-2 CDC-apply (streaming/ops.py scd2_sink): four
+#    micro-batches — %10 keys re-crawl with a new price every batch
+#    (each change closes the old version and opens a new one), other
+#    keys insert once in their k%4 batch — the FULL history aggregate
+#    reconstructs in SQL from first principles (version counts, both
+#    populations' cent-sums, and the closed rows' interval structure
+#    via sums of the validity endpoints) -----------------------------
+STREAM_SCD2_SQL = f"""
+WITH ten AS (
+  SELECT o_orderkey AS k, o_orderstatus AS s,
+         round(o_totalprice, 2) AS p
+  FROM orders WHERE o_orderkey % 10 = 0
+),
+others AS (
+  SELECT o_orderkey AS k, o_orderstatus AS s,
+         round(o_totalprice, 2) AS p,
+         CAST(o_orderkey % 4 AS BIGINT) AS vf
+  FROM orders WHERE o_orderkey % 10 <> 0
+),
+hist AS (
+  SELECT k, s, round(p + 100.0 * g.i, 2) AS price,
+         CAST(g.i AS BIGINT) AS vf,
+         CASE WHEN g.i < 3 THEN CAST(g.i + 1 AS BIGINT) END AS vt
+  FROM ten, (VALUES (0), (1), (2), (3)) AS g(i)
+  UNION ALL
+  SELECT k, s, p, vf, NULL FROM others
+)
+SELECT s AS o_orderstatus,
+       CAST(count(*) AS BIGINT) AS n_rows,
+       CAST(count(*) FILTER (WHERE vt IS NULL) AS BIGINT) AS n_current,
+       {cent_sum_sql('CASE WHEN vt IS NULL THEN price ELSE 0 END')}
+         AS total_current,
+       {cent_sum_sql('CASE WHEN vt IS NOT NULL THEN price ELSE 0 END')}
+         AS total_closed,
+       CAST(sum(vf) AS BIGINT) AS sum_vf,
+       CAST(sum(vt) AS BIGINT) AS sum_vt
+FROM hist GROUP BY s ORDER BY s
+"""
+
+
+@query("stream_scd2_history", STREAM_SCD2_SQL)
+def stream_scd2_history(spark, sf_dir):
+    import time
+
+    from ..streaming import ops as S
+
+    src = tempfile.mkdtemp(prefix="stream_scd2_src_")
+    tbl_dir = tempfile.mkdtemp(prefix="stream_scd2_tbl_")
+    table_path = os.path.join(tbl_dir, "t")
+    ckpt = tempfile.mkdtemp(prefix="stream_scd2_ckpt_")
+    try:
+        o = (tbl(spark, sf_dir, "orders").to_spark()
+             .select(F.col("o_orderkey").alias("k"),
+                     F.col("o_orderstatus").alias("s"),
+                     F.round(F.col("o_totalprice"), 2).alias("price")))
+        stamped: set = set()
+        base_t = time.time() - 60
+        for i in range(4):
+            inserts = o.where((F.col("k") % 4 == i)
+                              & (F.col("k") % 10 != 0))
+            recrawl = (o.where(F.col("k") % 10 == 0)
+                       .withColumn("price", F.round(
+                           F.col("price") + 100.0 * i, 2)))
+            (inserts.unionByName(recrawl)
+             .withColumn("eff", F.lit(i).cast("long"))
+             .coalesce(1).write.mode("append").parquet(src))
+            for f in os.listdir(src):
+                if f.endswith(".parquet") and f not in stamped:
+                    t = base_t + i * 10
+                    os.utime(os.path.join(src, f), (t, t))
+                    stamped.add(f)
+        schema = spark.read.parquet(src).schema
+        stream = (spark.readStream.schema(schema)
+                  .option("maxFilesPerTrigger", 1).parquet(src))
+        q_ = S.scd2_sink(stream, table_path, ["k"], "eff",
+                         n_buckets=16, checkpoint_dir=ckpt)
+        try:
+            q_.processAllAvailable()
+        finally:
+            q_.stop()
+        S.compact_scd2_closed(spark, table_path)
+        hist = S.read_scd2(spark, table_path)
+        out = (hist.groupBy("s")
+               .agg(F.count(F.lit(1)).alias("n_rows"),
+                    F.count_if(F.col("is_current")).alias("n_current"),
+                    cent_sum(F.when(F.col("is_current"), F.col("price"))
+                             .otherwise(0.0)).alias("total_current"),
+                    cent_sum(F.when(~F.col("is_current"), F.col("price"))
+                             .otherwise(0.0)).alias("total_closed"),
+                    F.sum("valid_from").alias("sum_vf"),
+                    F.sum("valid_to").alias("sum_vt"))
+               .select(F.col("s").alias("o_orderstatus"), "n_rows",
+                       "n_current", "total_current", "total_closed",
+                       "sum_vf", "sum_vt")
+               .orderBy("o_orderstatus"))
+        return spark.createDataFrame(out.collect(), out.schema)
+    finally:
+        shutil.rmtree(src, ignore_errors=True)
+        shutil.rmtree(ckpt, ignore_errors=True)
+        shutil.rmtree(tbl_dir, ignore_errors=True)
+
+
+# -- streaming ingest with pointer commits (streaming/ops.py
+#    upsert_sink commit="pointer"): the object-store CDC-apply
+#    pattern — micro-batches append fresh bucket files + flip the
+#    manifest; final state hash-exact from first principles and the
+#    generation count proves per-batch commits ----------------------
+STREAM_PTR_SQL = """
+WITH fin AS (
+  SELECT o_orderkey, o_orderstatus,
+         CASE WHEN o_orderkey % 10 = 0 THEN o_totalprice + 200.0
+              ELSE o_totalprice END AS price
+  FROM orders
+)
+SELECT o_orderstatus, CAST(count(*) AS BIGINT) AS n,
+       CAST(sum(CAST(round(price * 100) AS BIGINT)) AS DOUBLE) / 100.0
+         AS total,
+       CAST(2 AS INT) AS last_v, TRUE AS pointer_ok
+FROM fin GROUP BY o_orderstatus ORDER BY o_orderstatus
+"""
+
+
+@query("stream_upsert_pointer", STREAM_PTR_SQL)
+def stream_upsert_pointer(spark, sf_dir):
+    import time
+
+    from ..functions.maintenance import read_commit, read_manifested
+    from ..streaming import ops as S
+
+    src = tempfile.mkdtemp(prefix="stream_ptr_src_")
+    tbl_dir = tempfile.mkdtemp(prefix="stream_ptr_tbl_")
+    table_path = os.path.join(tbl_dir, "t")
+    ckpt = tempfile.mkdtemp(prefix="stream_ptr_ckpt_")
+    try:
+        o = tbl(spark, sf_dir, "orders").to_spark()
+        stamped: set = set()
+        base_t = time.time() - 60
+        for i in range(3):
+            inserts = o.where((F.col("o_orderkey") % 3 == i)
+                              & (F.col("o_orderkey") % 10 != 0))
+            recrawl = (o.where(F.col("o_orderkey") % 10 == 0)
+                       .withColumn("o_totalprice",
+                                   F.col("o_totalprice") + 100.0 * i))
+            (inserts.unionByName(recrawl)
+             .withColumn("__v", F.lit(i))
+             .coalesce(1).write.mode("append").parquet(src))
+            for f in os.listdir(src):
+                if f.endswith(".parquet") and f not in stamped:
+                    t = base_t + i * 10
+                    os.utime(os.path.join(src, f), (t, t))
+                    stamped.add(f)
+        schema = spark.read.parquet(src).schema
+        stream = (spark.readStream.schema(schema)
+                  .option("maxFilesPerTrigger", 1).parquet(src))
+        q_ = S.upsert_sink(stream, table_path, ["o_orderkey"],
+                           n_buckets=16, order_col="__v",
+                           checkpoint_dir=ckpt, commit="pointer")
+        try:
+            q_.processAllAvailable()
+        finally:
+            q_.stop()
+        man = read_commit(table_path)
+        # gen 0 = first-batch bootstrap, then one flip per later batch
+        pointer_ok = (man is not None
+                      and man["partition_col"] == "__bucket"
+                      and int(man["generation"]) == 2)
+        snap = read_manifested(spark, table_path).drop("__bucket")
+        out = (snap.groupBy("o_orderstatus")
+               .agg(F.count(F.lit(1)).alias("n"),
+                    cent_sum(F.col("o_totalprice")).alias("total"),
+                    F.max(F.when(F.col("o_orderkey") % 10 == 0,
+                                 F.col("__v"))).alias("last_v"))
+               .withColumn("pointer_ok", F.lit(bool(pointer_ok)))
+               .orderBy("o_orderstatus"))
+        return spark.createDataFrame(out.collect(), out.schema)
+    finally:
+        shutil.rmtree(src, ignore_errors=True)
+        shutil.rmtree(ckpt, ignore_errors=True)
+        shutil.rmtree(tbl_dir, ignore_errors=True)

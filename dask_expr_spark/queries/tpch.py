@@ -12,9 +12,27 @@ documented on the helper; at unbounded scale switch to dec_sum.
 
 from __future__ import annotations
 
-from ._util import cent_avg, cent_avg_sql, cent_sum, cent_sum_sql, tbl
+from ._util import cent_avg, cent_avg_sql, cent_sum, cent_sum_sql, query, tbl
 
 
+Q1_SQL = f"""
+SELECT l_returnflag, l_linestatus,
+       {cent_sum_sql('l_quantity', 2)}                                       AS sum_qty,
+       {cent_sum_sql('l_extendedprice', 2)}                                  AS sum_base_price,
+       {cent_sum_sql('l_extendedprice * (1 - l_discount)', 4)}               AS sum_disc_price,
+       {cent_sum_sql('l_extendedprice * (1 - l_discount) * (1 + l_tax)', 6)} AS sum_charge,
+       {cent_avg_sql('l_quantity', 2)}                                       AS avg_qty,
+       {cent_avg_sql('l_extendedprice', 2)}                                  AS avg_price,
+       {cent_avg_sql('l_discount', 2)}                                       AS avg_disc,
+       count(l_quantity)                                                    AS count_order
+FROM lineitem
+WHERE l_shipdate <= TIMESTAMP '1998-09-02'
+GROUP BY l_returnflag, l_linestatus
+ORDER BY l_returnflag, l_linestatus
+"""
+
+
+@query("q1_pricing_summary", Q1_SQL)
 def q1_pricing_summary(spark, sf_dir):
     """Flagship: filter + derived cols + groupby agg + sort
     (reference build-plan target, SURVEY.md §7.1)."""
@@ -41,23 +59,22 @@ def q1_pricing_summary(spark, sf_dir):
     return res.to_spark()
 
 
-Q1_SQL = f"""
-SELECT l_returnflag, l_linestatus,
-       {cent_sum_sql('l_quantity', 2)}                                       AS sum_qty,
-       {cent_sum_sql('l_extendedprice', 2)}                                  AS sum_base_price,
-       {cent_sum_sql('l_extendedprice * (1 - l_discount)', 4)}               AS sum_disc_price,
-       {cent_sum_sql('l_extendedprice * (1 - l_discount) * (1 + l_tax)', 6)} AS sum_charge,
-       {cent_avg_sql('l_quantity', 2)}                                       AS avg_qty,
-       {cent_avg_sql('l_extendedprice', 2)}                                  AS avg_price,
-       {cent_avg_sql('l_discount', 2)}                                       AS avg_disc,
-       count(l_quantity)                                                    AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-GROUP BY l_returnflag, l_linestatus
-ORDER BY l_returnflag, l_linestatus
+Q3_SQL = f"""
+SELECT o_orderkey, o_orderdate,
+       {cent_sum_sql('l_extendedprice * (1 - l_discount)', 4)} AS revenue
+FROM customer
+JOIN orders   ON c_custkey = o_custkey
+JOIN lineitem ON o_orderkey = l_orderkey
+WHERE c_mktsegment = 'BUILDING'
+  AND o_orderdate < TIMESTAMP '1998-01-01'
+  AND l_shipdate  > TIMESTAMP '1998-01-01'
+GROUP BY o_orderkey, o_orderdate
+ORDER BY revenue DESC, o_orderkey
+LIMIT 10
 """
 
 
+@query("q3_shipping_priority", Q3_SQL)
 def q3_shipping_priority(spark, sf_dir):
     """3-way join + filter + groupby + top-k (reference: Merge lowering
     /root/reference/dask_expr/_merge.py:348; NFirst _reductions.py:1373)."""
@@ -80,21 +97,22 @@ def q3_shipping_priority(spark, sf_dir):
     return res.to_spark()
 
 
-Q3_SQL = f"""
-SELECT o_orderkey, o_orderdate,
-       {cent_sum_sql('l_extendedprice * (1 - l_discount)', 4)} AS revenue
-FROM customer
-JOIN orders   ON c_custkey = o_custkey
-JOIN lineitem ON o_orderkey = l_orderkey
-WHERE c_mktsegment = 'BUILDING'
-  AND o_orderdate < TIMESTAMP '1998-01-01'
-  AND l_shipdate  > TIMESTAMP '1998-01-01'
-GROUP BY o_orderkey, o_orderdate
-ORDER BY revenue DESC, o_orderkey
-LIMIT 10
+Q5_SQL = f"""
+SELECT r_name, n_name,
+       {cent_sum_sql('l_extendedprice * (1 - l_discount)', 4)} AS revenue,
+       count(DISTINCT o_orderkey) AS n_orders
+FROM lineitem
+JOIN orders   ON l_orderkey = o_orderkey
+JOIN customer ON o_custkey = c_custkey
+JOIN nation   ON c_nationkey = n_nationkey
+JOIN region   ON n_regionkey = r_regionkey
+WHERE o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1998-01-01'
+GROUP BY r_name, n_name
+ORDER BY r_name, n_name
 """
 
 
+@query("q5_revenue_by_nation", Q5_SQL)
 def q5_revenue_by_nation(spark, sf_dir):
     """4-way star join (region→nation→customer→orders→lineitem) + agg.
     Dims broadcast; the fact table shuffles once on the join key."""
@@ -120,21 +138,15 @@ def q5_revenue_by_nation(spark, sf_dir):
     return res.to_spark()
 
 
-Q5_SQL = f"""
-SELECT r_name, n_name,
-       {cent_sum_sql('l_extendedprice * (1 - l_discount)', 4)} AS revenue,
-       count(DISTINCT o_orderkey) AS n_orders
+Q6_SQL = f"""
+SELECT {cent_sum_sql('l_extendedprice * l_discount', 4)} AS revenue
 FROM lineitem
-JOIN orders   ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation   ON c_nationkey = n_nationkey
-JOIN region   ON n_regionkey = r_regionkey
-WHERE o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1998-01-01'
-GROUP BY r_name, n_name
-ORDER BY r_name, n_name
+WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
+  AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24
 """
 
 
+@query("q6_forecast_revenue", Q6_SQL)
 def q6_forecast_revenue(spark, sf_dir):
     """Scan-heavy filter + global agg; predicates push into the parquet
     scan (reference: DNF pushdown, io/parquet.py:1574)."""
@@ -150,14 +162,16 @@ def q6_forecast_revenue(spark, sf_dir):
     return res.to_spark()
 
 
-Q6_SQL = f"""
-SELECT {cent_sum_sql('l_extendedprice * l_discount', 4)} AS revenue
-FROM lineitem
-WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
-  AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24
+JOIN_BROADCAST_SQL = f"""
+SELECT p_brand, count(l_quantity) AS n_items,
+       {cent_sum_sql('l_quantity', 2)} AS total_qty,
+       {cent_avg_sql('p_retailprice', 2)} AS avg_retail
+FROM lineitem JOIN part ON l_partkey = p_partkey
+GROUP BY p_brand ORDER BY p_brand
 """
 
 
+@query("join_broadcast_part", JOIN_BROADCAST_SQL)
 def join_broadcast_part(spark, sf_dir):
     """Explicit broadcast join of fact with a small dim (reference:
     BroadcastJoin, _merge.py:739)."""
@@ -176,15 +190,15 @@ def join_broadcast_part(spark, sf_dir):
     return res.to_spark()
 
 
-JOIN_BROADCAST_SQL = f"""
-SELECT p_brand, count(l_quantity) AS n_items,
-       {cent_sum_sql('l_quantity', 2)} AS total_qty,
-       {cent_avg_sql('p_retailprice', 2)} AS avg_retail
-FROM lineitem JOIN part ON l_partkey = p_partkey
-GROUP BY p_brand ORDER BY p_brand
+JOIN_SEMI_SQL = f"""
+SELECT o_orderstatus, count(o_orderkey) AS n, {cent_sum_sql('o_totalprice', 2)} AS total
+FROM orders
+WHERE EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey AND l_quantity >= 45)
+GROUP BY o_orderstatus ORDER BY o_orderstatus
 """
 
 
+@query("join_semi", JOIN_SEMI_SQL)
 def join_semi(spark, sf_dir):
     """left-semi join (reference: SemiMerge, _merge.py:881)."""
     orders = tbl(spark, sf_dir, "orders")
@@ -199,14 +213,15 @@ def join_semi(spark, sf_dir):
     return res.to_spark()
 
 
-JOIN_SEMI_SQL = f"""
-SELECT o_orderstatus, count(o_orderkey) AS n, {cent_sum_sql('o_totalprice', 2)} AS total
-FROM orders
-WHERE EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey AND l_quantity >= 45)
-GROUP BY o_orderstatus ORDER BY o_orderstatus
+JOIN_ANTI_SQL = f"""
+SELECT c_mktsegment, count(c_custkey) AS n_customers, {cent_avg_sql('c_acctbal', 2)} AS avg_bal
+FROM customer
+WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
+GROUP BY c_mktsegment ORDER BY c_mktsegment
 """
 
 
+@query("join_anti", JOIN_ANTI_SQL)
 def join_anti(spark, sf_dir):
     """left-anti join (Spark-native; reference expresses it only via
     isin negation — SURVEY.md §2.3 note)."""
@@ -222,14 +237,14 @@ def join_anti(spark, sf_dir):
     return res.to_spark()
 
 
-JOIN_ANTI_SQL = f"""
-SELECT c_mktsegment, count(c_custkey) AS n_customers, {cent_avg_sql('c_acctbal', 2)} AS avg_bal
-FROM customer
-WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-GROUP BY c_mktsegment ORDER BY c_mktsegment
+JOIN_OUTER_SQL = """
+SELECT n_name, count(s_suppkey) AS n_suppliers
+FROM nation FULL OUTER JOIN supplier ON n_nationkey = s_nationkey
+GROUP BY n_name ORDER BY n_name
 """
 
 
+@query("join_outer", JOIN_OUTER_SQL)
 def join_outer(spark, sf_dir):
     """full outer join with null sides (reference: how='outer',
     _collection.py:2847)."""
@@ -242,22 +257,3 @@ def join_outer(spark, sf_dir):
         .sort_values("n_name")
     )
     return res.to_spark()
-
-
-JOIN_OUTER_SQL = """
-SELECT n_name, count(s_suppkey) AS n_suppliers
-FROM nation FULL OUTER JOIN supplier ON n_nationkey = s_nationkey
-GROUP BY n_name ORDER BY n_name
-"""
-
-
-QUERIES = {
-    "q1_pricing_summary": (q1_pricing_summary, Q1_SQL),
-    "q3_shipping_priority": (q3_shipping_priority, Q3_SQL),
-    "q5_revenue_by_nation": (q5_revenue_by_nation, Q5_SQL),
-    "q6_forecast_revenue": (q6_forecast_revenue, Q6_SQL),
-    "join_broadcast_part": (join_broadcast_part, JOIN_BROADCAST_SQL),
-    "join_semi": (join_semi, JOIN_SEMI_SQL),
-    "join_anti": (join_anti, JOIN_ANTI_SQL),
-    "join_outer": (join_outer, JOIN_OUTER_SQL),
-}

@@ -7,9 +7,20 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ._util import dec_sum, dec_sum_sql, tbl
+from ._util import dec_sum, dec_sum_sql, query, tbl
 
 
+Q4_SQL = """
+SELECT o_orderpriority, count(*) AS order_count
+FROM orders
+WHERE o_orderdate >= TIMESTAMP '1997-01-01' AND o_orderdate < TIMESTAMP '1998-01-01'
+  AND EXISTS (SELECT 1 FROM lineitem
+              WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate)
+GROUP BY o_orderpriority ORDER BY o_orderpriority
+"""
+
+
+@query("q4_priority_late", Q4_SQL)
 def q4_priority_with_late_lines(spark, sf_dir):
     """EXISTS semi-join + groupby (TPC-H Q4 shape): orders from 1997
     that have a lineitem shipped after the order date."""
@@ -34,16 +45,21 @@ def q4_priority_with_late_lines(spark, sf_dir):
     )
 
 
-Q4_SQL = """
-SELECT o_orderpriority, count(*) AS order_count
-FROM orders
-WHERE o_orderdate >= TIMESTAMP '1997-01-01' AND o_orderdate < TIMESTAMP '1998-01-01'
-  AND EXISTS (SELECT 1 FROM lineitem
-              WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate)
-GROUP BY o_orderpriority ORDER BY o_orderpriority
+Q10_SQL = f"""
+SELECT c_custkey, c_name, n_name,
+       {dec_sum_sql('l_extendedprice * (1 - l_discount)', 4)} AS revenue,
+       count(l_orderkey) AS n_items
+FROM lineitem
+JOIN orders   ON l_orderkey = o_orderkey
+JOIN customer ON o_custkey = c_custkey
+JOIN nation   ON c_nationkey = n_nationkey
+WHERE l_returnflag = 'R'
+GROUP BY c_custkey, c_name, n_name
+ORDER BY revenue DESC, c_custkey LIMIT 20
 """
 
 
+@query("q10_returned_revenue", Q10_SQL)
 def q10_returned_revenue(spark, sf_dir):
     """TPC-H Q10 shape: revenue lost to returns per customer, top 20."""
     cust = tbl(spark, sf_dir, "customer")
@@ -64,20 +80,19 @@ def q10_returned_revenue(spark, sf_dir):
     return res.to_spark()
 
 
-Q10_SQL = f"""
-SELECT c_custkey, c_name, n_name,
-       {dec_sum_sql('l_extendedprice * (1 - l_discount)', 4)} AS revenue,
-       count(l_orderkey) AS n_items
-FROM lineitem
-JOIN orders   ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation   ON c_nationkey = n_nationkey
-WHERE l_returnflag = 'R'
-GROUP BY c_custkey, c_name, n_name
-ORDER BY revenue DESC, c_custkey LIMIT 20
+Q14_SQL = """
+SELECT 100.0 * CAST(sum(CAST(CASE WHEN p_type = 'ECONOMY'
+                                  THEN l_extendedprice * (1 - l_discount)
+                                  ELSE 0.0 END AS DECIMAL(27,4))) AS DOUBLE)
+             / CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(27,4))) AS DOUBLE)
+         AS economy_pct,
+       count(*) AS n
+FROM lineitem JOIN part ON l_partkey = p_partkey
+WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1997-07-01'
 """
 
 
+@query("q14_type_revenue_ratio", Q14_SQL)
 def q14_type_revenue_ratio(spark, sf_dir):
     """TPC-H Q14 shape: % of revenue from ECONOMY-type parts.
     Ratio of two decimal-exact sums → identical doubles."""
@@ -102,18 +117,21 @@ def q14_type_revenue_ratio(spark, sf_dir):
     return out
 
 
-Q14_SQL = """
-SELECT 100.0 * CAST(sum(CAST(CASE WHEN p_type = 'ECONOMY'
-                                  THEN l_extendedprice * (1 - l_discount)
-                                  ELSE 0.0 END AS DECIMAL(27,4))) AS DOUBLE)
-             / CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(27,4))) AS DOUBLE)
-         AS economy_pct,
-       count(*) AS n
-FROM lineitem JOIN part ON l_partkey = p_partkey
-WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1997-07-01'
+Q15_SQL = f"""
+WITH rev AS (
+  SELECT l_suppkey, {dec_sum_sql('l_extendedprice * (1 - l_discount)', 4)} AS total_rev
+  FROM lineitem
+  WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1997-04-01'
+  GROUP BY l_suppkey
+)
+SELECT s_suppkey, s_name, total_rev
+FROM rev JOIN supplier ON l_suppkey = s_suppkey
+WHERE total_rev = (SELECT max(total_rev) FROM rev)
+ORDER BY s_suppkey
 """
 
 
+@query("q15_top_suppliers", Q15_SQL)
 def q15_top_suppliers(spark, sf_dir):
     """TPC-H Q15 shape: supplier(s) with max revenue — window max over
     an aggregate (exact decimal revenue → deterministic max set)."""
@@ -139,20 +157,19 @@ def q15_top_suppliers(spark, sf_dir):
     return out
 
 
-Q15_SQL = f"""
-WITH rev AS (
-  SELECT l_suppkey, {dec_sum_sql('l_extendedprice * (1 - l_discount)', 4)} AS total_rev
-  FROM lineitem
-  WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1997-04-01'
-  GROUP BY l_suppkey
+Q18_SQL = f"""
+WITH big AS (
+  SELECT l_orderkey, {dec_sum_sql('l_quantity', 2)} AS total_qty
+  FROM lineitem GROUP BY l_orderkey
+  HAVING CAST(sum(CAST(l_quantity AS DECIMAL(27,2))) AS DOUBLE) > 150
 )
-SELECT s_suppkey, s_name, total_rev
-FROM rev JOIN supplier ON l_suppkey = s_suppkey
-WHERE total_rev = (SELECT max(total_rev) FROM rev)
-ORDER BY s_suppkey
+SELECT l_orderkey, o_custkey, o_totalprice, total_qty
+FROM big JOIN orders ON l_orderkey = o_orderkey
+ORDER BY total_qty DESC, l_orderkey LIMIT 50
 """
 
 
+@query("q18_large_orders", Q18_SQL)
 def q18_large_orders(spark, sf_dir):
     """TPC-H Q18 shape: orders whose total quantity exceeds a threshold
     (groupBy + HAVING + join back)."""
@@ -171,18 +188,17 @@ def q18_large_orders(spark, sf_dir):
     return out.to_spark()
 
 
-Q18_SQL = f"""
-WITH big AS (
-  SELECT l_orderkey, {dec_sum_sql('l_quantity', 2)} AS total_qty
-  FROM lineitem GROUP BY l_orderkey
-  HAVING CAST(sum(CAST(l_quantity AS DECIMAL(27,2))) AS DOUBLE) > 150
-)
-SELECT l_orderkey, o_custkey, o_totalprice, total_qty
-FROM big JOIN orders ON l_orderkey = o_orderkey
-ORDER BY total_qty DESC, l_orderkey LIMIT 50
+Q19_SQL = f"""
+SELECT {dec_sum_sql('l_extendedprice * (1 - l_discount)', 4)} AS revenue,
+       count(*) AS n
+FROM lineitem JOIN part ON l_partkey = p_partkey
+WHERE (p_brand = 'Brand#1' AND p_size <= 10 AND l_quantity BETWEEN 1 AND 20)
+   OR (p_brand = 'Brand#2' AND p_size <= 20 AND l_quantity BETWEEN 10 AND 30)
+   OR (p_brand = 'Brand#3' AND p_size <= 30 AND l_quantity BETWEEN 20 AND 40)
 """
 
 
+@query("q19_or_predicates", Q19_SQL)
 def q19_or_predicates(spark, sf_dir):
     """TPC-H Q19 shape: disjunction of conjunctive range predicates —
     exercises Catalyst CNF conversion + pushdown (reference:
@@ -203,26 +219,26 @@ def q19_or_predicates(spark, sf_dir):
     )
 
 
-Q19_SQL = f"""
-SELECT {dec_sum_sql('l_extendedprice * (1 - l_discount)', 4)} AS revenue,
-       count(*) AS n
-FROM lineitem JOIN part ON l_partkey = p_partkey
-WHERE (p_brand = 'Brand#1' AND p_size <= 10 AND l_quantity BETWEEN 1 AND 20)
-   OR (p_brand = 'Brand#2' AND p_size <= 20 AND l_quantity BETWEEN 10 AND 30)
-   OR (p_brand = 'Brand#3' AND p_size <= 30 AND l_quantity BETWEEN 20 AND 40)
+Q7_SQL = f"""
+SELECT supp_nation, cust_nation, year, volume, n FROM (
+  SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
+         year(l_shipdate) AS year,
+         {dec_sum_sql('l_extendedprice * (1 - l_discount)', 4)} AS volume,
+         count(l_orderkey) AS n
+  FROM lineitem
+  JOIN orders   ON l_orderkey = o_orderkey
+  JOIN customer ON o_custkey = c_custkey
+  JOIN supplier ON l_suppkey = s_suppkey
+  JOIN nation n1 ON s_nationkey = n1.n_nationkey
+  JOIN nation n2 ON c_nationkey = n2.n_nationkey
+  WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1998-01-01'
+    AND n1.n_name <> n2.n_name
+  GROUP BY 1, 2, 3
+) WHERE n >= 20 ORDER BY supp_nation, cust_nation, year
 """
 
 
-QUERIES = {
-    "q4_priority_late": (q4_priority_with_late_lines, Q4_SQL),
-    "q10_returned_revenue": (q10_returned_revenue, Q10_SQL),
-    "q14_type_revenue_ratio": (q14_type_revenue_ratio, Q14_SQL),
-    "q15_top_suppliers": (q15_top_suppliers, Q15_SQL),
-    "q18_large_orders": (q18_large_orders, Q18_SQL),
-    "q19_or_predicates": (q19_or_predicates, Q19_SQL),
-}
-
-
+@query("q7_nation_volume", Q7_SQL)
 def q7_nation_volume(spark, sf_dir):
     """TPC-H Q7 shape: shipping volume between supplier-nation and
     customer-nation pairs — two independent dimension chains joined to
@@ -260,25 +276,23 @@ def q7_nation_volume(spark, sf_dir):
     return out.to_spark()
 
 
-Q7_SQL = f"""
-SELECT supp_nation, cust_nation, year, volume, n FROM (
-  SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-         year(l_shipdate) AS year,
-         {dec_sum_sql('l_extendedprice * (1 - l_discount)', 4)} AS volume,
-         count(l_orderkey) AS n
-  FROM lineitem
-  JOIN orders   ON l_orderkey = o_orderkey
-  JOIN customer ON o_custkey = c_custkey
-  JOIN supplier ON l_suppkey = s_suppkey
-  JOIN nation n1 ON s_nationkey = n1.n_nationkey
-  JOIN nation n2 ON c_nationkey = n2.n_nationkey
-  WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1998-01-01'
-    AND n1.n_name <> n2.n_name
-  GROUP BY 1, 2, 3
-) WHERE n >= 20 ORDER BY supp_nation, cust_nation, year
+Q8_SQL = """
+SELECT year(o_orderdate) AS year,
+       CAST(sum(CAST(round(CASE WHEN n_name = 'NATION_0'
+                                THEN l_extendedprice * (1 - l_discount)
+                                ELSE 0.0 END * 10000) AS BIGINT)) AS DOUBLE)
+       / CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT)) AS DOUBLE)
+         AS mkt_share,
+       count(*) AS n
+FROM lineitem
+JOIN orders   ON l_orderkey = o_orderkey
+JOIN customer ON o_custkey = c_custkey
+JOIN nation   ON c_nationkey = n_nationkey
+GROUP BY 1 ORDER BY 1
 """
 
 
+@query("q8_market_share", Q8_SQL)
 def q8_market_share(spark, sf_dir):
     """TPC-H Q8 shape: NATION_0's share of revenue per year — ratio of
     a conditional exact sum over the total exact sum."""
@@ -307,23 +321,3 @@ def q8_market_share(spark, sf_dir):
         .orderBy("year")
     )
     return out
-
-
-Q8_SQL = """
-SELECT year(o_orderdate) AS year,
-       CAST(sum(CAST(round(CASE WHEN n_name = 'NATION_0'
-                                THEN l_extendedprice * (1 - l_discount)
-                                ELSE 0.0 END * 10000) AS BIGINT)) AS DOUBLE)
-       / CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT)) AS DOUBLE)
-         AS mkt_share,
-       count(*) AS n
-FROM lineitem
-JOIN orders   ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation   ON c_nationkey = n_nationkey
-GROUP BY 1 ORDER BY 1
-"""
-
-
-QUERIES["q7_nation_volume"] = (q7_nation_volume, Q7_SQL)
-QUERIES["q8_market_share"] = (q8_market_share, Q8_SQL)

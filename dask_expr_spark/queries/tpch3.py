@@ -18,9 +18,24 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ._util import cent_sum, cent_sum_sql, dec_sum, dec_sum_sql, tbl
+from ._util import cent_sum, cent_sum_sql, dec_sum, dec_sum_sql, query, tbl
 
 
+Q9_SQL = f"""
+SELECT n_name AS nation, EXTRACT(year FROM o_orderdate) AS o_year,
+       {dec_sum_sql('l_extendedprice * (1 - l_discount)', 4)} AS sum_profit
+FROM lineitem
+JOIN part     ON l_partkey = p_partkey
+JOIN supplier ON l_suppkey = s_suppkey
+JOIN orders   ON l_orderkey = o_orderkey
+JOIN nation   ON s_nationkey = n_nationkey
+WHERE p_name LIKE '%red%'
+GROUP BY n_name, o_year
+ORDER BY n_name, o_year DESC
+"""
+
+
+@query("q9_profit_by_nation", Q9_SQL)
 def q9_profit_by_nation(spark, sf_dir):
     """TPC-H Q9 shape (no partsupp → profit = discounted revenue):
     per-nation, per-year profit on parts whose name contains 'red'.
@@ -55,20 +70,18 @@ def q9_profit_by_nation(spark, sf_dir):
     )
 
 
-Q9_SQL = f"""
-SELECT n_name AS nation, EXTRACT(year FROM o_orderdate) AS o_year,
-       {dec_sum_sql('l_extendedprice * (1 - l_discount)', 4)} AS sum_profit
-FROM lineitem
-JOIN part     ON l_partkey = p_partkey
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN orders   ON l_orderkey = o_orderkey
-JOIN nation   ON s_nationkey = n_nationkey
-WHERE p_name LIKE '%red%'
-GROUP BY n_name, o_year
-ORDER BY n_name, o_year DESC
+Q12_SQL = """
+SELECT l_linestatus,
+       CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
+       CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
+FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+WHERE l_shipdate > o_orderdate
+  AND l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1998-01-01'
+GROUP BY l_linestatus ORDER BY l_linestatus
 """
 
 
+@query("q12_late_priority_counts", Q12_SQL)
 def q12_late_priority_counts(spark, sf_dir):
     """TPC-H Q12 shape (no shipmode → group by l_linestatus): for lines
     shipped after the order date in 1997, count high- vs low-priority
@@ -93,17 +106,18 @@ def q12_late_priority_counts(spark, sf_dir):
     )
 
 
-Q12_SQL = """
-SELECT l_linestatus,
-       CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-       CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
-FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-WHERE l_shipdate > o_orderdate
-  AND l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1998-01-01'
-GROUP BY l_linestatus ORDER BY l_linestatus
+Q13_SQL = """
+SELECT c_count, count(*) AS custdist
+FROM (SELECT c_custkey, count(o_orderkey) AS c_count
+      FROM customer LEFT OUTER JOIN orders
+        ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
+      GROUP BY c_custkey) c_orders
+GROUP BY c_count
+ORDER BY custdist DESC, c_count DESC
 """
 
 
+@query("q13_customer_distribution", Q13_SQL)
 def q13_customer_distribution(spark, sf_dir):
     """TPC-H Q13: histogram of per-customer order counts, including
     zero-order customers (left outer join). Two aggregation levels; the
@@ -125,17 +139,18 @@ def q13_customer_distribution(spark, sf_dir):
     )
 
 
-Q13_SQL = """
-SELECT c_count, count(*) AS custdist
-FROM (SELECT c_custkey, count(o_orderkey) AS c_count
-      FROM customer LEFT OUTER JOIN orders
-        ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
-      GROUP BY c_custkey) c_orders
-GROUP BY c_count
-ORDER BY custdist DESC, c_count DESC
+Q16_SQL = """
+SELECT p_brand, p_type, count(DISTINCT l_suppkey) AS supplier_cnt
+FROM (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem) pairs
+JOIN part ON l_partkey = p_partkey
+WHERE p_brand <> 'Brand#1'
+  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
+GROUP BY p_brand, p_type
+ORDER BY supplier_cnt DESC, p_brand, p_type
 """
 
 
+@query("q16_supplier_variety", Q16_SQL)
 def q16_supplier_variety(spark, sf_dir):
     """TPC-H Q16 shape (no partsupp → part↔supplier pairs observed in
     lineitem): distinct suppliers able to supply each (brand, type)
@@ -161,17 +176,16 @@ def q16_supplier_variety(spark, sf_dir):
     )
 
 
-Q16_SQL = """
-SELECT p_brand, p_type, count(DISTINCT l_suppkey) AS supplier_cnt
-FROM (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem) pairs
-JOIN part ON l_partkey = p_partkey
-WHERE p_brand <> 'Brand#1'
-  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-GROUP BY p_brand, p_type
-ORDER BY supplier_cnt DESC, p_brand, p_type
+Q17_SQL = f"""
+SELECT {dec_sum_sql('l_extendedprice', 2)} / 7.0 AS avg_yearly
+FROM lineitem JOIN part ON l_partkey = p_partkey
+WHERE p_brand = 'Brand#21'
+  AND l_quantity < (SELECT 0.2 * avg(l_quantity) FROM lineitem l2
+                    WHERE l2.l_partkey = lineitem.l_partkey)
 """
 
 
+@query("q17_small_quantity_revenue", Q17_SQL)
 def q17_small_quantity_revenue(spark, sf_dir):
     """TPC-H Q17: average yearly revenue lost if small-quantity orders
     (below 20% of the part's average order quantity) were not filled,
@@ -197,15 +211,27 @@ def q17_small_quantity_revenue(spark, sf_dir):
     )
 
 
-Q17_SQL = f"""
-SELECT {dec_sum_sql('l_extendedprice', 2)} / 7.0 AS avg_yearly
-FROM lineitem JOIN part ON l_partkey = p_partkey
-WHERE p_brand = 'Brand#21'
-  AND l_quantity < (SELECT 0.2 * avg(l_quantity) FROM lineitem l2
-                    WHERE l2.l_partkey = lineitem.l_partkey)
+Q21_SQL = """
+WITH lf AS (
+  SELECT l_orderkey, l_suppkey, l_shipdate, o_orderdate
+  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+  WHERE o_orderstatus = 'F'
+), per_order AS (
+  SELECT l_orderkey,
+         count(DISTINCT l_suppkey) AS n_supp,
+         count(DISTINCT CASE WHEN l_shipdate > o_orderdate THEN l_suppkey END) AS n_late,
+         max(CASE WHEN l_shipdate > o_orderdate THEN l_suppkey END) AS late_supp
+  FROM lf GROUP BY l_orderkey
+)
+SELECT s_name, count(DISTINCT l_orderkey) AS numwait
+FROM per_order JOIN supplier ON late_supp = s_suppkey
+WHERE n_supp > 1 AND n_late = 1
+GROUP BY s_name
+ORDER BY numwait DESC, s_name LIMIT 20
 """
 
 
+@query("q21_waiting_supplier", Q21_SQL)
 def q21_waiting_supplier(spark, sf_dir):
     """TPC-H Q21 shape (late = shipped after order date): per supplier,
     the number of finished multi-supplier orders where that supplier
@@ -239,26 +265,17 @@ def q21_waiting_supplier(spark, sf_dir):
     )
 
 
-Q21_SQL = """
-WITH lf AS (
-  SELECT l_orderkey, l_suppkey, l_shipdate, o_orderdate
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-  WHERE o_orderstatus = 'F'
-), per_order AS (
-  SELECT l_orderkey,
-         count(DISTINCT l_suppkey) AS n_supp,
-         count(DISTINCT CASE WHEN l_shipdate > o_orderdate THEN l_suppkey END) AS n_late,
-         max(CASE WHEN l_shipdate > o_orderdate THEN l_suppkey END) AS late_supp
-  FROM lf GROUP BY l_orderkey
-)
-SELECT s_name, count(DISTINCT l_orderkey) AS numwait
-FROM per_order JOIN supplier ON late_supp = s_suppkey
-WHERE n_supp > 1 AND n_late = 1
-GROUP BY s_name
-ORDER BY numwait DESC, s_name LIMIT 20
+Q22_SQL = f"""
+SELECT c_mktsegment, count(*) AS numcust,
+       {dec_sum_sql('c_acctbal', 2)} AS totacctbal
+FROM customer
+WHERE c_acctbal > (SELECT avg(c_acctbal) FROM customer WHERE c_acctbal > 0.0)
+  AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
+GROUP BY c_mktsegment ORDER BY c_mktsegment
 """
 
 
+@query("q22_idle_customers", Q22_SQL)
 def q22_idle_customers(spark, sf_dir):
     """TPC-H Q22 shape (no phone → group by market segment): customers
     with above-average positive balances and no orders at all, counted
@@ -287,24 +304,3 @@ def q22_idle_customers(spark, sf_dir):
         )
         .orderBy("c_mktsegment")
     )
-
-
-Q22_SQL = f"""
-SELECT c_mktsegment, count(*) AS numcust,
-       {dec_sum_sql('c_acctbal', 2)} AS totacctbal
-FROM customer
-WHERE c_acctbal > (SELECT avg(c_acctbal) FROM customer WHERE c_acctbal > 0.0)
-  AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-GROUP BY c_mktsegment ORDER BY c_mktsegment
-"""
-
-
-QUERIES = {
-    "q9_profit_by_nation": (q9_profit_by_nation, Q9_SQL),
-    "q12_late_priority_counts": (q12_late_priority_counts, Q12_SQL),
-    "q13_customer_distribution": (q13_customer_distribution, Q13_SQL),
-    "q16_supplier_variety": (q16_supplier_variety, Q16_SQL),
-    "q17_small_quantity_revenue": (q17_small_quantity_revenue, Q17_SQL),
-    "q21_waiting_supplier": (q21_waiting_supplier, Q21_SQL),
-    "q22_idle_customers": (q22_idle_customers, Q22_SQL),
-}

@@ -28,9 +28,33 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ._util import tbl
+from ._util import query, tbl
 
 
+Q2_SQL = """
+WITH ps AS (
+  SELECT l_partkey, l_suppkey,
+         min(round(l_extendedprice / l_quantity, 4)) AS unit_cost
+  FROM lineitem GROUP BY 1, 2
+),
+cost AS (
+  SELECT s_acctbal, s_name, n_name, p_partkey, p_brand, unit_cost
+  FROM ps
+  JOIN part ON p_partkey = l_partkey
+  JOIN supplier ON s_suppkey = l_suppkey
+  JOIN nation ON n_nationkey = s_nationkey
+  JOIN region ON r_regionkey = n_regionkey
+  WHERE r_name = 'EUROPE' AND p_type = 'STANDARD' AND p_size <= 10
+),
+mc AS (SELECT p_partkey, min(unit_cost) AS mc FROM cost GROUP BY 1)
+SELECT s_acctbal, s_name, n_name, cost.p_partkey AS p_partkey, p_brand,
+       unit_cost AS min_cost
+FROM cost JOIN mc ON cost.p_partkey = mc.p_partkey AND unit_cost = mc.mc
+ORDER BY s_acctbal DESC, n_name, s_name, cost.p_partkey
+"""
+
+
+@query("q2_min_cost_supplier", Q2_SQL)
 def q2_min_cost_supplier(spark, sf_dir):
     """TPC-H Q2 shape: for each STANDARD part of size ≤ 10, the
     EUROPE supplier(s) offering it at the minimum unit cost.
@@ -78,29 +102,24 @@ def q2_min_cost_supplier(spark, sf_dir):
                          "p_partkey"))
 
 
-Q2_SQL = """
-WITH ps AS (
-  SELECT l_partkey, l_suppkey,
-         min(round(l_extendedprice / l_quantity, 4)) AS unit_cost
-  FROM lineitem GROUP BY 1, 2
-),
-cost AS (
-  SELECT s_acctbal, s_name, n_name, p_partkey, p_brand, unit_cost
-  FROM ps
-  JOIN part ON p_partkey = l_partkey
+Q11_SQL = """
+WITH v AS (
+  SELECT l_partkey,
+         sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS vc
+  FROM lineitem
   JOIN supplier ON s_suppkey = l_suppkey
   JOIN nation ON n_nationkey = s_nationkey
-  JOIN region ON r_regionkey = n_regionkey
-  WHERE r_name = 'EUROPE' AND p_type = 'STANDARD' AND p_size <= 10
-),
-mc AS (SELECT p_partkey, min(unit_cost) AS mc FROM cost GROUP BY 1)
-SELECT s_acctbal, s_name, n_name, cost.p_partkey AS p_partkey, p_brand,
-       unit_cost AS min_cost
-FROM cost JOIN mc ON cost.p_partkey = mc.p_partkey AND unit_cost = mc.mc
-ORDER BY s_acctbal DESC, n_name, s_name, cost.p_partkey
+  WHERE n_name = 'NATION_7'
+  GROUP BY 1
+)
+SELECT l_partkey, CAST(vc AS DOUBLE) / 100.0 AS value
+FROM v
+WHERE CAST(vc AS DOUBLE) > 0.001 * (SELECT CAST(sum(vc) AS DOUBLE) FROM v)
+ORDER BY value DESC, l_partkey
 """
 
 
+@query("q11_important_stock", Q11_SQL)
 def q11_important_stock(spark, sf_dir):
     """TPC-H Q11 shape: parts whose shipped value from NATION_7
     suppliers exceeds 0.1% of the total such value.
@@ -136,23 +155,26 @@ def q11_important_stock(spark, sf_dir):
               .orderBy(F.col("value").desc(), "l_partkey"))
 
 
-Q11_SQL = """
-WITH v AS (
-  SELECT l_partkey,
-         sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS vc
+Q20_SQL = """
+WITH q AS (
+  SELECT l_suppkey, l_partkey,
+         sum(CAST(round(l_quantity * 100) AS BIGINT)) AS qsp
   FROM lineitem
-  JOIN supplier ON s_suppkey = l_suppkey
-  JOIN nation ON n_nationkey = s_nationkey
-  WHERE n_name = 'NATION_7'
-  GROUP BY 1
-)
-SELECT l_partkey, CAST(vc AS DOUBLE) / 100.0 AS value
-FROM v
-WHERE CAST(vc AS DOUBLE) > 0.001 * (SELECT CAST(sum(vc) AS DOUBLE) FROM v)
-ORDER BY value DESC, l_partkey
+  JOIN part ON p_partkey = l_partkey
+  WHERE p_name LIKE 'cold%' AND EXTRACT(year FROM l_shipdate) = 1997
+  GROUP BY 1, 2
+),
+p AS (SELECT l_partkey, sum(qsp) AS qp FROM q GROUP BY 1)
+SELECT s_name, s_acctbal
+FROM supplier
+WHERE s_suppkey IN (
+  SELECT l_suppkey FROM q JOIN p USING (l_partkey)
+  WHERE CAST(qsp AS DOUBLE) > 0.5 * CAST(qp AS DOUBLE))
+ORDER BY s_name
 """
 
 
+@query("q20_potential_promotion", Q20_SQL)
 def q20_potential_promotion(spark, sf_dir):
     """TPC-H Q20 shape: suppliers who dominated shipments of a
     'cold'-named part in 1997 — per (supplier, part) shipped quantity
@@ -186,29 +208,3 @@ def q20_potential_promotion(spark, sf_dir):
                       "left_semi")
                 .select("s_name", "s_acctbal")
                 .orderBy("s_name"))
-
-
-Q20_SQL = """
-WITH q AS (
-  SELECT l_suppkey, l_partkey,
-         sum(CAST(round(l_quantity * 100) AS BIGINT)) AS qsp
-  FROM lineitem
-  JOIN part ON p_partkey = l_partkey
-  WHERE p_name LIKE 'cold%' AND EXTRACT(year FROM l_shipdate) = 1997
-  GROUP BY 1, 2
-),
-p AS (SELECT l_partkey, sum(qsp) AS qp FROM q GROUP BY 1)
-SELECT s_name, s_acctbal
-FROM supplier
-WHERE s_suppkey IN (
-  SELECT l_suppkey FROM q JOIN p USING (l_partkey)
-  WHERE CAST(qsp AS DOUBLE) > 0.5 * CAST(qp AS DOUBLE))
-ORDER BY s_name
-"""
-
-
-QUERIES = {
-    "q2_min_cost_supplier": (q2_min_cost_supplier, Q2_SQL),
-    "q11_important_stock": (q11_important_stock, Q11_SQL),
-    "q20_potential_promotion": (q20_potential_promotion, Q20_SQL),
-}

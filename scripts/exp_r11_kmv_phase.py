@@ -38,7 +38,7 @@ def main() -> None:
                                                 "/root/testdata/sf0.1"))
     from dask_expr_spark.functions.sketches import (_md5_long, kmv_estimate,
                                                     kmv_rollup)
-    from dask_expr_spark.queries.round6b import _KMV_K, _kmv_slices
+    from dask_expr_spark.queries.approx import _KMV_K, _kmv_slices
 
     spark.read.parquet(f"{x100}/orders.parquet").count()
     a, b = _kmv_slices(spark, x100)

@@ -564,8 +564,8 @@ ROWS: list[tuple[str, list[dict]]] = [
                "recovery + sharded roundtrip/vacuum + newer-claim-"
                "survives-vacuum race + pointer-bloom ordering tests "
                "test_fsops; 10^5-file commit + rebase + retention "
-               "probes scripts/scale_probe_r9.py + scale_probe_r10.py"
-               " -> SCALE.md (flat across table decades)"),
+               "probes (rounds 9-10, results in SCALE.md: flat "
+               "across table decades)"),
         dict(op="versioned snapshots with TIME TRAVEL: uniquely-named "
                 "immutable version directories committed by the same "
                 "exclusive-claim CAS (_manifest.{n}.json — concurrent "

@@ -987,11 +987,14 @@ def test_read_manifested_partition_pruning(spark, tmp_path):
 # --------------------------- round 9: zone maps stay fresh on mutate
 
 @pytest.mark.parametrize("commit", ["rename", "pointer"])
-def test_zonemap_refreshes_after_delete_where(spark, tmp_path, commit):
+def test_zonemap_refreshes_after_delete_where(spark, tmp_path, commit,
+                                              monkeypatch):
     """delete_where refreshes a present `_zonemap` inline (VERDICT r8
     item 6): after the delete, pruned reads are still exact AND the
     manifest has no rows for deleted files — the pruning benefit
-    survives the mutation without a manual update_zonemap."""
+    survives the mutation without a manual update_zonemap.  The
+    refresh runs exactly once per delete, after the last filesystem
+    change, whether partitions rewrite, empty out, or both."""
     from pyspark.sql import functions as F
 
     from dask_expr_spark.sources import zonemap as Z
@@ -1007,16 +1010,26 @@ def test_zonemap_refreshes_after_delete_where(spark, tmp_path, commit):
     if commit == "pointer":
         M.manifest_bootstrap(path, "part")
     Z.build_zonemap(spark, path, ["k"])
-    files0 = set(Z._read_manifest_df(
-        spark, os.path.join(path, Z.ZONEMAP_DIR),
-        fsops.PosixFS()).select("file").toPandas()["file"])
 
+    def manifest_files():
+        return set(Z._read_manifest_df(
+            spark, os.path.join(path, Z.ZONEMAP_DIR),
+            fsops.PosixFS()).select("file").toPandas()["file"])
+
+    files0 = manifest_files()
+    refreshes = []
+    update = Z.update_zonemap
+
+    def counted_update(*args, **kwargs):
+        refreshes.append(1)
+        return update(*args, **kwargs)
+
+    monkeypatch.setattr(Z, "update_zonemap", counted_update)
     parts, n_del = M.delete_where(spark, path, F.col("k") < 30,
                                   "part", commit=commit)
     assert n_del == 30
-    man_files = set(Z._read_manifest_df(
-        spark, os.path.join(path, Z.ZONEMAP_DIR),
-        fsops.PosixFS()).select("file").toPandas()["file"])
+    assert len(refreshes) == 1
+    man_files = manifest_files()
     assert man_files != files0                 # refreshed, not stale
     live = set(Z._data_files(path))
     assert man_files == live                   # exactly the live files
@@ -1026,6 +1039,18 @@ def test_zonemap_refreshes_after_delete_where(spark, tmp_path, commit):
     assert got == list(range(45, 60))
     surv, total = Z.zone_prune(spark, path, [("k", ">=", 45)])
     assert 0 < len(surv) < total               # pruning still bites
+
+    # one delete that rewrites part=a (k=45) AND empties part=c
+    parts, n_del = M.delete_where(
+        spark, path, (F.col("part") == "c") | (F.col("k") == 45),
+        "part", commit=commit)
+    assert n_del == 11
+    assert len(refreshes) == 2
+    assert manifest_files() == set(Z._data_files(path))
+    got = sorted(r["k"] for r in
+                 Z.read_skipping(spark, path, [("k", ">=", 45)])
+                 .collect())
+    assert got == [k for k in range(46, 60) if k % 3 != 2]
 
 
 def test_zonemap_rebuilds_across_compact_parquet(spark, tmp_path):

@@ -506,3 +506,22 @@ def test_manifest_pruned_read_plan(spark, tmp_path):
     files = pruned.inputFiles()
     assert 0 < len(files) < total
     assert all("part=a" in f for f in files)
+
+
+@pytest.mark.parametrize("name", [
+    "dedup_ngram_jaccard", "dedup_minhash_lsh", "dedup_incremental_minhash",
+    "dedup_substring_spans", "dedup_simhash", "dedup_chunk_minhash"])
+def test_text_dedup_spreads_small_corpus_scan(spark, sf_dir, name):
+    """A corpus scan with fewer files than cores runs its shingle and
+    hash work in as many tasks as it has files, so the dedup operators
+    put a round-robin exchange (functions/dedup.py _spread_input)
+    before that work.  Plan only: nothing is collected."""
+    from dask_expr_spark.queries import collect_queries
+
+    docs = read_parquet(spark, os.path.join(sf_dir, "documents.parquet"))
+    n_files = len(docs.to_spark().inputFiles())
+    if n_files >= spark.sparkContext.defaultParallelism:
+        pytest.skip(f"{n_files} corpus files already fill "
+                    f"{spark.sparkContext.defaultParallelism} cores")
+    plan = plan_of(collect_queries()[name][0](spark, sf_dir))
+    assert "RoundRobinPartitioning" in plan

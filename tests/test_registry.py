@@ -6,10 +6,16 @@ None of these tests starts Spark."""
 from __future__ import annotations
 
 import json
+import pkgutil
+import re
+
+import pytest
 
 import __spark_entry__ as E
 import bench as B
+import dask_expr_spark.queries as Q
 from dask_expr_spark.queries import collect_queries
+from dask_expr_spark.queries._util import REGISTRY, query
 
 DRIVER_WINDOW = 50
 
@@ -108,3 +114,22 @@ def test_coverage_md_fresh():
         [sys.executable, os.path.join(root, "scripts", "gen_coverage.py"),
          "--check"], capture_output=True, text=True, cwd=root)
     assert res.returncode == 0, res.stdout + res.stderr
+
+
+def test_query_modules_named_by_family():
+    """Every query module is named for its family and registers at
+    least one query; no module is named for the round that added it."""
+    mods = [m.name for m in pkgutil.iter_modules(Q.__path__)]
+    assert not [m for m in mods if re.match(r"round\d", m)], mods
+    owners = {fn.__module__.rsplit(".", 1)[1]
+              for fn, _sql in collect_queries().values()}
+    empty = [m for m in mods if not m.startswith("_") and m not in owners]
+    assert not empty, f"modules registering no query: {empty}"
+
+
+def test_duplicate_query_name_raises():
+    name = next(iter(collect_queries()))
+    before = REGISTRY[name]
+    with pytest.raises(ValueError, match=name):
+        query(name, None)(lambda spark, sf_dir: None)
+    assert REGISTRY[name] is before
