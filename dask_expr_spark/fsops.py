@@ -10,7 +10,8 @@ filesystem an explicit seam instead of hard-coded `os`/`shutil` calls:
 
 - ``TableFS`` — the minimal interface the swap/snapshot/zonemap code
   calls (exists/listdir/rename/delete/walk/read_text/
-  write_text_atomic/write_text_exclusive), with an ``atomic_rename``
+  write_text_atomic/write_text_exclusive, plus the ``list_stats``
+  listing ``sources/io.py`` fingerprints), with an ``atomic_rename``
   capability flag the commit layer consults.
 - ``PosixFS`` — the default, backed by os/shutil; atomic_rename=True.
 - ``HadoopFS`` — backed by the JVM Hadoop FileSystem reached through
@@ -107,6 +108,20 @@ class PosixFS:
             for f in files:
                 fp = os.path.join(root, f)
                 yield fp, os.path.getsize(fp)
+
+    def list_stats(self, path: str):
+        """Yield (relative path, size, mtime_ns) for every file under
+        `path` (for a file, its own name) — a listing fingerprint, not a
+        clock: the mtime unit is the filesystem's own."""
+        if os.path.isfile(path):
+            st = os.stat(path)
+            yield os.path.basename(path), st.st_size, st.st_mtime_ns
+            return
+        for root, _, files in os.walk(path):
+            for f in files:
+                fp = os.path.join(root, f)
+                st = os.stat(fp)
+                yield os.path.relpath(fp, path), st.st_size, st.st_mtime_ns
 
     def read_text(self, path: str) -> str:
         with open(path) as f:
@@ -228,6 +243,19 @@ class HadoopFS:
                         stack.append(child)
                 else:
                     yield child, int(st.getLen())
+
+    def list_stats(self, path: str):
+        """Yield (relative path, size, mtime_ms) for every file under
+        `path` (for a file, its own name) from ONE recursive listing —
+        a flat LIST on object stores, not a walk per directory."""
+        base = self._fs.makeQualified(self._p(path)).toString()
+        it = self._fs.listFiles(self._p(path), True)
+        while it.hasNext():
+            st = it.next()
+            full = st.getPath().toString()
+            rel = (full[len(base):].lstrip("/") if full != base
+                   else st.getPath().getName())
+            yield rel, int(st.getLen()), int(st.getModificationTime())
 
     def read_text(self, path: str) -> str:
         stream = self._fs.open(self._p(path))

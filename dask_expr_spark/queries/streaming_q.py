@@ -715,7 +715,7 @@ def stream_upsert_snapshot(spark, sf_dir):
     SQL from first principles."""
     import time
 
-    from ..sources.io import read_parquet
+    from ..sources.io import parquet_schema, read_parquet
     from ..streaming import ops as S
 
     src = tempfile.mkdtemp(prefix="stream_ups_src_")
@@ -741,7 +741,7 @@ def stream_upsert_snapshot(spark, sf_dir):
                     t = base_t + i * 10
                     os.utime(os.path.join(src, f), (t, t))
                     stamped.add(f)
-        schema = spark.read.parquet(src).schema
+        schema = parquet_schema(spark, src)
         stream = (spark.readStream.schema(schema)
                   .option("maxFilesPerTrigger", 1).parquet(src))
         q_ = S.upsert_sink(stream, table_path, ["o_orderkey"],
@@ -867,6 +867,7 @@ def stream_upsert_bucketed(spark, sf_dir):
     import time
 
     from ..functions.maintenance import is_bucketed, read_bucketed
+    from ..sources.io import parquet_schema
     from ..streaming import ops as S
 
     src = tempfile.mkdtemp(prefix="stream_ubkt_src_")
@@ -891,7 +892,7 @@ def stream_upsert_bucketed(spark, sf_dir):
                     t = base_t + i * 10
                     os.utime(os.path.join(src, f), (t, t))
                     stamped.add(f)
-        schema = spark.read.parquet(src).schema
+        schema = parquet_schema(spark, src)
         stream = (spark.readStream.schema(schema)
                   .option("maxFilesPerTrigger", 1).parquet(src))
         q_ = S.upsert_sink(stream, table_path, ["o_orderkey"],
@@ -963,6 +964,7 @@ FROM hist GROUP BY s ORDER BY s
 def stream_scd2_history(spark, sf_dir):
     import time
 
+    from ..sources.io import parquet_schema
     from ..streaming import ops as S
 
     src = tempfile.mkdtemp(prefix="stream_scd2_src_")
@@ -990,7 +992,7 @@ def stream_scd2_history(spark, sf_dir):
                     t = base_t + i * 10
                     os.utime(os.path.join(src, f), (t, t))
                     stamped.add(f)
-        schema = spark.read.parquet(src).schema
+        schema = parquet_schema(spark, src)
         stream = (spark.readStream.schema(schema)
                   .option("maxFilesPerTrigger", 1).parquet(src))
         q_ = S.scd2_sink(stream, table_path, ["k"], "eff",
@@ -1046,6 +1048,7 @@ def stream_upsert_pointer(spark, sf_dir):
     import time
 
     from ..functions.maintenance import read_commit, read_manifested
+    from ..sources.io import parquet_schema
     from ..streaming import ops as S
 
     src = tempfile.mkdtemp(prefix="stream_ptr_src_")
@@ -1070,7 +1073,7 @@ def stream_upsert_pointer(spark, sf_dir):
                     t = base_t + i * 10
                     os.utime(os.path.join(src, f), (t, t))
                     stamped.add(f)
-        schema = spark.read.parquet(src).schema
+        schema = parquet_schema(spark, src)
         stream = (spark.readStream.schema(schema)
                   .option("maxFilesPerTrigger", 1).parquet(src))
         q_ = S.upsert_sink(stream, table_path, ["o_orderkey"],

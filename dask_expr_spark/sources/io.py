@@ -9,10 +9,14 @@ pruning (io/io.py:68-102), partition pruning, count-star from footers
 
 from __future__ import annotations
 
+import hashlib
 import os
-from typing import Sequence
+import threading
+from collections import OrderedDict
+from typing import NamedTuple, Sequence
 
 from pyspark.sql import SparkSession
+from pyspark.sql.types import StructType
 
 from ..collection import DataFrame
 
@@ -38,6 +42,116 @@ def _nano_ts_columns(path: str) -> list[str]:
         ]
     except Exception:
         return []
+
+
+# The parquet schema cache: Spark's schema is static, so it is inferred
+# once per table version (PAPER.md §1.2), not once per open.  Keyed on
+# the absolute path; an entry is valid while the path's file listing
+# and the session's inference confs are unchanged.  Schemas only — no
+# DataFrame or JVM object is held.
+_SCHEMA_CACHE_MAX = 256
+# session confs that change what parquet schema inference returns
+_INFERENCE_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.caseSensitive",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+
+
+class _SchemaEntry(NamedTuple):
+    fingerprint: str
+    confs: tuple
+    schema: StructType
+    nano_cols: tuple
+
+
+_SCHEMA_CACHE: OrderedDict[str, _SchemaEntry] = OrderedDict()
+_SCHEMA_LOCK = threading.Lock()
+
+
+def _partition_names(stats) -> list[str]:
+    """Hive partition columns Spark discovers from a listing, outermost
+    first."""
+    names: list[str] = []
+    for rel, _, _ in stats:
+        parts = rel.split("/")
+        # names Spark's file index skips
+        if any(p.startswith(".") or (p.startswith("_") and "=" not in p)
+               for p in parts):
+            continue
+        for d in parts[:-1]:
+            k = d.split("=", 1)[0]
+            if "=" in d and k not in names:
+                names.append(k)
+    return names
+
+
+def _listing(spark: SparkSession, path: str):
+    """(cache key, fingerprint, stats) of the files under `path`, or None
+    when it lists no file (a glob, a missing or an empty path): those
+    always infer, and Spark raises as it always did."""
+    from py4j.protocol import Py4JJavaError
+
+    from ..fsops import PosixFS, get_fs
+
+    try:
+        fs = get_fs(path, spark)
+        stats = sorted(fs.list_stats(path))
+    except (OSError, Py4JJavaError):
+        return None
+    if not stats:
+        return None
+    key = os.path.abspath(path) if isinstance(fs, PosixFS) else path
+    return key, hashlib.sha1(repr(stats).encode()).hexdigest(), stats
+
+
+def _resolve_schema(spark: SparkSession, path: str):
+    """(schema, nano columns, inferred frame) of the parquet at `path`.
+    A hit returns the cached schema and no frame: the caller reads with
+    the schema passed, which launches no inference job.  A miss infers
+    as an uncached read does and stores the entry."""
+    listing = _listing(spark, path)
+    confs = tuple(spark.conf.get(k) for k in _INFERENCE_CONFS)
+    if listing is not None:
+        key, fingerprint, stats = listing
+        with _SCHEMA_LOCK:
+            hit = _SCHEMA_CACHE.get(key)
+            if hit is not None and hit.fingerprint == fingerprint \
+                    and hit.confs == confs:
+                _SCHEMA_CACHE.move_to_end(key)
+                return hit.schema, hit.nano_cols, None
+    nano_cols = tuple(_nano_ts_columns(path))
+    if nano_cols:
+        # without this the scan throws PARQUET_TYPE_ILLEGAL — set it
+        # defensively so the engine works in ANY session (a caller may
+        # build its own SparkSession without our session.py config)
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        confs = tuple(spark.conf.get(k) for k in _INFERENCE_CONFS)
+    sdf = spark.read.parquet(path)
+    schema = sdf.schema
+    if listing is not None:
+        # an explicit schema puts the partition columns last; a data
+        # column that is also a partition column keeps its file position
+        # under inference, so such a table is never cached
+        parts = _partition_names(stats)
+        if not parts or schema.fieldNames()[-len(parts):] == parts:
+            with _SCHEMA_LOCK:
+                _SCHEMA_CACHE[key] = _SchemaEntry(fingerprint, confs,
+                                                  schema, nano_cols)
+                _SCHEMA_CACHE.move_to_end(key)
+                while len(_SCHEMA_CACHE) > _SCHEMA_CACHE_MAX:
+                    _SCHEMA_CACHE.popitem(last=False)
+    return schema, nano_cols, sdf
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema Spark infers for the parquet at `path`, through the
+    same cache as `read_parquet` (a hit launches no job)."""
+    return _resolve_schema(spark, path)[0]
 
 
 def _filters_to_expr(filters) -> str:
@@ -69,16 +183,22 @@ def read_parquet(spark: SparkSession, path: str,
     """reference: ReadParquet (io/parquet.py:712); columns= and filters=
     are sugar — Catalyst pushes .select/.filter into the scan anyway.
     filters accepts a SQL string or the pandas/dask tuple form
-    ([(col, op, val), ...] conjunction; list-of-lists DNF)."""
+    ([(col, op, val), ...] conjunction; list-of-lists DNF).
+
+    Metadata caching: the inferred schema is cached per absolute path
+    (LRU, `_SCHEMA_CACHE_MAX` entries, schemas only).  Every call lists
+    the path through `fsops` — name, size and mtime of every file — and
+    reuses the schema while that listing and the session's parquet
+    inference confs (`_INFERENCE_CONFS`) are unchanged, reading with
+    `spark.read.schema(cached)`: no inference job, no footer read.  Any
+    added, removed or rewritten file, or a changed conf, re-infers.
+    Paths that list no file (globs) and tables with a partition column
+    also stored in the files always infer."""
     from pyspark.sql import functions as F
 
-    nano_cols = _nano_ts_columns(path)
-    if nano_cols:
-        # without this the scan throws PARQUET_TYPE_ILLEGAL — set it
-        # defensively so the engine works in ANY session (the driver
-        # builds its own SparkSession without our session.py config)
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    sdf = spark.read.parquet(path)
+    schema, nano_cols, sdf = _resolve_schema(spark, path)
+    if sdf is None:
+        sdf = spark.read.schema(schema).parquet(path)
     for c in nano_cols:
         # integer div: nanos exceed 2^53, float division would lose µs
         sdf = sdf.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
@@ -265,11 +385,15 @@ def from_dict(spark: SparkSession, data: dict, npartitions: int | None = None) -
 
 def load_tables(spark: SparkSession, sf_dir: str,
                 names: Sequence[str] = TABLES) -> dict[str, DataFrame]:
-    """Load the driver's testdata star schema (TESTDATA.md)."""
+    """Load the testdata star schema (TESTDATA.md); `sf_dir`
+    may be a local path or a URI (file://, s3a://, ...)."""
+    from ..fsops import get_fs
+
+    fs = get_fs(sf_dir, spark)
     out = {}
     for name in names:
         p = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(p):
+        if fs.exists(p):
             out[name] = read_parquet(spark, p)
     return out
 

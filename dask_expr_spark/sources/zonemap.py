@@ -75,7 +75,9 @@ def _zonemap_schema(spark: SparkSession, path: str,
                     cols: list[str]):
     from pyspark.sql import types as TT
 
-    table_schema = spark.read.parquet(path).schema
+    from .io import parquet_schema
+
+    table_schema = parquet_schema(spark, path)
     fields = [TT.StructField("file", TT.StringType()),
               TT.StructField("n_rows", TT.LongType())]
     for c in cols:

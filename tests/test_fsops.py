@@ -67,6 +67,28 @@ def test_posix_walk_files_skip_dir(tmp_path):
     assert names == {"a.parquet": 2, "c.parquet": 3}
 
 
+def test_list_stats_same_listing_on_both_filesystems(spark, tmp_path):
+    """PosixFS and HadoopFS list the same relative paths and sizes (the
+    read_parquet schema cache fingerprints either); mtimes agree up to
+    each filesystem's unit (ns vs ms)."""
+    d = tmp_path / "d"
+    (d / "p=1").mkdir(parents=True)
+    (d / "a.parquet").write_bytes(b"xx")
+    (d / "p=1" / "b.parquet").write_bytes(b"yyy")
+    posix = sorted(fsops.PosixFS().list_stats(str(d)))
+    hadoop = sorted(fsops.get_fs(f"file://{d}", spark)
+                    .list_stats(f"file://{d}"))
+    assert [(r, s) for r, s, _ in posix] == \
+        [("a.parquet", 2), ("p=1/b.parquet", 3)]
+    assert [(r, s) for r, s, _ in hadoop] == [(r, s) for r, s, _ in posix]
+    assert [m // 10**6 for _, _, m in posix] == [m for _, _, m in hadoop]
+    one = f"file://{d}/a.parquet"
+    assert [r for r, _, _ in fsops.get_fs(one, spark).list_stats(one)] \
+        == ["a.parquet"]
+    assert [r for r, _, _ in fsops.PosixFS().list_stats(str(d / "a.parquet"))] \
+        == ["a.parquet"]
+
+
 def test_scheme_resolution():
     assert fsops.scheme_of("/tmp/x") == "file"
     assert fsops.scheme_of("file:///tmp/x") == "file"

@@ -361,3 +361,218 @@ def test_parquet_zorder_needs_two_columns(spark, tmp_path):
     df = from_pandas(spark, pd.DataFrame({"a": [1, 2], "b": [3, 4]}))
     with pytest.raises(ValueError, match="zorder"):
         df.to_parquet(str(tmp_path / "x"), sort_by="a", cluster="zorder")
+
+
+def test_load_tables_file_uri(spark, tmp_path):
+    """`sf_dir` given as a file:// URI is checked through fsops, not
+    os.path (which reports every URI as missing)."""
+    pd.DataFrame({"r_regionkey": [0, 1]}).to_parquet(tmp_path / "region.parquet")
+    pd.DataFrame({"n_nationkey": [0, 1, 2]}).to_parquet(tmp_path / "nation.parquet")
+    tables = load_tables(spark, f"file://{tmp_path}",
+                         names=("region", "nation", "orders"))
+    assert set(tables) == {"region", "nation"}
+    assert len(tables["nation"]) == 3
+
+
+# --- the parquet schema cache (sources/io.py `_resolve_schema`) -----------
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs `fn()` launches, counted under a fresh job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"schema-cache-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count jobs")
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _uncached(spark, path):
+    """A read that bypasses the cache: the inference path, uncached."""
+    from dask_expr_spark.sources import io
+
+    io._SCHEMA_CACHE.clear()
+    return read_parquet(spark, path)
+
+
+def _assert_same(got, want):
+    g, w = got.to_spark(), want.to_spark()
+    assert g.schema == w.schema
+    assert sorted(map(tuple, g.collect()), key=repr) == \
+        sorted(map(tuple, w.collect()), key=repr)
+
+
+@pytest.mark.parametrize("uri", [False, True], ids=["local", "file_uri"])
+def test_schema_cache_second_read_launches_no_job(spark, tmp_path, uri):
+    """The claim the cache exists for: a first open infers (>= 1 job), a
+    second open of the unchanged path launches none.  The file:// case
+    fingerprints through HadoopFS.list_stats."""
+    d = tmp_path / "t"
+    d.mkdir()
+    pd.DataFrame({"a": [1, 2], "b": ["x", "y"]}).to_parquet(d / "part-0.parquet")
+    pd.DataFrame({"a": [3], "b": ["z"]}).to_parquet(d / "part-1.parquet")
+    path = f"file://{d}" if uri else str(d)
+    assert _jobs(spark, lambda: read_parquet(spark, path).columns) >= 1
+    assert _jobs(spark, lambda: read_parquet(spark, path).columns) == 0
+    _assert_same(read_parquet(spark, path), _uncached(spark, path))
+
+
+def test_schema_cache_sees_overwrite_with_added_column(spark, tmp_path):
+    path = str(tmp_path / "t.parquet")
+    pd.DataFrame({"a": [1, 2]}).to_parquet(path)
+    assert read_parquet(spark, path).columns == ["a"]
+    pd.DataFrame({"a": [1, 2], "c": [0.5, 1.5]}).to_parquet(path)
+    got = read_parquet(spark, path)
+    assert got.columns == ["a", "c"]
+    _assert_same(got, _uncached(spark, path))
+
+
+def test_schema_cache_relists_appended_and_deleted_files(spark, tmp_path):
+    d = tmp_path / "t"
+    d.mkdir()
+    for i in range(2):
+        pd.DataFrame({"a": [i]}).to_parquet(d / f"part-{i}.parquet")
+    path = str(d)
+    read_parquet(spark, path).columns
+    pd.DataFrame({"a": [2]}).to_parquet(d / "part-2.parquet")
+    (d / "part-0.parquet").unlink()
+    assert _jobs(spark, lambda: read_parquet(spark, path).columns) >= 1
+    got = read_parquet(spark, path)
+    assert sorted(got.compute()["a"]) == [1, 2]
+    _assert_same(got, _uncached(spark, path))
+
+
+def test_schema_cache_keeps_partition_column_types_and_order(spark, tmp_path):
+    d = tmp_path / "t"
+    for p, q in [(1, 10), (2, 20), (2, 30)]:
+        (d / f"p={p}" / f"q={q}").mkdir(parents=True)
+        pd.DataFrame({"a": [p * q], "b": ["s"]}).to_parquet(
+            d / f"p={p}" / f"q={q}" / "part-0.parquet")
+    path = str(d)
+    first = read_parquet(spark, path)
+    assert _jobs(spark, lambda: read_parquet(spark, path).columns) == 0
+    got = read_parquet(spark, path)
+    assert got.columns == ["a", "b", "p", "q"]
+    assert [f.dataType.typeName() for f in got.to_spark().schema.fields[2:]] \
+        == ["integer", "integer"]
+    _assert_same(got, first)
+    _assert_same(got, _uncached(spark, path))
+
+
+def test_schema_cache_skips_partition_column_stored_in_files(spark, tmp_path):
+    """Inference keeps such a column at its file position, an explicit
+    schema would move it last, so the table is never cached."""
+    d = tmp_path / "t"
+    for p in (1, 2):
+        (d / f"p={p}").mkdir(parents=True)
+        pd.DataFrame({"p": [p], "a": [p * 10]}).to_parquet(
+            d / f"p={p}" / "part-0.parquet")
+    path = str(d)
+    first = read_parquet(spark, path)
+    assert first.columns == ["p", "a"]
+    assert _jobs(spark, lambda: read_parquet(spark, path).columns) >= 1
+    _assert_same(read_parquet(spark, path), first)
+
+
+def test_schema_cache_truncates_nano_timestamps_on_hit(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ns = [1_700_000_000_123_456_789, 1_700_000_001_000_000_999]
+    path = str(tmp_path / "ns.parquet")
+    pq.write_table(pa.table({"k": [1, 2],
+                             "ts": pa.array(ns, pa.timestamp("ns"))}), path)
+    read_parquet(spark, path).columns
+    assert _jobs(spark, lambda: read_parquet(spark, path).columns) == 0
+    got = read_parquet(spark, path)
+    assert got.to_spark().schema["ts"].dataType.typeName() == "timestamp"
+    micros = sorted(r.ts_us for r in got.to_spark().selectExpr(
+        "unix_micros(ts) AS ts_us").collect())
+    assert micros == [n // 1000 for n in ns]
+    _assert_same(got, _uncached(spark, path))
+
+
+def test_schema_cache_reinfers_when_binary_as_string_flips(spark, tmp_path):
+    path = str(tmp_path / "bin.parquet")
+    pd.DataFrame({"b": [b"x", b"yz"]}).to_parquet(path)
+    key = "spark.sql.parquet.binaryAsString"
+    before = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "false")
+        assert read_parquet(spark, path).to_spark().schema["b"] \
+            .dataType.typeName() == "binary"
+        spark.conf.set(key, "true")
+        got = read_parquet(spark, path)
+        assert got.to_spark().schema["b"].dataType.typeName() == "string"
+        _assert_same(got, _uncached(spark, path))
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_schema_cache_evicts_least_recently_used(spark, tmp_path, monkeypatch):
+    from dask_expr_spark.sources import io
+
+    monkeypatch.setattr(io, "_SCHEMA_CACHE_MAX", 2)
+    io._SCHEMA_CACHE.clear()
+    paths = []
+    for i in range(3):
+        p = str(tmp_path / f"t{i}.parquet")
+        pd.DataFrame({"a": [i]}).to_parquet(p)
+        paths.append(p)
+    t0, t1, t2 = paths
+    for p in (t0, t1, t0, t2):  # the hit on t0 makes t1 the oldest
+        read_parquet(spark, p).columns
+    assert list(io._SCHEMA_CACHE) == [t0, t2]
+    assert _jobs(spark, lambda: read_parquet(spark, t0).columns) == 0
+    assert _jobs(spark, lambda: read_parquet(spark, t1).columns) >= 1
+    assert list(io._SCHEMA_CACHE) == [t0, t1]
+
+
+def test_schema_cache_threads_share_it_safely(spark, tmp_path, monkeypatch):
+    """More reader threads than cores churn a 2-entry cache over three
+    tables; every read returns its own table's schema and the cap holds."""
+    import os
+    import sys
+    import threading
+
+    from dask_expr_spark.sources import io
+
+    monkeypatch.setattr(io, "_SCHEMA_CACHE_MAX", 2)
+    io._SCHEMA_CACHE.clear()
+    paths = {}
+    for i in range(3):
+        p = str(tmp_path / f"t{i}.parquet")
+        pd.DataFrame({f"c{i}": [i]}).to_parquet(p)
+        paths[p] = [f"c{i}"]
+    errors, sizes = [], []
+
+    def reader(k):
+        try:
+            for j in range(3):
+                p = list(paths)[(k + j) % 3]
+                got = io.parquet_schema(spark, p).fieldNames()
+                if got != paths[p]:
+                    errors.append((p, got))
+                with io._SCHEMA_LOCK:
+                    sizes.append(len(io._SCHEMA_CACHE))
+        except Exception as exc:  # reported by the assert below
+            errors.append(repr(exc))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=reader, args=(k,))
+                   for k in range((os.cpu_count() or 1) + 2)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert len(sizes) == 3 * len(threads) and max(sizes) <= 2
