@@ -37,25 +37,19 @@ from dask_expr_spark.queries import collect_queries  # noqa: E402
 # file: they lead the check window right after the queries without a
 # green row.  Replace the list whenever a change reaches a query's path.
 CHANGED_THIS_ROUND = (
-    # reach the key-bloom / zone-map commit code, which now always
-    # commits through snapshots (upsert_partitioned, upsert_bucketed,
-    # bloom_append_snapshot, compact_parquet, build_zonemap)
-    "upsert_partitioned_roundtrip", "compact_roundtrip_lineitem",
-    "upsert_bucketed_roundtrip", "compact_partitioned_files",
-    "zonemap_skipping_dates", "zonemap_zorder_trailing",
-    "upsert_pointer_roundtrip", "zonemap_snapshot_version",
-    "compact_manifested_files", "manifest_sharded_upsert",
-    "concurrent_upsert_cas", "zonemap_after_delete",
+    # call upsert_partitioned (directly, through upsert_bucketed or
+    # through upsert_sink), whose move guard now checks only the
+    # outside dirs and whose order_col merge drops emptied dirs
+    "upsert_partitioned_roundtrip", "upsert_bucketed_roundtrip",
+    "upsert_pointer_roundtrip", "compact_manifested_files",
+    "manifest_sharded_upsert", "concurrent_upsert_cas",
     "multicol_pointer_upsert", "disjoint_rebase_upsert",
     "pointer_time_travel", "cdc_between_generations",
-    "upsert_pointer_bloom",
-    # run through upsert_sink, whose zone-map refresh changed
-    "stream_upsert_snapshot", "stream_upsert_bucketed",
-    "stream_upsert_pointer",
-    # reach the pointer flip (delete_where) or the snapshot reads,
-    # which now read a version's files by list
-    "delete_where_orders", "snapshot_time_travel",
-    "cdc_between_snapshots", "stream_scd2_history",
+    "upsert_pointer_bloom", "stream_upsert_snapshot",
+    "stream_upsert_bucketed", "stream_upsert_pointer",
+    # a rename-protocol delete_where, whose partition drop moved into
+    # the helper the upsert shares
+    "delete_where_orders",
 )
 
 _REGISTRY = None

@@ -253,6 +253,20 @@ def _swap_in_slice(spark: SparkSession, path: str, df: DataFrame,
     return dirs
 
 
+def _drop_part_dirs(fs, path: str, dirnames: list[str]) -> None:
+    """The rename protocol's whole-partition drop: each dir renames
+    into `<path>__drop` — the rename out IS the commit — and the trash
+    is deleted (recover_table clears it after a crash).  A crash
+    mid-loop leaves each dir either live or dropped."""
+    if not dirnames:
+        return
+    trash = path.rstrip("/") + "__drop"
+    fs.mkdirs(trash)
+    for d in dirnames:
+        fs.rename(os.path.join(path, d), os.path.join(trash, d))
+    fs.delete(trash)
+
+
 # ---------------------------------------------------------------------------
 # Pointer-commit protocol: the object-store-safe alternative to the
 # rename swap for PARTITIONED tables.  On s3a/gs/abfs a directory
@@ -309,8 +323,9 @@ def _swap_in_slice(spark: SparkSession, path: str, df: DataFrame,
 # Isolation note (same level as Delta's WriteSerializable): a rebased
 # commit is snapshot-correct per partition dir, but CROSS-partition
 # read-check invariants — the upsert move guard's "this key exists in
-# no other partition" — were verified against the writer's BASE
-# snapshot, not the head it rebased onto.  Two concurrent writers
+# no other partition" — were verified against the OUTSIDE DIRS of the
+# writer's BASE snapshot (its committed dirs the batch does not
+# touch), not the head it rebased onto.  Two concurrent writers
 # inserting the same brand-new key into different partitions can
 # therefore both land (the anomaly class WriteSerializable permits);
 # deployments that need the guard serialized use rebase=False and
@@ -562,11 +577,11 @@ def manifest_files(man: dict, path: str, fs=None,
             for f in _dir_files(man, path, d, fs)]
 
 
-def _table_has_files(man: dict, path: str, fs) -> bool:
-    """True when any dir entry holds at least one committed file
-    (a `@shard` entry is never written for an empty list)."""
-    return any(isinstance(e, str) or e
-               for e in man["partitions"].values())
+def _committed_dirs(man: dict) -> list[str]:
+    """The manifest's dirs that hold at least one committed file (a
+    `@shard` entry is never written for an empty list)."""
+    return sorted(d for d, e in man["partitions"].items()
+                  if isinstance(e, str) or e)
 
 
 _UNREAD = object()
@@ -1102,18 +1117,20 @@ def _key_str(keys: list[str]) -> Column:
 _MOVE_GUARD_BROADCAST_KEYS = 1_000_000
 
 
-def _move_guard_full_scan(spark: SparkSession, full_table: DataFrame,
+def _move_guard_full_scan(spark: SparkSession, outside: DataFrame,
                           keys: list[str], cand: DataFrame,
                           n_cand: int | None = None) -> int:
     """Exact fallback of the partition-move guard: count candidate
-    keys present anywhere in the FULL table.  When the candidate set
-    is batch-sized (the designed case — it is bounded by the update
-    batch's novel keys), the big side is STREAMED against a broadcast
-    of the candidates — a map-only column-pruned scan — instead of
-    the old distinct+SMJ shape, which shuffled every table key twice
-    (distinct agg + sort) to answer a membership question about a
-    handful of keys (guide §3.1; measured 1.78 s → 0.87 s on the
-    15M-key x10 table).  A giant candidate set (bulk insert, no
+    keys present in `outside`, the frame over the files of the
+    partition dirs the batch does NOT touch (the only dirs a mover's
+    old row can sit in — see _check_partition_moves).  When the
+    candidate set is batch-sized (the designed case — it is bounded by
+    the update batch's novel keys), the big side is STREAMED against a
+    broadcast of the candidates — a map-only column-pruned scan —
+    instead of the old distinct+SMJ shape, which shuffled every table
+    key twice (distinct agg + sort) to answer a membership question
+    about a handful of keys (guide §3.1; measured 1.78 s → 0.87 s on
+    the 15M-key x10 table).  A giant candidate set (bulk insert, no
     bloom) keeps the shuffle shape — broadcasting it would blow the
     8 GB relation cap.  Module-level so tests can assert it only runs
     when the bloom prefilter reports maybe-hits."""
@@ -1122,20 +1139,30 @@ def _move_guard_full_scan(spark: SparkSession, full_table: DataFrame,
     if n_cand == 0:
         return 0
     if n_cand * max(1, len(keys)) <= _MOVE_GUARD_BROADCAST_KEYS:
-        return (full_table.select(*keys)
+        return (outside.select(*keys)
                 .join(F.broadcast(cand), keys, "left_semi")
                 .distinct().count())
-    return (cand.join(full_table.select(*keys).distinct(),
+    return (cand.join(outside.select(*keys).distinct(),
                       keys, "left_semi").count())
 
 
-def _check_partition_moves(spark: SparkSession, full_table_fn,
+def _check_partition_moves(spark: SparkSession, outside_fn,
                            target: DataFrame, updates: DataFrame,
                            keys: list[str], partition_col: str,
                            key_bloom_path: str | None) -> None:
-    # an update key that exists in the table but only OUTSIDE the
-    # touched partitions is a partition-moving update: the old row
-    # would survive and the key would silently duplicate
+    """Reject a partition-moving update: a batch key that exists in
+    the table only OUTSIDE the touched partitions would leave its old
+    row live and the key duplicated.  The caller runs this only when
+    the base snapshot has committed dirs outside the batch's, and
+    `outside_fn` is a thunk for the frame over those dirs' files.
+
+    Cost ladder, cheapest first: the bloom probe drops keys the table
+    DEFINITELY lacks (map-only); the maybe-present keys anti-join the
+    touched slice `target` (a key held there is updated in place, not
+    moved); only the candidates left over build the outside frame and
+    scan it (_move_guard_full_scan).  Scanning the outside dirs alone
+    is exact: the anti join already proved no candidate sits in a
+    touched dir."""
     batch_keys = updates.select(*keys).distinct()
     idx = (read_key_bloom(spark, key_bloom_path)
            if key_bloom_path is not None else None)
@@ -1160,15 +1187,13 @@ def _check_partition_moves(spark: SparkSession, full_table_fn,
     n_cand = cand.count()
     if n_cand == 0:
         # every (maybe-present) batch key lives in a touched
-        # partition: nothing can be a mover — skip the full scan
-        # (the full-table frame is never even file-listed: the thunk
-        # below stays uncalled)
+        # partition: nothing can be a mover — the outside frame is
+        # never even built (the thunk stays uncalled)
         return
-    outside = _move_guard_full_scan(spark, full_table_fn(), keys, cand,
-                                    n_cand)
-    if outside:
+    moved = _move_guard_full_scan(spark, outside_fn(), keys, cand, n_cand)
+    if moved:
         raise ValueError(
-            f"upsert_partitioned: {outside} update key(s) exist in a "
+            f"upsert_partitioned: {moved} update key(s) exist in a "
             f"partition outside the batch's {partition_col} values — "
             "a partition-moving update; delete+insert instead")
 
@@ -1232,22 +1257,34 @@ def upsert_partitioned(spark: SparkSession, path: str, updates: DataFrame,
     (bounded by the partition count, the same driver class as hive
     pruning itself); (2) the target is read with a partition filter —
     Spark's scan prunes to those directories, untouched partitions are
-    never opened; (3) the merged slice is written to `<path>__new`
-    (while the table is still intact — no checkpoint needed) and the
-    touched partition directories swap in via rename-aside
-    (_swap_partition_dirs), so a crash at any point leaves every
-    partition either fully old or fully new and recover_table repairs
-    the transient states.
+    never opened; (3) the move guard checks the OUTSIDE dirs (below);
+    (4) the merged slice is written to `<path>__new` (while the table
+    is still intact — no checkpoint needed) and the touched partition
+    directories swap in via rename-aside (_swap_partition_dirs), so a
+    crash at any point leaves every partition either fully old or
+    fully new and recover_table repairs the transient states.  A
+    touched dir the merge leaves with no rows (`order_col` moved its
+    only key elsewhere in the batch) is dropped whole, the way
+    delete_where drops an emptied partition.
 
     Updates that would MOVE a row between partitions are rejected (the
     old partition isn't read, so the old row couldn't be removed) —
     mutate partition keys by delete+insert instead.  `check_moves`
-    runs that guard; with `key_bloom_path` (a snapshot-committed key
+    runs that guard over the OUTSIDE dirs: the base snapshot's
+    committed, non-empty partition dirs (the manifest's under the
+    pointer protocol, the on-disk ones under rename) minus the dirs
+    the batch touches — a key already in a touched dir is replaced by
+    the merge itself, so only the outside dirs can hold a mover's old
+    row.  A batch that touches every committed dir has no outside
+    dirs and runs no guard job at all (no bloom read, no probe, no
+    scan).  Otherwise, with `key_bloom_path` (a snapshot-committed key
     bloom, auto-bootstrapped from table ∪ batch by the first guarded
     upsert or built by build_key_bloom) the guard probes the batch
-    keys map-only and falls back to the column-pruned full-table key
-    scan ONLY for bloom maybe-hits, so the per-batch guard cost
-    scales with the batch, not the table.  Under BOTH commit
+    keys map-only and falls back to the column-pruned key scan of the
+    outside dirs' files ONLY for bloom maybe-hits, so the per-batch
+    guard cost scales with the batch, not the table.  A dir name
+    rendered differently from Spark's only enlarges the outside set
+    (the guard over-scans, never under-scans).  Under BOTH commit
     protocols the merge appends the batch's keys to the bloom
     (bloom_append_snapshot) BEFORE the table commit point — the
     pointer claim or the rename swap — so every failure mode errs on
@@ -1284,6 +1321,7 @@ def upsert_partitioned(spark: SparkSession, path: str, updates: DataFrame,
     parts = _partition_values(updates, pcols)
     if not parts:
         return []
+    touched = _value_dirs(pcols, parts)
     if commit == "pointer":
         if man is None:
             if fs.isdir(path):
@@ -1303,12 +1341,13 @@ def upsert_partitioned(spark: SparkSession, path: str, updates: DataFrame,
                 # parts from the DEDUPED frame: order_col resolution
                 # can eliminate a value's only rows
                 return _partition_values(out, pcols)
-        if _table_has_files(man, path, fs):
+        committed = _committed_dirs(man)
+        if committed:
             # the target reads ONLY the touched partitions' committed
             # files (manifest pruning): the driver-side file list is
             # bounded by the batch's partitions, not the table.  The
-            # full-table frame builds lazily — only the move guard's
-            # bloom-missed path ever materializes its file list.
+            # full-table frame builds lazily — only a bloom bootstrap
+            # ever materializes its file list.
             target = read_manifested(spark, path, fs=fs,
                                      partition_values=parts)
             def full_fn():
@@ -1319,17 +1358,29 @@ def upsert_partitioned(spark: SparkSession, path: str, updates: DataFrame,
             target = updates.where(F.lit(False))
             def full_fn():
                 return target
+        def files_in(dirs):
+            return manifest_files(man, path, fs=fs, dirs=dirs)
     else:
         recover_table(path, fs=fs)
+        committed = _list_part_dirs(fs, path, pcols)
         target = spark.read.parquet(path).where(
             F.col(partition_col).isin(parts))
         def full_fn():
             return spark.read.parquet(path)
-    if check_moves and keys and not all(c in keys for c in pcols):
-        # full_fn is a thunk: the guard only builds (and file-lists)
-        # the full-table frame when the bloom prefilter reports
-        # maybe-hits
-        _check_partition_moves(spark, full_fn, target, updates, keys,
+        def files_in(dirs):
+            return [os.path.join(path, d, f)
+                    for d in dirs for f in _part_files(fs, path, d)]
+    outside = sorted(set(committed) - set(touched))
+    if (check_moves and keys and outside
+            and not all(c in keys for c in pcols)):
+        def outside_fn():
+            # built only when candidates survive the bloom probe and
+            # the anti join against the touched slice
+            files = files_in(outside)
+            if not files:
+                return target.where(F.lit(False))
+            return spark.read.option("basePath", path).parquet(*files)
+        _check_partition_moves(spark, outside_fn, target, updates, keys,
                                "/".join(pcols), key_bloom_path)
     merged = upsert(target, updates, keys, order_col=order_col)
     # the merged plan lazily re-reads the files the commit supersedes:
@@ -1339,20 +1390,28 @@ def upsert_partitioned(spark: SparkSession, path: str, updates: DataFrame,
     with _bloom_update(spark, key_bloom_path, updates, keys,
                        full_fn) as bloom_committed:
         if commit == "rename":
-            _swap_in_slice(spark, path, merged, partition_col, fs,
-                           before_swap=bloom_committed)
+            written = _swap_in_slice(spark, path, merged, partition_col,
+                                     fs, before_swap=bloom_committed)
+            # a touched dir the merge emptied (order_col moved its
+            # only key to another touched dir) was never rewritten:
+            # drop it, or its superseded row stays live
+            _drop_part_dirs(fs, path, sorted(
+                (set(touched) - set(written)) & set(committed)))
             _refresh_zonemap_if_present(spark, path, fs)
             return parts
         # without order_col the merge drops no update row, so the
         # merged frame's partition set is exactly `parts` — no second
         # computation of the merge (guide §2.4).  With order_col,
         # cross-partition duplicate keys can eliminate a value's only
-        # rows — derive the true set.
-        dirs = _value_dirs(pcols, parts if order_col is None else
-                           _partition_values(merged, pcols))
+        # rows — derive the true set, and commit the touched dirs it
+        # lacks as emptied (their old files hold superseded rows)
+        dirs = (touched if order_col is None else
+                _value_dirs(pcols, _partition_values(merged, pcols)))
+        emptied = sorted((set(touched) - set(dirs)) & set(committed))
         out = _merge_write_layout(spark, path, merged, pcols, fs)
         _append_and_flip(spark, path, out, partition_col, man, fs, dirs,
-                         rebase=rebase, before_claim=bloom_committed)
+                         emptied=emptied, rebase=rebase,
+                         before_claim=bloom_committed)
     return parts
 
 
@@ -1466,8 +1525,8 @@ def build_key_bloom(spark: SparkSession, table_path: str, keys: list[str],
 def read_key_bloom(spark: SparkSession, bloom_path: str):
     """The current key-bloom index frame, None when `bloom_path` holds
     no snapshot-committed index (never built, or a directory without a
-    snapshot manifest) — the guard then falls back to the exact
-    full-table key scan, and the next guarded upsert bootstraps the
+    snapshot manifest) — the guard then falls back to the exact key
+    scan of the outside dirs, and the next guarded upsert bootstraps the
     index from table ∪ batch.
 
     The live versions are an LSM-style SEGMENT LIST
@@ -1484,7 +1543,7 @@ def read_key_bloom(spark: SparkSession, bloom_path: str):
     # hash-stamp gate (ADVICE r10): an index persisted under a
     # previous hash family (pre-stamp md5 era) probes FALSE for
     # present keys under the current hashes — refuse it and let the
-    # guard fall back to the exact full-table key scan.  The schema
+    # guard fall back to the exact key scan.  The schema
     # check is free; a mixed old/new segment list cannot arise
     # because the append path rebuilds rather than appends onto a
     # stale index.
@@ -2341,19 +2400,13 @@ def delete_where(spark: SparkSession, path: str, predicate: Column,
                 f"delete_where: rewrote dirs {sorted(written)} but "
                 f"the scan hit {nonempty_dirs} — partition value "
                 "rendering drift; reconcile the extra dirs manually")
-    if empty_dirs:
-        trash = path.rstrip("/") + "__drop"
-        fs.mkdirs(trash)
-        missing = [d for d in empty_dirs
-                   if not fs.isdir(os.path.join(path, d))]
-        if missing:
-            raise RuntimeError(
-                f"delete_where: partition dirs {missing} vanished "
-                "between scan and drop — nothing renamed; re-run")
-        for d in empty_dirs:
-            fs.rename(os.path.join(path, d),
-                      os.path.join(trash, d))
-        fs.delete(trash)
+    missing = [d for d in empty_dirs
+               if not fs.isdir(os.path.join(path, d))]
+    if missing:
+        raise RuntimeError(
+            f"delete_where: partition dirs {missing} vanished "
+            "between scan and drop — nothing renamed; re-run")
+    _drop_part_dirs(fs, path, empty_dirs)
     _refresh_zonemap_if_present(spark, path, fs)
     return (parts, n_del)
 

@@ -1806,7 +1806,7 @@ def cdc_between_generations(spark, sf_dir):
 #    guard's bloom prefilter now works under commit='pointer' (the
 #    index commits through the snapshot CAS, updated before the table
 #    claim).  Booleans pin: the insert-only batch skipped the
-#    full-table key scan, a partition-moving update was still
+#    outside-dir key scan, a partition-moving update was still
 #    rejected, and the guard's exact fallback ran exactly once --------
 POINTER_BLOOM_SQL = f"""
 WITH ins AS (
